@@ -8,8 +8,8 @@ scenarios in one DataFrame pass:
 
 Design split (SURVEY.md §4):
 * Everything closed-form — defaulting, T-shirt normalization, derived
-  throughput/statement columns, JobManager tiers, scaling recommendations,
-  result-struct assembly and rounding — is Catalyst column expressions
+  throughput/statement columns, scaling recommendations, result-struct
+  assembly and rounding — is Catalyst column expressions
   (whole-stage codegen'd, no Python in the hot path).
 * The genuinely iterative steps — the state/throughput sizing passes, the
   TM memory/count fixpoint, and greedy bin-packing with node growth
@@ -21,6 +21,17 @@ Design split (SURVEY.md §4):
 At scale: the UDF is embarrassingly parallel per row (no shuffle), so a
 scenario table partitions freely across executors; all pre/post stages are
 narrow column transformations.
+
+Plan shape: ``estimate_df`` is two projections — defaulting, normalization,
+``scenario_id`` and the kernel call in one ``select``, result assembly in a
+second — so building it costs two analyzer passes, not one per column.
+
+Barrier rule: the kernel call is marked nondeterministic, so it runs exactly
+once per scenario whatever the consumer does with the result.  Filtering
+result columns (``error``, a result struct) is free: the filter stays above
+the kernel instead of copying it into a second Python stage.  The flip side
+is that a filter applied after ``estimate_df`` no longer prunes kernel work,
+even on an input column — filter the scenarios *before* ``estimate_df``.
 """
 
 from __future__ import annotations
@@ -33,8 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .calculus import (
-    JM_TSHIRT_CPU_MB,
-    TM_VCPUS,
     VM_TSHIRT_MB_CPU,
     Scenario,
     normalize_scenario,
@@ -107,59 +116,97 @@ _core_schema = T.StructType(
 
 # ---------------------------------------------------------------------------
 # Catalyst stages
+#
+# The closed-form stages are Spark SQL expression strings, not Column-API
+# chains: in classic PySpark every Column operation is a py4j round trip
+# that also records its Python call site (~1 ms each on a 4-vCPU VM), while
+# ``F.expr`` parses a whole expression in one call (~0.2 ms).  Both give
+# the same Catalyst trees.  Double literals carry the ``D`` suffix: a bare
+# ``0.5`` is a DECIMAL in Spark SQL.
 # ---------------------------------------------------------------------------
 
 
-def _tshirt_lookup(idx: int, otherwise: Column) -> Column:
-    """VM T-shirt table as a CASE WHEN chain (broadcast-literal lookup)."""
-    expr = otherwise
-    for size, tup in VM_TSHIRT_MB_CPU.items():
-        expr = F.when(F.col("worker_node_t_size") == size, F.lit(tup[idx])).otherwise(expr)
-    return expr
+def _sql_literal(value: object) -> str:
+    """``value`` as a Spark SQL literal of the type ``F.lit(value)`` has."""
+    if isinstance(value, str):
+        return f"'{value}'"
+    if isinstance(value, float):
+        return f"{value!r}D"
+    return str(value)
+
+
+def _named_struct(fields: dict[str, str]) -> str:
+    return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
+
+
+def _default_sql(columns: list[str]) -> dict[str, str]:
+    """Pydantic-style defaulting (reference models.py:67-84) as one SQL
+    expression per scenario field over the raw ``columns`` — no T-shirt
+    overwrite, so capacity values stay the *raw* ones the reference
+    validates against."""
+    sql = {name: f"coalesce({name}, {_sql_literal(default)})"
+           for name, default in _SCENARIO_DEFAULTS.items()}
+    sql["worker_node_t_size"] = (
+        "worker_node_t_size" if "worker_node_t_size" in columns else "CAST(NULL AS STRING)")
+    sql["project_name"] = "trim(project_name)"
+    return sql
+
+
+def _normalized_sql(d: dict[str, str]) -> dict[str, str]:
+    """T-shirt normalization + derived columns over the defaulted
+    expressions ``d`` (reference models.py:67-84, estimation.py:601-606)."""
+    t_size, mem, cpu = d["worker_node_t_size"], d["worker_node_memory_mb"], d["worker_node_cpu_max"]
+    is_vm = f"{d['worker_node_type']} = 'VM' AND {t_size} IS NOT NULL"
+
+    def tshirt(idx: int, otherwise: str) -> str:
+        sizes = " ".join(f"WHEN '{size}' THEN {tup[idx]}" for size, tup in VM_TSHIRT_MB_CPU.items())
+        return f"CASE {t_size} {sizes} ELSE {otherwise} END"
+
+    return {
+        **d,
+        "worker_node_memory_mb":
+            f"CASE WHEN {is_vm} THEN CAST({tshirt(0, mem)} AS DOUBLE) ELSE {mem} END",
+        "worker_node_cpu_max":
+            f"CASE WHEN {is_vm} THEN CAST({tshirt(1, cpu)} AS INT) ELSE {cpu} END",
+        "total_statements":
+            f"CAST(({d['simple_statements']} + {d['medium_statements']} + "
+            f"{d['complex_statements']}) * {d['number_flink_applications']} AS BIGINT)",
+        "total_throughput_mb_per_sec":
+            f"{d['messages_per_second']} * {d['avg_record_size_bytes']} / 1048576.0D",
+    }
+
+
+def _with_sql(df: DataFrame, sql: dict[str, str]) -> DataFrame:
+    return df.withColumns({name: F.expr(e) for name, e in sql.items()})
 
 
 def apply_defaults(df: DataFrame) -> DataFrame:
     """Pydantic-style defaulting only (reference models.py:67-84) — no
     T-shirt overwrite, so the result still carries the *raw* capacity values
     the reference validates against."""
-    out = df
-    for name, default in _SCENARIO_DEFAULTS.items():
-        out = out.withColumn(name, F.coalesce(F.col(name), F.lit(default)))
-    if "worker_node_t_size" not in out.columns:
-        out = out.withColumn("worker_node_t_size", F.lit(None).cast("string"))
-    return out.withColumn("project_name", F.trim(F.col("project_name")))
+    return _with_sql(df, _default_sql(df.columns))
 
 
 def normalize(df: DataFrame) -> DataFrame:
     """Defaulting + T-shirt normalization + derived columns, all Catalyst
     (reference models.py:67-84, estimation.py:601-606)."""
-    out = apply_defaults(df)
-    is_vm = (F.col("worker_node_type") == "VM") & F.col("worker_node_t_size").isNotNull()
-    out = (
-        out
-        .withColumn(
-            "worker_node_memory_mb",
-            F.when(is_vm, _tshirt_lookup(0, F.col("worker_node_memory_mb")).cast("double"))
-            .otherwise(F.col("worker_node_memory_mb")),
-        )
-        .withColumn(
-            "worker_node_cpu_max",
-            F.when(is_vm, _tshirt_lookup(1, F.col("worker_node_cpu_max")).cast("int"))
-            .otherwise(F.col("worker_node_cpu_max")),
-        )
-        .withColumn(
-            "total_statements",
-            (
-                (F.col("simple_statements") + F.col("medium_statements") + F.col("complex_statements"))
-                * F.col("number_flink_applications")
-            ).cast("long"),
-        )
-        .withColumn(
-            "total_throughput_mb_per_sec",
-            F.col("messages_per_second") * F.col("avg_record_size_bytes") / F.lit(1048576.0),
-        )
-    )
-    return out
+    return _with_sql(df, _normalized_sql(_default_sql(df.columns)))
+
+
+def submitted_sql(columns: list[str]) -> str:
+    """The submitted scenario row as a struct of the ``scenario_schema``
+    fields, before any defaulting (a missing column reads as NULL)."""
+    return _named_struct({
+        f.name: f.name if f.name in columns else f"CAST(NULL AS {f.dataType.simpleString()})"
+        for f in scenario_schema.fields
+    })
+
+
+def scenario_id_col(df: DataFrame) -> Column:
+    """sha2 of the submitted scenario row as JSON.  It pairs each input row
+    with its own result (``persistence.envelope_df``) and its first 8 hex
+    digits are the saved envelope's estimation id."""
+    return F.expr(f"sha2(to_json({submitted_sql(df.columns)}), 256)")
 
 
 def validation_errors_col() -> Column:
@@ -200,22 +247,6 @@ def validate(df: DataFrame) -> DataFrame:
     """Attach a ``validation_errors`` array column (error-side channel:
     ``df.filter(F.size('validation_errors') > 0)``)."""
     return df.withColumn("validation_errors", validation_errors_col())
-
-
-def jobmanager_columns(df: DataFrame) -> DataFrame:
-    """JM tier by distinct keys as a CASE WHEN chain (estimation.py:418-425)."""
-    keys = F.col("num_distinct_keys")
-    tier = (
-        F.when(keys <= 10_000_000, F.lit("S"))
-        .when(keys <= 100_000_000, F.lit("M"))
-        .otherwise(F.lit("L"))
-    )
-    cpu = tier
-    mem = tier
-    for size, (c, m) in JM_TSHIRT_CPU_MB.items():
-        cpu = F.when(tier == size, F.lit(c)).otherwise(cpu)
-        mem = F.when(tier == size, F.lit(m)).otherwise(mem)
-    return df.withColumn("jm_cpu_expr", cpu.cast("int")).withColumn("jm_mem_expr", mem.cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -291,140 +322,121 @@ def _sizing_core_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _run_kernel(pdf)
 
 
+# The kernel is deterministic; the flag makes its call an optimizer
+# barrier.  Catalyst then neither pushes a filter on the kernel's outputs
+# (``error``, a result struct) below the projection that calls it nor
+# collapses that projection into its consumers — either would copy the call
+# into a second ArrowEvalPython and run the kernel twice per scenario.
+_sizing_core_udf = _sizing_core_udf.asNondeterministic()
+
+
 # ---------------------------------------------------------------------------
 # Scaling recommendations + assembly (Catalyst)
 # ---------------------------------------------------------------------------
 
 
-def _scaling_columns(tm_cpus: Column) -> dict[str, Column]:
-    """Skew/latency parallelism bands + checkpoint interval as column
+def _scaling_sql(tm_cpus: str) -> dict[str, str]:
+    """Skew/latency parallelism bands + checkpoint interval as SQL
     expressions (estimation.py:500-553; ``processing_load`` folded at 1)."""
-    keys = F.col("num_distinct_keys")
-    lat = F.col("expected_latency_seconds")
-    skew = F.col("data_skew_risk")
-    half = F.floor(tm_cpus / 2).cast("long")
-    min_par = (
-        F.when(skew == "high", F.greatest(F.lit(1).cast("long"), F.floor(tm_cpus / 3).cast("long")))
-        .otherwise(F.greatest(F.lit(1).cast("long"), half))
-    )
+    keys, lat = "num_distinct_keys", "expected_latency_seconds"
+    high, medium = "data_skew_risk = 'high'", "data_skew_risk = 'medium'"
+    half = f"CAST(FLOOR({tm_cpus} / 2) AS BIGINT)"
+    min_par = (f"CASE WHEN {high} THEN greatest(1L, CAST(FLOOR({tm_cpus} / 3) AS BIGINT)) "
+               f"ELSE greatest(1L, {half}) END")
     rec_par = (
-        F.when(skew == "high",
-               F.greatest(half, F.least(F.floor(keys / 1000).cast("long"), tm_cpus.cast("long"))))
-        .when(skew == "medium",
-              F.least(tm_cpus.cast("long"), F.greatest(half, F.floor(keys / 2000).cast("long"))))
-        .otherwise(tm_cpus.cast("long"))
+        f"CASE WHEN {high} THEN greatest({half}, least(CAST(FLOOR({keys} / 1000) AS BIGINT), {tm_cpus})) "
+        f"WHEN {medium} THEN least({tm_cpus}, greatest({half}, CAST(FLOOR({keys} / 2000) AS BIGINT))) "
+        f"ELSE {tm_cpus} END"
     )
-    max_par = F.when(skew == "high", tm_cpus.cast("long")).otherwise((tm_cpus * 2).cast("long"))
-    base_ckpt = (
-        F.when(skew == "high", F.lit(16000))
-        .when(skew == "medium", F.lit(11000))
-        .otherwise(F.lit(9000))
-    )
+    max_par = f"CASE WHEN {high} THEN {tm_cpus} ELSE CAST({tm_cpus} * 2 AS BIGINT) END"
+    base_ckpt = f"CASE WHEN {high} THEN 16000 WHEN {medium} THEN 11000 ELSE 9000 END"
     ckpt = (
-        F.when(lat <= 0.5, F.least(base_ckpt, F.lit(5000)))
-        .when(lat <= 1.0, F.least(base_ckpt, F.lit(10000)))
-        .when(lat <= 5.0, F.least(base_ckpt, F.lit(20000)))
-        .otherwise(base_ckpt)
+        f"CASE WHEN {lat} <= 0.5D THEN least({base_ckpt}, 5000) "
+        f"WHEN {lat} <= 1.0D THEN least({base_ckpt}, 10000) "
+        f"WHEN {lat} <= 5.0D THEN least({base_ckpt}, 20000) "
+        f"ELSE {base_ckpt} END"
     )
-    boost = F.greatest(F.lit(1).cast("long"), F.floor(F.lit(2.0) / lat).cast("long"))
-    rec_par = F.when(lat <= 1.0, F.least(max_par, rec_par * boost)).otherwise(rec_par)
+    boost = f"greatest(1L, CAST(FLOOR(2.0D / {lat}) AS BIGINT))"
     return {
         "min_parallelism": min_par,
-        "recommended_parallelism": rec_par,
+        "recommended_parallelism":
+            f"CASE WHEN {lat} <= 1.0D THEN least({max_par}, ({rec_par}) * {boost}) ELSE {rec_par} END",
         "max_parallelism": max_par,
-        "checkpointing_interval_ms": ckpt.cast("long"),
+        "checkpointing_interval_ms": f"CAST({ckpt} AS BIGINT)",
     }
 
 
 def estimate_df(df: DataFrame) -> DataFrame:
     """Estimate every scenario row; returns the nested ``EstimationResult``
-    struct columns plus an ``error`` string column (null == success).
+    struct columns, an ``error`` string column (null == success) and the
+    ``scenario_id`` of the submitted row (``scenario_id_col``).
 
     Input: any DataFrame with the ``scenario_schema`` columns (missing
     nullable values are defaulted, as the reference's Pydantic layer does).
+    Filter scenarios *before* calling this: a filter applied to the result
+    stops above the kernel (see the module docstring).
     """
-    df = apply_defaults(df)
-    # stash the raw (pre-T-shirt) capacity values: the kernel validates raw
-    # input exactly like the reference, then normalizes internally
-    df = df.withColumn("_raw_memory_mb", F.col("worker_node_memory_mb")).withColumn(
-        "_raw_cpu_max", F.col("worker_node_cpu_max")
+    d = _default_sql(df.columns)
+    # the kernel sees the RAW (defaulted, pre-T-shirt) capacity values: it
+    # validates exactly like the reference, then normalizes internally
+    kernel = _sizing_core_udf(F.expr(_named_struct({n: d[n] for n in _KERNEL_FIELDS})))
+    staged = df.select(
+        *[F.expr(f"{e} AS {n}") for n, e in _normalized_sql(d).items()],
+        scenario_id_col(df).alias("scenario_id"),
+        kernel.alias("core"),
     )
-    df = normalize(df)
-    _raw_aliases = {
-        "worker_node_memory_mb": "_raw_memory_mb",
-        "worker_node_cpu_max": "_raw_cpu_max",
+
+    n_tm = "core.nb_task_managers"
+    tm_total_mem = f"CAST(CEIL({n_tm} * core.tm_process_memory_mb) AS BIGINT)"
+    tm_cpus = "CAST(CEIL(core.total_cpu_needs - core.jm_cpu) AS BIGINT)"
+    sections = {
+        "input_summary": {
+            "messages_per_second": "messages_per_second",
+            "avg_record_size_bytes": "avg_record_size_bytes",
+            "total_throughput_mb_per_sec": "bround(total_throughput_mb_per_sec, 2)",
+            "num_distinct_keys": "num_distinct_keys",
+            "data_skew_risk": "data_skew_risk",
+            "bandwidth_capacity_mbps": "CAST(round(bandwidth_capacity_gbps * 1000) AS BIGINT)",
+            "expected_latency_seconds": "expected_latency_seconds",
+            "simple_statements": "simple_statements",
+            "medium_statements": "medium_statements",
+            "complex_statements": "complex_statements",
+            "total_statements": "total_statements",
+            "worker_node_memory_capacity_mb": "worker_node_memory_mb",
+            "worker_node_cpu_capacity": "worker_node_cpu_max",
+            "nb_worker_nodes": "core.nb_worker_nodes_final",
+            "worker_node_t_size": "worker_node_t_size",
+        },
+        "resource_estimates": {
+            "total_memory_mb": "core.total_memory_mb",
+            "total_cpus": "core.total_cpu_needs",
+            "total_worker_node_needed": "core.total_nodes",
+            "processing_load_score": "1.0D",
+        },
+        "cluster_recommendations": {
+            "jobmanager": _named_struct({
+                "count": "1",
+                "memory_mb": "core.jm_memory",
+                "total_cpus": "CAST(core.jm_cpu AS DOUBLE)",
+            }),
+            "taskmanagers": _named_struct({
+                "count": n_tm,
+                "total_memory_mb": tm_total_mem,
+                "total_cpus": tm_cpus,
+                "memory_mb_each":
+                    f"CASE WHEN {n_tm} > 0 THEN bround({tm_total_mem} / {n_tm}, 0) ELSE 0.0D END",
+            }),
+        },
+        "scaling_recommendations": _scaling_sql(tm_cpus),
+        "capacity_analysis": {
+            "total_flink_statements": "CAST(total_statements * number_flink_applications AS BIGINT)",
+            "total_flink_applications": "number_flink_applications",
+        },
     }
-    kernel_struct = F.struct(
-        *[F.col(_raw_aliases.get(n, n)).alias(n) for n in _KERNEL_FIELDS]
-    )
-    core = (
-        df.withColumn("core", _sizing_core_udf(kernel_struct))
-        .select("*", "core.*")
-        .drop("_raw_memory_mb", "_raw_cpu_max")
-    )
-
-    ok = F.col("error").isNull()
-    tm_total_mem = F.ceil(F.col("nb_task_managers") * F.col("tm_process_memory_mb")).cast("long")
-    tm_cpus = F.ceil(F.col("total_cpu_needs") - F.col("jm_cpu")).cast("long")
-    n_tm = F.col("nb_task_managers")
-    memory_mb_each = F.when(n_tm > 0, F.bround(tm_total_mem / n_tm, 0)).otherwise(F.lit(0.0))
-
-    input_summary = F.struct(
-        F.col("messages_per_second"),
-        F.col("avg_record_size_bytes"),
-        F.bround(F.col("total_throughput_mb_per_sec"), 2).alias("total_throughput_mb_per_sec"),
-        F.col("num_distinct_keys"),
-        F.col("data_skew_risk"),
-        F.round(F.col("bandwidth_capacity_gbps") * 1000).cast("long").alias("bandwidth_capacity_mbps"),
-        F.col("expected_latency_seconds"),
-        F.col("simple_statements"),
-        F.col("medium_statements"),
-        F.col("complex_statements"),
-        F.col("total_statements"),
-        F.col("worker_node_memory_mb").alias("worker_node_memory_capacity_mb"),
-        F.col("worker_node_cpu_max").alias("worker_node_cpu_capacity"),
-        F.col("nb_worker_nodes_final").alias("nb_worker_nodes"),
-        F.col("worker_node_t_size"),
-    )
-    resource_estimates = F.struct(
-        F.col("total_memory_mb"),
-        F.col("total_cpu_needs").alias("total_cpus"),
-        F.col("total_nodes").alias("total_worker_node_needed"),
-        F.lit(1.0).alias("processing_load_score"),
-    )
-    cluster_recommendations = F.struct(
-        F.struct(
-            F.lit(1).alias("count"),
-            F.col("jm_memory").alias("memory_mb"),
-            F.col("jm_cpu").cast("double").alias("total_cpus"),
-        ).alias("jobmanager"),
-        F.struct(
-            n_tm.alias("count"),
-            tm_total_mem.alias("total_memory_mb"),
-            tm_cpus.alias("total_cpus"),
-            memory_mb_each.alias("memory_mb_each"),
-        ).alias("taskmanagers"),
-    )
-    sc = _scaling_columns(tm_cpus)
-    scaling_recommendations = F.struct(
-        sc["min_parallelism"].alias("min_parallelism"),
-        sc["recommended_parallelism"].alias("recommended_parallelism"),
-        sc["max_parallelism"].alias("max_parallelism"),
-        sc["checkpointing_interval_ms"].alias("checkpointing_interval_ms"),
-    )
-    capacity_analysis = F.struct(
-        (F.col("total_statements") * F.col("number_flink_applications"))
-        .cast("long")
-        .alias("total_flink_statements"),
-        F.col("number_flink_applications").alias("total_flink_applications"),
-    )
-
-    return core.select(
-        F.col("project_name"),
-        F.when(ok, input_summary).alias("input_summary"),
-        F.when(ok, resource_estimates).alias("resource_estimates"),
-        F.when(ok, cluster_recommendations).alias("cluster_recommendations"),
-        F.when(ok, scaling_recommendations).alias("scaling_recommendations"),
-        F.when(ok, capacity_analysis).alias("capacity_analysis"),
-        F.col("error"),
+    return staged.selectExpr(
+        "project_name",
+        *[f"CASE WHEN core.error IS NULL THEN {_named_struct(fields)} END AS {name}"
+          for name, fields in sections.items()],
+        "core.error AS error",
+        "scenario_id",
     )

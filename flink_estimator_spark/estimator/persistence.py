@@ -5,9 +5,11 @@ Two write paths:
 
 * ``save_estimations_df`` — the engine path: a whole results DataFrame is
   written as JSON-lines envelopes in one distributed write (no collect).
-  Estimation ids are content hashes (sha2 of the input row), so re-running
-  the same scenarios produces identical ids — the deterministic analogue of
-  the reference's uuid4 prefix.
+  ``envelope_df`` pairs each input row with its result on ``scenario_id``
+  (sha2 of the submitted row, emitted by ``estimate_df``); the estimation
+  id is its first 8 hex digits, so re-running the same scenarios produces
+  identical ids — the deterministic analogue of the reference's uuid4
+  prefix.
 * ``save_estimation`` — single-record convenience mirroring the reference's
   filename contract ``{sanitized_project}_{ts}_{id}.json`` (A19's sanitizer:
   keep alnum/space/dash/underscore, strip, spaces -> underscores).
@@ -25,7 +27,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import _SCENARIO_DEFAULTS, scenario_schema
+from .engine import scenario_id_col, submitted_sql
 
 VERSION = "1.0"
 _FORBIDDEN = ("..", "/", "\\")
@@ -38,56 +40,34 @@ def _sanitize_project(name: str) -> str:
 
 def envelope_df(inputs: DataFrame, results: DataFrame, saved_at: str) -> DataFrame:
     """Join inputs and results into SavedEstimation envelopes (one row per
-    scenario).  ``saved_at`` is supplied by the caller — never wall clock
-    inside the plan — so writes are reproducible."""
-    inp_struct = F.struct(*[F.col(f"i.{f.name}").alias(f.name) for f in scenario_schema.fields])
-    res_struct = F.struct(
-        F.col("r.input_summary").alias("input_summary"),
-        F.col("r.resource_estimates").alias("resource_estimates"),
-        F.col("r.cluster_recommendations").alias("cluster_recommendations"),
-        F.col("r.scaling_recommendations").alias("scaling_recommendations"),
-        F.col("r.capacity_analysis").alias("capacity_analysis"),
-    )
-    meta = F.struct(
-        F.substring(F.sha2(F.to_json(inp_struct), 256), 1, 8).alias("estimation_id"),
-        F.lit(saved_at).alias("timestamp"),
-        F.col("i.project_name").alias("project_name"),
+    distinct valid scenario).  ``saved_at`` is supplied by the caller —
+    never wall clock inside the plan — so writes are reproducible.
+
+    ``results`` is ``estimate_df`` of the same scenarios.  Each input row
+    pairs with its own result through ``scenario_id``, the sha2 of the
+    submitted row, which ``estimate_df`` emits and this side recomputes
+    from ``inputs``: scenarios that share a name, or differ only in fields
+    the result does not echo, never swap results, and an invalid input is
+    never saved with a valid twin's result."""
+    inp = inputs.select(
+        scenario_id_col(inputs).alias("scenario_id"),
+        F.expr(submitted_sql(inputs.columns)).alias("input_parameters"),
         F.lit(saved_at).alias("saved_at"),
     )
-    # Join on the full scenario identity, not project_name alone: two
-    # scenarios sharing a name must each pair with their own result, never
-    # cross-product.  The result side only carries the *defaulted* input
-    # echo (input_summary), so the input side is defaulted the same way
-    # before comparing; null-safe equality covers worker_node_t_size.
-    join_cond = F.trim(F.col("i.project_name")) == F.col("r.project_name")
-    for iname, rcol in [
-        ("messages_per_second", "r.input_summary.messages_per_second"),
-        ("avg_record_size_bytes", "r.input_summary.avg_record_size_bytes"),
-        ("num_distinct_keys", "r.input_summary.num_distinct_keys"),
-        ("data_skew_risk", "r.input_summary.data_skew_risk"),
-        ("expected_latency_seconds", "r.input_summary.expected_latency_seconds"),
-        ("simple_statements", "r.input_summary.simple_statements"),
-        ("medium_statements", "r.input_summary.medium_statements"),
-        ("complex_statements", "r.input_summary.complex_statements"),
-        ("worker_node_t_size", "r.input_summary.worker_node_t_size"),
-    ]:
-        default = _SCENARIO_DEFAULTS.get(iname)
-        lhs = F.col(f"i.{iname}")
-        if default is not None:
-            lhs = F.coalesce(lhs, F.lit(default))
-        join_cond = join_cond & lhs.eqNullSafe(F.col(rcol))
     return (
-        inputs.alias("i")
-        .join(results.alias("r"), join_cond)
-        .filter(F.col("r.error").isNull())
-        .select(
-            meta.alias("metadata"),
-            inp_struct.alias("input_parameters"),
-            res_struct.alias("estimation_results"),
-            F.lit(VERSION).alias("version"),
+        inp.join(results.filter("error IS NULL"), "scenario_id")
+        .selectExpr(
+            "named_struct('estimation_id', substring(scenario_id, 1, 8), 'timestamp', saved_at,"
+            " 'project_name', input_parameters.project_name, 'saved_at', saved_at) AS metadata",
+            "input_parameters",
+            "named_struct('input_summary', input_summary, 'resource_estimates', resource_estimates,"
+            " 'cluster_recommendations', cluster_recommendations,"
+            " 'scaling_recommendations', scaling_recommendations,"
+            " 'capacity_analysis', capacity_analysis) AS estimation_results",
+            f"'{VERSION}' AS version",
         )
-        # byte-identical duplicate scenarios still multiply through the join;
-        # their envelopes are identical (content-addressed ids), so collapse
+        # byte-identical duplicate scenarios share one id and multiply
+        # through the join; their envelopes are identical, so collapse
         .dropDuplicates()
     )
 

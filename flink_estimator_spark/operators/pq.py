@@ -85,12 +85,13 @@ def _sub_d2(varr, carr):
     """Exact quantized squared L2 between two component arrays — the same
     floor((v-c)^2 * 1e12) BIGINT terms the join+agg form summed.
 
-    Malformed input fails LOUD (ADVICE r9): a varr/carr length mismatch
-    raises instead of zip_with padding with NULL, and a NULL component
-    inside equal-length arrays (which would propagate to a NULL d2 and
-    silently win or lose the downstream argmin depending on null-sort
-    placement) raises too — corrupt vectors fail the job instead of being
-    assigned to an arbitrary cluster."""
+    Malformed input fails LOUD (ADVICE r9): a NULL array (whose NULL size
+    would otherwise read as a length mismatch) raises with its own message,
+    a varr/carr length mismatch raises instead of zip_with padding with
+    NULL, and a NULL component inside equal-length arrays (which would
+    propagate to a NULL d2 and silently win or lose the downstream argmin
+    depending on null-sort placement) raises too — corrupt vectors fail the
+    job instead of being assigned to an arbitrary cluster."""
     agg = F.aggregate(
         F.zip_with(
             varr, carr, lambda x, y: F.floor((x - y) * (x - y) * F.lit(_T12)).cast("bigint")
@@ -99,6 +100,9 @@ def _sub_d2(varr, carr):
         lambda acc, x: acc + x,
     )
     return F.when(
+        varr.isNull() | carr.isNull(),
+        F.raise_error(F.lit("_sub_d2: NULL input array")).cast("bigint"),
+    ).when(
         F.size(varr) == F.size(carr),
         F.coalesce(
             agg,

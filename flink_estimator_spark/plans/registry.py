@@ -67,36 +67,16 @@ def query(name: str, oracle: Optional[str] = None, description: str = "",
 # their driver row was recorded; they can only ever earn row-count
 # evidence, which is still staleness-bounded like everything else.
 _EVIDENCE_ROUND: dict[str, int] = {
-    # --- last green driver row: round 4 (41 queries) ---
-    "q_change_point": 4, "q_cms_heavy_hitters": 4, "q_cohort_retention": 4,
-    "q_conversion_latency": 4, "q_copurchase_pairs": 4, "q_count_window": 4,
-    "q_dedup_minhash_lsh": 4, "q_dedup_simhash": 4, "q_emb_ivf_ann": 4,
-    "q_emb_outliers": 4, "q_emb_quantized_topk": 4, "q_event_transitions": 4,
-    "q_forget_cascade": 4, "q_geo_radius_join": 4, "q_gini_by_nation": 4,
-    "q_incremental_dedup": 4, "q_interval_union": 4, "q_lang_balance": 4,
-    "q_length_buckets": 4, "q_max_concurrency": 4, "q_multimodal_phash": 4,
-    "q_mutual_information": 4, "q_new_vs_returning": 4, "q_null_ordering": 4,
-    "q_order_streaks": 4, "q_ref_integrity": 4, "q_repeated_ngrams": 4,
-    "q_rfm_by_nation": 4, "q_running_anomaly": 4, "q_seasonal_index": 4,
-    "q_semdedup_prune": 4, "q_skew_advisor": 4, "q_sla_attainment": 4,
-    "q_snapshot_diff": 4, "q_survival_steps": 4, "q_time_weighted_avg": 4,
-    "q_triplet_mining": 4, "q_ts_pattern_match": 4,
-    "q_union_by_name_drift": 4, "q_variant_extract": 4,
-    "q_winsorized_stats": 4,
-    # --- last green driver row: round 5 (50 queries) ---
-    "q10_returned_items": 5, "q1_pricing_summary": 5,
-    "q3_shipping_priority": 5, "q5_region_revenue": 5, "q_anti_join": 5,
-    "q_bfs_levels": 5, "q_bpe_encode_cert": 5, "q_bpe_merges": 5,
-    "q_case_when": 5, "q_classifier_eval": 5, "q_containment_pairs": 5,
-    "q_curation_funnel": 5, "q_date_parts": 5, "q_dsir_select": 5,
-    "q_dup_ngram_fraction": 5, "q_emb_lsh_ann": 5, "q_emb_pq_adc": 5,
-    "q_filter_compound": 5, "q_hop_window": 5, "q_hybrid_rrf": 5,
-    "q_jaccard_prefix_pairs": 5, "q_join_full_nation_coverage": 5,
-    "q_join_left_order_counts": 5, "q_join_right_customer_coverage": 5,
-    "q_kmeans_iterate": 5, "q_ks_statistic": 5, "q_mad_outliers": 5,
-    "q_markov_anomaly": 5, "q_month_spine_gapfill": 5,
-    "q_ngram_decontamination": 5, "q_pagerank_parts": 5,
-    "q_price_elasticity": 5, "q_quality_classifier": 5,
+    # --- last green driver row: round 5 (41 queries) ---
+    "q_classifier_eval": 5, "q_containment_pairs": 5, "q_curation_funnel": 5,
+    "q_date_parts": 5, "q_dsir_select": 5, "q_dup_ngram_fraction": 5,
+    "q_emb_lsh_ann": 5, "q_emb_pq_adc": 5, "q_filter_compound": 5,
+    "q_hop_window": 5, "q_hybrid_rrf": 5, "q_jaccard_prefix_pairs": 5,
+    "q_join_full_nation_coverage": 5, "q_join_left_order_counts": 5,
+    "q_join_right_customer_coverage": 5, "q_kmeans_iterate": 5,
+    "q_ks_statistic": 5, "q_mad_outliers": 5, "q_markov_anomaly": 5,
+    "q_month_spine_gapfill": 5, "q_ngram_decontamination": 5,
+    "q_pagerank_parts": 5, "q_price_elasticity": 5, "q_quality_classifier": 5,
     "q_rolling_distinct": 5, "q_scalar_math": 5, "q_scan_filter_project": 5,
     "q_semi_join": 5, "q_stream_count_runtime": 5,
     "q_stream_dedup_runtime": 5, "q_stream_join_runtime": 5,
@@ -183,6 +163,26 @@ _EVIDENCE_ROUND: dict[str, int] = {
     "q_stream_theta_curve_runtime": 9, "q_stream_tws_restart_runtime": 9,
     "q_train_split": 9, "q_value_histogram": 9, "q_weighted_sample": 9,
     "q_whatif_capacity_grid": 9, "q_yoy_growth": 9,
+    # --- last green driver row: round 10 (50 queries) ---
+    "q10_returned_items": 10, "q1_pricing_summary": 10,
+    "q3_shipping_priority": 10, "q5_region_revenue": 10, "q_anti_join": 10,
+    "q_bfs_levels": 10, "q_bpe_encode_cert": 10, "q_bpe_merges": 10,
+    "q_case_when": 10, "q_change_point": 10, "q_cms_heavy_hitters": 10,
+    "q_cohort_retention": 10, "q_conversion_latency": 10,
+    "q_copurchase_pairs": 10, "q_count_window": 10, "q_dedup_minhash_lsh": 10,
+    "q_dedup_simhash": 10, "q_emb_ivf_ann": 10, "q_emb_outliers": 10,
+    "q_emb_quantized_topk": 10, "q_event_transitions": 10,
+    "q_forget_cascade": 10, "q_geo_radius_join": 10, "q_gini_by_nation": 10,
+    "q_incremental_dedup": 10, "q_interval_union": 10, "q_lang_balance": 10,
+    "q_length_buckets": 10, "q_max_concurrency": 10, "q_multimodal_phash": 10,
+    "q_mutual_information": 10, "q_new_vs_returning": 10,
+    "q_null_ordering": 10, "q_order_streaks": 10, "q_ref_integrity": 10,
+    "q_repeated_ngrams": 10, "q_rfm_by_nation": 10, "q_running_anomaly": 10,
+    "q_seasonal_index": 10, "q_semdedup_prune": 10, "q_skew_advisor": 10,
+    "q_sla_attainment": 10, "q_snapshot_diff": 10, "q_survival_steps": 10,
+    "q_time_weighted_avg": 10, "q_triplet_mining": 10,
+    "q_ts_pattern_match": 10, "q_union_by_name_drift": 10,
+    "q_variant_extract": 10, "q_winsorized_stats": 10,
 }
 _GATED_PRIOR_ROUNDS = frozenset(_EVIDENCE_ROUND)
 

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -17,3 +18,24 @@ def spark():
 
     spark = get_spark(app_name="tests")
     yield spark
+
+
+@pytest.fixture(scope="module")
+def static_plan_spark(spark):
+    """Static plans only: PLANS.md is generated with AQE off, and with AQE
+    on a plan is not final before it runs.  The session conf is restored
+    afterwards."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def arrow_eval_nodes(df) -> int:
+    """Runs ``df`` and counts the ArrowEvalPython nodes of the plan it ran
+    with (the AQE final plan): one per Python stage of scalar pandas UDFs."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return len(re.findall(r"\bArrowEvalPython\b", plan.toString()))

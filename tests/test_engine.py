@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
 from flink_estimator_spark.estimator import Scenario, estimate_df, estimate_scenario, scenario_schema
+from tests.conftest import arrow_eval_nodes
 from tests.scenarios import GOLDEN, INVALID, random_scenarios
 
 
@@ -91,11 +94,27 @@ def test_engine_rejects_invalid_vm_raw_capacity(spark):
 
 
 def test_engine_validation_channel(spark):
-    from pyspark.sql import functions as F
-
     from flink_estimator_spark.estimator import normalize, validate
 
     df = validate(normalize(_mk_df(spark, INVALID + GOLDEN[:2])))
     bad = {r["project_name"] for r in df.filter(F.size("validation_errors") > 0).collect()}
     # tiny_worker passes validation (fails later at placement); the rest fail
     assert bad == {"", "no_rate", "neg_stmts", "vm_no_size"}
+
+
+def test_kernel_runs_once_under_a_result_filter(spark):
+    """A filter on a kernel output must stay above the kernel call, not be
+    pushed below it as a second Python stage that reruns the kernel."""
+    df = _mk_df(spark, GOLDEN + INVALID)
+    assert arrow_eval_nodes(estimate_df(df).filter(F.col("error").isNull())) == 1
+
+
+def test_filter_after_estimate_equals_filter_before(spark):
+    """Filtering on an input column after ``estimate_df`` (which no longer
+    prunes kernel work) returns the rows filtering the input first does."""
+    df = _mk_df(spark, GOLDEN + INVALID + random_scenarios(40))
+    after = estimate_df(df).filter(F.col("project_name").startswith("rnd1"))
+    before = estimate_df(df.filter(F.trim("project_name").startswith("rnd1")))
+    got = sorted(after.collect(), key=lambda r: r["project_name"])
+    assert len(got) == 11
+    assert got == sorted(before.collect(), key=lambda r: r["project_name"])

@@ -17,7 +17,11 @@ from flink_estimator_spark.estimator.persistence import (
     save_estimation,
     save_estimations_df,
 )
+from tests.conftest import arrow_eval_nodes
 from tests.scenarios import GOLDEN
+
+SECTIONS = ("input_summary", "resource_estimates", "cluster_recommendations",
+            "scaling_recommendations", "capacity_analysis")
 
 
 def _inputs_df(spark, cases):
@@ -50,6 +54,8 @@ def test_envelope_roundtrip(spark, tmp_path):
         for r in envelope_df(inputs, results, saved_at="2026-08-13T00:00:00").collect()
     )
     assert ids1 == ids2
+    # the estimation id is the head of the result's scenario_id
+    assert ids1 == sorted(r["scenario_id"][:8] for r in results.collect())
 
 
 def test_envelope_no_cross_product_on_shared_project_name(spark):
@@ -69,6 +75,43 @@ def test_envelope_no_cross_product_on_shared_project_name(spark):
             r["input_parameters"]["messages_per_second"]
             == r["estimation_results"]["input_summary"]["messages_per_second"]
         )
+
+
+def _envelopes(spark, cases):
+    inputs = _inputs_df(spark, cases)
+    env = envelope_df(inputs, estimate_df(inputs), saved_at="2026-08-13T00:00:00")
+    return [r.asDict(recursive=True) for r in env.collect()]
+
+
+def test_envelope_pairs_scenarios_differing_only_in_unechoed_fields(spark):
+    """Two valid scenarios with one name that differ only in a field the
+    result does not echo (nb_worker_nodes) each get their own result."""
+    cases = [dict(GOLDEN[0], nb_worker_nodes=n) for n in (1, 10)]
+    rows = _envelopes(spark, cases)
+    assert len(rows) == 2
+    assert sorted(r["input_parameters"]["nb_worker_nodes"] for r in rows) == [1, 10]
+    for r in rows:
+        exp = estimate_scenario(Scenario(**r["input_parameters"]))
+        for section in SECTIONS:
+            assert r["estimation_results"][section] == exp[section], section
+
+
+def test_envelope_never_saves_invalid_input_with_valid_twin(spark):
+    """An invalid scenario (VM without a t-size) next to a valid bare-metal
+    twin is not saved, not even paired with the twin's result."""
+    valid = dict(project_name="twin", worker_node_type="bare_metal")
+    invalid = dict(project_name="twin", worker_node_type="VM")
+    assert estimate_scenario(Scenario(**invalid)).get("error")
+    rows = _envelopes(spark, [valid, invalid])
+    assert [r["input_parameters"]["worker_node_type"] for r in rows] == ["bare_metal"]
+
+
+def test_envelope_runs_kernel_once(spark):
+    """The join and the ``error IS NULL`` filter must not copy the kernel
+    call into a second Python stage."""
+    inputs = _inputs_df(spark, GOLDEN)
+    env = envelope_df(inputs, estimate_df(inputs), saved_at="2026-08-13T00:00:00")
+    assert arrow_eval_nodes(env) == 1
 
 
 def test_single_save_list_delete(tmp_path):

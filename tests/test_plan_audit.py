@@ -5,7 +5,8 @@ scale-up, asserted against Catalyst's actual output rather than hoped for:
 * projections prune the scan schema (``ReadSchema``);
 * dimension joins broadcast instead of shuffling the fact side;
 * no query plans an unintended cartesian product;
-* hot aggregation paths stay inside whole-stage codegen.
+* hot aggregation paths stay inside whole-stage codegen;
+* no Python UDF is evaluated by two Python stages of one plan.
 """
 
 from __future__ import annotations
@@ -183,6 +184,76 @@ def test_no_partitionless_sort_window(spark, name):
             raise AssertionError(
                 f"{name} plans a partition-less sort window:\n{line.strip()}"
             )
+
+
+# Physical nodes that hand rows to a Python worker.
+_PY_EVAL_NODE = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython\w*|ArrowEvalPythonUDTF|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsInPandas\w*|FlatMapGroupsInArrow|FlatMapCoGroupsIn\w+|MapGroupsInPandas)\b"
+)
+
+
+def python_udf_calls(node: str) -> set[str]:
+    """Names of the Python UDFs one plan node calls.  A Python UDF prints as
+    ``name(args)#resultId``; no other call in a plan line has ``)#`` right
+    after its closing parenthesis."""
+    names, opened = set(), []
+    for m in re.finditer(r"(\w*)\(|\)", node):
+        if m.group(0) != ")":
+            opened.append(m.group(1))
+        elif opened:
+            name = opened.pop()
+            if name and node.startswith("#", m.end()):
+                names.add(name)
+    return names
+
+
+def python_eval_nodes(plan: str) -> list[set[str]]:
+    """The UDF names called by each Python-eval node of a physical plan."""
+    return [python_udf_calls(line) for line in plan.splitlines() if _PY_EVAL_NODE.search(line)]
+
+
+def test_python_udf_calls_parses_plan_nodes():
+    plan = """\
++- ArrowEvalPython [score(cast(a#1 as double), b#2)#12, other(c#3)#13], [pythonUDF0#14], 200
+   +- Filter isnotnull(cast(score(a#1, b#2)#12 as int))
+      +- MapInPandas run(media_id#5L, payload#7)#10, [media_id#11L], false"""
+    assert python_eval_nodes(plan) == [{"score", "other"}, {"run"}]
+
+
+# A query may call one Python UDF from two Python stages only where it
+# really applies that UDF to two different inputs.  Entries: query -> reason.
+ALLOWED_UDF_REPEATS: dict[str, str] = {}
+
+# Plans that evaluate one UDF on the same rows twice.  Each is a defect on
+# ROADMAP.md, marked as a strict xfail so that fixing it forces the entry out.
+KNOWN_UDF_DUPLICATES = {
+    # both sides of the band self-join run the fingerprint decode: the
+    # exchange under MapInPandas is reused, the MapInPandas is not (also
+    # in the AQE final plan, where one side becomes a broadcast)
+    "q_multimodal_phash": "fingerprint MapInPandas runs once per join side",
+}
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.xfail(strict=True, reason=KNOWN_UDF_DUPLICATES[n]))
+    if n in KNOWN_UDF_DUPLICATES else n
+    for n in sorted(QUERIES)
+])
+def test_python_udf_evaluated_once(static_plan_spark, name):
+    """A Python UDF that shows up in two Python-eval nodes runs twice per
+    row: the optimizer copied its call (a filter pushed below the projection
+    that calls it, or a subtree planned once per consumer)."""
+    if name in ALLOWED_UDF_REPEATS:
+        pytest.skip(ALLOWED_UDF_REPEATS[name])
+    plan = (
+        QUERIES[name].builder(static_plan_spark, SF_DIR)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    nodes = python_eval_nodes(plan)
+    repeated = sorted({u for calls in nodes for u in calls
+                       if sum(u in c for c in nodes) > 1})
+    assert not repeated, f"{name}: {repeated} evaluated by more than one Python stage:\n{plan}"
 
 
 @pytest.mark.parametrize("name", ["q1_pricing_summary", "q6_forecast_revenue"])

@@ -34,16 +34,6 @@ def test_plans_md_covers_exactly_the_registry():
     )
 
 
-@pytest.fixture(scope="module")
-def static_plan_spark(spark):
-    """PLANS.md is generated with AQE off (static plans only); compare
-    under the same regime, restoring the session conf afterwards."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield spark
-    spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_plan_metrics_match_committed(static_plan_spark, name):
     committed = COMMITTED.get(name)

@@ -19,6 +19,7 @@ from flink_estimator_spark.operators.pq import (
     _assign,
     _components,
     _grouped_mean,
+    _sub_d2,
     pq_codebooks_and_codes,
 )
 from flink_estimator_spark.operators.dedup import md5_word
@@ -115,3 +116,21 @@ def test_adc_recall_vs_exact(spark, emb):
 
 def test_constants_consistent():
     assert _PQ_M * _PQ_DSUB == 64
+
+
+@pytest.mark.parametrize(
+    "varr, carr, message",
+    [
+        (None, [1.0, 2.0], "_sub_d2: NULL input array"),
+        ([1.0, 2.0], None, "_sub_d2: NULL input array"),
+        ([1.0, 2.0], [1.0], "_sub_d2: component-array length mismatch"),
+        ([1.0, None], [1.0, 2.0], "_sub_d2: NULL component in input arrays"),
+    ],
+)
+def test_sub_d2_malformed_input_names_its_fault(spark, varr, carr, message):
+    """Each kind of malformed component array fails with its own message; a
+    NULL array must not be reported as a length mismatch."""
+    df = spark.createDataFrame([(varr, carr)], "varr array<double>, carr array<double>")
+    with pytest.raises(Exception, match=message):
+        df.select(_sub_d2(F.col("varr"), F.col("carr"))).collect()
+
