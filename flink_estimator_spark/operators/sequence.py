@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..plans._helpers import t
+from ..plans._helpers import cep_chain_oracle, t
 from ..plans.registry import query
 
 
@@ -108,45 +108,7 @@ def _step_sql(i: int, etype: str, prev: str | None) -> str:
 
 @query(
     "q_cep_four_step",
-    oracle="""
-        SELECT user_id,
-               epoch_us(t0) AS t0_us,
-               epoch_us(t1) AS t1_us,
-               epoch_us(t2) AS t2_us,
-               epoch_us(t3) AS t3_us,
-               (epoch_us(t3) - epoch_us(t0)) // 1000000 AS span_s
-        FROM (
-            SELECT DISTINCT user_id, t0, t1, t2, t3,
-                   sum(CASE WHEN event_type = 'error' AND ts > t0 AND ts < t3
-                            THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id) AS n_err
-            FROM (
-                SELECT user_id, event_type, ts, t0, t1, t2,
-                       min(CASE WHEN event_type = 'purchase' AND ts > t2
-                                THEN ts END) OVER (PARTITION BY user_id) AS t3
-                FROM (
-                    SELECT user_id, event_type, ts, t0, t1,
-                           min(CASE WHEN event_type = 'click' AND ts > t1
-                                    THEN ts END) OVER (PARTITION BY user_id) AS t2
-                    FROM (
-                        SELECT user_id, event_type, ts, t0,
-                               min(CASE WHEN event_type = 'view' AND ts > t0
-                                        THEN ts END) OVER (PARTITION BY user_id) AS t1
-                        FROM (
-                            SELECT user_id, event_type, ts,
-                                   min(CASE WHEN event_type = 'signup'
-                                            THEN ts END) OVER (PARTITION BY user_id) AS t0
-                            FROM events
-                        )
-                    )
-                )
-            )
-        )
-        WHERE t3 IS NOT NULL
-          AND epoch_us(t3) - epoch_us(t0) <= CAST(172800 AS BIGINT) * 1000000
-          AND n_err = 0
-        ORDER BY user_id
-    """,
+    oracle=cep_chain_oracle(),
     tags=("complex", "cep", "pattern", "match-recognize", "negation"),
 )
 def q_cep_four_step(spark, sf_dir):

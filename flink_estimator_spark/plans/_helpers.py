@@ -14,6 +14,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import ensure_checkpoint_dir
 from ..sources.tables import read_table
 
 
@@ -41,6 +42,53 @@ REVENUE_SQL = (
 )
 
 
+def cep_chain_oracle(where: str = "") -> str:
+    """DuckDB oracle of the four-step CEP chain (signup -> view -> click ->
+    purchase within 48 h, no error inside the span, earliest match per
+    user) over the events rows ``where`` keeps — the chained min-CASE
+    window SQL that gates ``q_cep_four_step`` and the streaming CEP
+    runtime gates."""
+    return f"""
+        SELECT user_id,
+               epoch_us(t0) AS t0_us,
+               epoch_us(t1) AS t1_us,
+               epoch_us(t2) AS t2_us,
+               epoch_us(t3) AS t3_us,
+               (epoch_us(t3) - epoch_us(t0)) // 1000000 AS span_s
+        FROM (
+            SELECT DISTINCT user_id, t0, t1, t2, t3,
+                   sum(CASE WHEN event_type = 'error' AND ts > t0 AND ts < t3
+                            THEN 1 ELSE 0 END)
+                       OVER (PARTITION BY user_id) AS n_err
+            FROM (
+                SELECT user_id, event_type, ts, t0, t1, t2,
+                       min(CASE WHEN event_type = 'purchase' AND ts > t2
+                                THEN ts END) OVER (PARTITION BY user_id) AS t3
+                FROM (
+                    SELECT user_id, event_type, ts, t0, t1,
+                           min(CASE WHEN event_type = 'click' AND ts > t1
+                                    THEN ts END) OVER (PARTITION BY user_id) AS t2
+                    FROM (
+                        SELECT user_id, event_type, ts, t0,
+                               min(CASE WHEN event_type = 'view' AND ts > t0
+                                        THEN ts END) OVER (PARTITION BY user_id) AS t1
+                        FROM (
+                            SELECT user_id, event_type, ts,
+                                   min(CASE WHEN event_type = 'signup'
+                                            THEN ts END) OVER (PARTITION BY user_id) AS t0
+                            FROM events {where}
+                        )
+                    )
+                )
+            )
+        )
+        WHERE t3 IS NOT NULL
+          AND epoch_us(t3) - epoch_us(t0) <= CAST(172800 AS BIGINT) * 1000000
+          AND n_err = 0
+        ORDER BY user_id
+    """
+
+
 def eager_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize ``df`` once with ZERO persistent-RDD footprint.
 
@@ -61,19 +109,7 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     subtrees prefer no pinning at all — identical Exchange subtrees are
     deduplicated by Catalyst for free.
     """
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        # The driver gate builds queries with ITS OWN SparkSession (not our
-        # session factory), which has no checkpoint dir — and, unlike the
-        # factory, almost certainly lacks
-        # spark.cleaner.referenceTracking.cleanCheckpoints, so files written
-        # by iterative operators would accumulate for the session lifetime.
-        # Mitigation: key the fallback dir by applicationId so each foreign
-        # session's leftovers are an isolated subdirectory that the factory
-        # (session.py) prunes on next startup (ADVICE r4).
-        repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        sc.setCheckpointDir(os.path.join(
-            repo_root, "spark-warehouse", "_checkpoints", sc.applicationId))
+    ensure_checkpoint_dir(df.sparkSession.sparkContext)
     cached = df.cache()
     out = cached.checkpoint(eager=True)
     cached.unpersist()
@@ -111,12 +147,9 @@ def materialize(df: DataFrame) -> DataFrame:
     does for foreign-session checkpoint leftovers."""
     spark = df.sparkSession
     sc = spark.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        sc.setCheckpointDir(os.path.join(
-            repo_root, "spark-warehouse", "_checkpoints", sc.applicationId))
-    base = sc._jsc.sc().getCheckpointDir().get()
-    path = os.path.join(base, f"{sc.applicationId}_mat", f"m{next(_MAT_N)}")
+    path = os.path.join(
+        ensure_checkpoint_dir(sc), f"{sc.applicationId}_mat", f"m{next(_MAT_N)}"
+    )
     df.write.mode("overwrite").parquet(path)
     return spark.read.schema(df.schema).parquet(path)
 

@@ -74,12 +74,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 
 import pyarrow as pa
 from pyspark.sql import functions as F
 
-from ._helpers import t
+from ..session import checkpoint_root
+from ._helpers import cep_chain_oracle, t
 from .registry import query
 
 # NOTE: ..streaming imports stay function-local in this module.  The plans
@@ -91,15 +93,11 @@ from .registry import query
 
 
 def _checkpoint_dir() -> str:
-    """A throwaway checkpoint location under the repo's gitignored
-    spark-warehouse (works under the driver's foreign session too; the
-    session factory prunes leftovers, and we rmtree in ``finally``)."""
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    """A throwaway checkpoint location under the session's checkpoint root
+    (works under the driver's foreign session too; the session factory
+    prunes leftovers, and the runners rmtree in ``finally``)."""
     return os.path.join(
-        repo_root, "spark-warehouse", "_checkpoints",
-        f"stream_runtime_{uuid.uuid4().hex}",
+        checkpoint_root(), f"stream_runtime_{uuid.uuid4().hex}"
     )
 
 
@@ -138,25 +136,63 @@ def _batches_rows(batches):
     return [r for _key, tbl in batches for r in tbl.to_pylist()]
 
 
-def _run_bounded_stream(spark, sf_dir, build, output_mode, state_partitions=4,
-                        table="events"):
-    """Stage the fixture as a file-stream directory (symlink — the file
-    stream source needs a DIRECTORY and the fixture is read-only), run
-    ``build(make_stream)`` through foreachBatch with availableNow, and
-    return (list of (batch_id, arrow table), output schema).  ``build`` receives a
-    zero-arg factory so multi-input operators (stream-stream joins) can
-    instantiate INDEPENDENT sources over the same staged directory — each
-    ``readStream`` tracks its own offsets under the shared checkpoint.
-    ``table`` picks the staged fixture file: "events" (default, ts-normalized
-    via events_stream) or "documents" (the arriving-crawl shape, served by
-    documents_stream; event time is whatever the builder derives).
+def _assert_single_batch(batches, why):
+    """Fail loudly unless every emission came from ONE micro-batch.  Gates
+    whose operator orders rows only WITHIN a batch match the oracle's
+    global event-time order only under ``_run_stream``'s one-file,
+    one-batch contract; if the source ever splits (multi-file fixture,
+    maxFilesPerTrigger) they must fail here instead of silently diverging.
+    ``why`` states what would diverge."""
+    non_empty = [key for key, tbl in batches if tbl.num_rows]
+    assert len(non_empty) <= 1, (
+        f"gate expects a single-batch source; got emissions in batches "
+        f"{non_empty} — {why}"
+    )
 
-    Batching contract: the staged directory holds exactly ONE file and no
-    maxFilesPerTrigger is set, so availableNow delivers the whole fixture
-    in a single micro-batch.  Operators whose oracle parity depends on
-    global event-time ordering (count_window, CEP chains — anything that
-    sorts only within a batch) assume this; they assert single-batch
-    arrival on their emissions rather than trusting it silently.
+
+def _run_stream(spark, sf_dir, build, output_mode, *, split_us=None,
+                until_rows=None, state_partitions=4, table="events"):
+    """Run ``build(make_stream)`` as a Structured Streaming query over the
+    staged ``table`` fixture through a foreachBatch sink and return
+    (list of ((phase, batch_id), arrow table), output schema).  ``build``
+    receives a zero-arg factory so multi-input operators (stream-stream
+    joins) can instantiate INDEPENDENT sources over the same staged
+    directory — each ``readStream`` tracks its own offsets under the
+    shared checkpoint.  ``table`` picks the staged fixture file: "events"
+    (default, ts-normalized via events_stream) or "documents" (the
+    arriving-crawl shape, served by documents_stream; event time is
+    whatever the builder derives).
+
+    Staging.  Each phase's file is SYMLINKED into the stream directory
+    (the file stream source needs a DIRECTORY and the fixture is
+    read-only) just before that phase's query starts.  ``split_us=None``:
+    the fixture itself is the one phase.  An int ``split_us`` (epoch
+    micros) is a CHECKPOINT RESTART: the fixture is staged as two files
+    (rows at or before the split, then the rest) and one query per phase
+    runs over ONE checkpoint — pass 1 sees only the first file and is
+    STOPPED, the second file lands, and a brand-new query instance
+    resumes, so state straddling the split exists only as RECOVERED
+    state.  Offsets, watermark and operator state all round-trip
+    through the checkpoint, and exactly-once shows up as the absence of
+    duplicate/missing emissions in the union.
+
+    Batching contract: one staged file gives one micro-batch.  The
+    sources read one file per trigger, and each query finds exactly one
+    new file — the whole fixture on a single pass, one file per phase on
+    restart.  Operators whose oracle parity depends on global
+    event-time ordering (count_window, CEP chains — anything that sorts
+    only within a batch) assume this and check it with
+    ``_assert_single_batch``.
+
+    Ending.  ``until_rows=None``: availableNow, awaited to termination.
+    An int ``until_rows`` is for TTL'd transformWithState, which REQUIRES
+    timeMode="ProcessingTime"; that mode schedules perpetual state-cleanup
+    batches, so neither availableNow nor processAllAvailable ever signals
+    completion.  The query then runs on the default ProcessingTime trigger
+    and is polled until it has emitted ``until_rows`` rows (a TERMINATION
+    condition only; the oracle still value-checks every row), settled, and
+    stopped — ``TimeoutError`` after 300 s so an under-emitting processor
+    fails loud.
 
     Streaming state partitions are pinned at the FIRST run from
     shuffle.partitions, and each one instantiates a state store — size
@@ -175,36 +211,99 @@ def _run_bounded_stream(spark, sf_dir, build, output_mode, state_partitions=4,
     source = events_stream if table == "events" else documents_stream
     ckpt = _checkpoint_dir()
     stream_dir = ckpt + "_src"
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(
-        os.path.join(sf_dir, f"{table}.parquet"),
-        os.path.join(stream_dir, f"{table}.parquet"),
-    )
+    stage_dir = ckpt + "_stage"
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    batches: list[tuple[int, "pa.Table"]] = []
+    batches: list[tuple[tuple[int, int], "pa.Table"]] = []
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        out = build(lambda: source(spark, stream_dir))
+        os.makedirs(stream_dir)
+        if split_us is None:
+            phase_files = [os.path.join(sf_dir, f"{table}.parquet")]
+        else:
+            phase_files = _stage_split(spark, sf_dir, table, split_us, stage_dir)
+        for phase, part in enumerate(phase_files):
+            os.symlink(part, os.path.join(stream_dir, f"part-{phase}.parquet"))
+            out = build(lambda: source(spark, stream_dir))
 
-        def sink(batch_df, batch_id):
-            batches.append((batch_id, batch_df.toArrow()))
+            def sink(batch_df, batch_id, _p=phase):
+                batches.append(((_p, batch_id), batch_df.toArrow()))
 
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+            writer = (
+                out.writeStream.outputMode(output_mode)
+                .foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+            )
+            if until_rows is None:
+                writer = writer.trigger(availableNow=True)
+            q = writer.start()
+            try:
+                if until_rows is None:
+                    q.awaitTermination()
+                else:
+                    _await_rows(q, batches, until_rows)
+            finally:
+                q.stop()
         return batches, out.schema
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
+        for d in (ckpt, stream_dir, stage_dir):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _stage_split(spark, sf_dir, table, split_us, stage_dir):
+    """Stage the two restart phases in one single-task partitioned write
+    (one fixture scan + one job; optimization r10) and return the two
+    phase files.  coalesce(1) keeps ONE file per phase, hence one
+    micro-batch per pass.  Fixture row order inside each file is explicit,
+    not a sort-stability accident: rows are stamped with their scan
+    position before the coalesce and sorted on (phase, position) — the
+    partitioned writer's own sort on the phase column is then a no-op."""
+    (
+        t(spark, sf_dir, table)
+        .withColumn(
+            "_phase", F.when(F.unix_micros("ts") <= split_us, 0).otherwise(1)
+        )
+        .withColumn("_idx", F.monotonically_increasing_id())
+        .coalesce(1)
+        .sortWithinPartitions("_phase", "_idx")
+        .drop("_idx")
+        .write.partitionBy("_phase")
+        .parquet(stage_dir)
+    )
+    files = []
+    for phase in (0, 1):
+        part_dir = os.path.join(stage_dir, f"_phase={phase}")
+        assert os.path.isdir(part_dir), (
+            f"restart staging produced no phase-{phase} rows — the "
+            f"split point {split_us} falls outside the fixture"
+        )
+        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+        files.append(os.path.join(part_dir, part))
+    return files
+
+
+def _await_rows(q, batches, until_rows):
+    """Poll a ProcessingTime query until its emissions reach
+    ``until_rows``, then settle: catch spurious extra emissions — but
+    event-driven, not a fixed sleep: ProcessingTime mode keeps scheduling
+    cleanup batches, so one FURTHER completed batch beyond the one that
+    reached the count proves emissions have stopped (1 s cap keeps the old
+    fixed-sleep bound as the fallback)."""
+    deadline = time.time() + 300
+    while (n := sum(tbl.num_rows for _k, tbl in batches)) < until_rows:
+        if q.exception():
+            raise q.exception()
+        if time.time() > deadline:
+            raise TimeoutError(f"TWS stream emitted {n}/{until_rows} rows")
+        time.sleep(0.1)
+    lp = q.lastProgress
+    reached = lp["batchId"] if lp else -1
+    settle_deadline = time.time() + 1.0
+    while time.time() < settle_deadline:
+        lp = q.lastProgress
+        if lp and lp["batchId"] > reached:
+            break
+        time.sleep(0.05)
 
 
 @query(
@@ -230,7 +329,7 @@ def q_stream_tumble_runtime(spark, sf_dir):
     streaming execution path."""
     from ..streaming.windows import tumble_agg
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: tumble_agg(make(), size="10 minutes", watermark="30 minutes"),
@@ -263,7 +362,7 @@ def q_stream_dedup_runtime(spark, sf_dir):
     (The batch dual ``q_dedup_by_key`` pins the winning row by event time;
     this query's purpose is gate evidence for the streaming dedup-state
     path itself.)"""
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: (
@@ -320,7 +419,7 @@ def q_stream_session_runtime(spark, sf_dir):
     value-checks the merge logic itself.  Session-count state is bounded
     by active keys x open sessions, sized via the shared harness's
     state-partition rule."""
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: (
@@ -419,7 +518,7 @@ def q_stream_join_runtime(spark, sf_dir):
     evidence for the streaming join-state path.)  Join-state volume is
     bounded by rows inside the watermark horizon per side, partitioned by
     user_id — state partitions sized via the shared harness rule."""
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, _view_purchase_join_build, output_mode="append"
     )
     return (
@@ -476,7 +575,7 @@ def q_stream_count_runtime(spark, sf_dir):
     vs 3.8 s at 4 — and the legacy topn gate is flat; both keep 4)."""
     from ..streaming.stateful import count_window
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: count_window(make()).select(
@@ -487,15 +586,11 @@ def q_stream_count_runtime(spark, sf_dir):
     )
     # Oracle-parity precondition (ADVICE r5): count_window orders by
     # (ts, event_id) only WITHIN a micro-batch, while the oracle's
-    # row_number is a global event-time order — they agree because the
-    # single-file staging in _run_bounded_stream arrives as ONE batch.
-    # If the source ever splits (multi-file fixture, maxFilesPerTrigger),
-    # fail loudly here instead of silently diverging from the oracle.
-    non_empty = [bid for bid, tbl in batches if tbl.num_rows]
-    assert len(non_empty) <= 1, (
-        f"count-window gate expects a single-batch source; got emissions in "
-        f"batches {non_empty} — window membership would no longer match the "
-        f"oracle's global event-time ordering"
+    # row_number is a global event-time order
+    _assert_single_batch(
+        batches,
+        "count-window membership would no longer match the oracle's global "
+        "event-time ordering",
     )
     return (
         _batches_df(spark, batches, schema)
@@ -505,45 +600,7 @@ def q_stream_count_runtime(spark, sf_dir):
 
 @query(
     "q_stream_cep_runtime",
-    oracle="""
-        SELECT user_id,
-               epoch_us(t0) AS t0_us,
-               epoch_us(t1) AS t1_us,
-               epoch_us(t2) AS t2_us,
-               epoch_us(t3) AS t3_us,
-               (epoch_us(t3) - epoch_us(t0)) // 1000000 AS span_s
-        FROM (
-            SELECT DISTINCT user_id, t0, t1, t2, t3,
-                   sum(CASE WHEN event_type = 'error' AND ts > t0 AND ts < t3
-                            THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id) AS n_err
-            FROM (
-                SELECT user_id, event_type, ts, t0, t1, t2,
-                       min(CASE WHEN event_type = 'purchase' AND ts > t2
-                                THEN ts END) OVER (PARTITION BY user_id) AS t3
-                FROM (
-                    SELECT user_id, event_type, ts, t0, t1,
-                           min(CASE WHEN event_type = 'click' AND ts > t1
-                                    THEN ts END) OVER (PARTITION BY user_id) AS t2
-                    FROM (
-                        SELECT user_id, event_type, ts, t0,
-                               min(CASE WHEN event_type = 'view' AND ts > t0
-                                        THEN ts END) OVER (PARTITION BY user_id) AS t1
-                        FROM (
-                            SELECT user_id, event_type, ts,
-                                   min(CASE WHEN event_type = 'signup'
-                                            THEN ts END) OVER (PARTITION BY user_id) AS t0
-                            FROM events
-                        )
-                    )
-                )
-            )
-        )
-        WHERE t3 IS NOT NULL
-          AND epoch_us(t3) - epoch_us(t0) <= CAST(172800 AS BIGINT) * 1000000
-          AND n_err = 0
-        ORDER BY user_id
-    """,
+    oracle=cep_chain_oracle(),
     tags=("streaming", "runtime", "cep", "pattern", "stateful", "custom-state"),
 )
 def q_stream_cep_runtime(spark, sf_dir):
@@ -562,7 +619,7 @@ def q_stream_cep_runtime(spark, sf_dir):
     asserted below like the count-window gate)."""
     from ..streaming.cep import sequence_matches
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: sequence_matches(
@@ -573,11 +630,10 @@ def q_stream_cep_runtime(spark, sf_dir):
         ),
         output_mode="update",
     )
-    non_empty = [bid for bid, tbl in batches if tbl.num_rows]
-    assert len(non_empty) <= 1, (
-        f"CEP gate expects a single-batch source; got emissions in batches "
-        f"{non_empty} — chain anchoring would no longer follow the oracle's "
-        f"global event-time order"
+    _assert_single_batch(
+        batches,
+        "CEP chain anchoring would no longer follow the oracle's global "
+        "event-time order",
     )
     return _batches_df(spark, batches, schema).orderBy("user_id")
 
@@ -637,7 +693,7 @@ def q_stream_dynsession_runtime(spark, sf_dir):
     bounds state like the fixed-gap gate."""
     from ..streaming.windows import session_agg_dynamic
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: session_agg_dynamic(
@@ -682,7 +738,7 @@ def q_stream_funnel_runtime(spark, sf_dir):
     state machine itself."""
     from ..streaming.cep import funnel_conversions
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: funnel_conversions(make()),
@@ -738,7 +794,7 @@ def q_stream_temporal_runtime(spark, sf_dir):
     ev_batch = t(spark, sf_dir, "events")
     dim = scd2_from_log(ev_batch.filter(F.col("event_type") == "view"))
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: enrich_with_scd2(
@@ -851,7 +907,7 @@ def q_stream_outer_join_runtime(spark, sf_dir):
     ).collect()[0]
     wm_us = min(mx["mv"], mx["mp"]) - _OUTER_WM_US
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="append"
     )
     return (
@@ -908,17 +964,16 @@ def q_stream_anomaly_runtime(spark, sf_dir):
     like the count-window gate)."""
     from ..streaming.anomaly import running_anomalies
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: running_anomalies(make()),
         output_mode="append",
     )
-    non_empty = [bid for bid, tbl in batches if tbl.num_rows]
-    assert len(non_empty) <= 1, (
-        f"anomaly gate expects a single-batch source; got emissions in "
-        f"batches {non_empty} — per-key prior-history order would no longer "
-        f"match the oracle's global event-time frame"
+    _assert_single_batch(
+        batches,
+        "anomaly per-key prior-history order would no longer match the "
+        "oracle's global event-time frame",
     )
     return (
         _batches_df(spark, batches, schema)
@@ -967,17 +1022,16 @@ def q_stream_twa_runtime(spark, sf_dir):
     counterpart for and are filtered before the divide."""
     from ..streaming.twa import time_weighted_totals
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: time_weighted_totals(make()),
         output_mode="update",
     )
-    non_empty = [bid for bid, tbl in batches if tbl.num_rows]
-    assert len(non_empty) <= 1, (
-        f"TWA gate expects a single-batch source; got emissions in batches "
-        f"{non_empty} — a key emitting in several batches would need a "
-        f"latest-emission reduction before the quantizing projection"
+    _assert_single_batch(
+        batches,
+        "a TWA key emitting in several batches would need a latest-emission "
+        "reduction before the quantizing projection",
     )
     return (
         _batches_df(spark, batches, schema)
@@ -1047,7 +1101,7 @@ def q_stream_topn_runtime(spark, sf_dir):
     from ..streaming.topn import window_topn
 
     win_s = 3600
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: window_topn(make(), watermark="30 minutes", window_s=win_s),
@@ -1118,7 +1172,7 @@ def q_stream_cms_runtime(spark, sf_dir):
     from ..streaming.sketches import windowed_cms_cells
 
     win_s = 3600
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: windowed_cms_cells(
@@ -1218,7 +1272,7 @@ def q_stream_chained_agg_runtime(spark, sf_dir):
             )
         )
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="append"
     )
     ev = t(spark, sf_dir, "events")
@@ -1338,7 +1392,7 @@ def q_stream_dedup_ttl_runtime(spark, sf_dir):
     the oracle can state exactly."""
     from ..streaming.dedup import dedup_within_watermark
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: dedup_within_watermark(
@@ -1417,7 +1471,7 @@ def q_stream_union_runtime(spark, sf_dir):
             )
         )
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="complete"
     )
     return (
@@ -1484,7 +1538,7 @@ def q_stream_tws_topn_runtime(spark, sf_dir):
     from ..streaming.stateful import window_topn_tws
 
     win_s = 21600
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: window_topn_tws(
@@ -1514,46 +1568,7 @@ def q_stream_tws_topn_runtime(spark, sf_dir):
 
 @query(
     "q_stream_tws_cep_runtime",
-    oracle="""
-        SELECT user_id,
-               epoch_us(t0) AS t0_us,
-               epoch_us(t1) AS t1_us,
-               epoch_us(t2) AS t2_us,
-               epoch_us(t3) AS t3_us,
-               (epoch_us(t3) - epoch_us(t0)) // 1000000 AS span_s
-        FROM (
-            SELECT DISTINCT user_id, t0, t1, t2, t3,
-                   sum(CASE WHEN event_type = 'error' AND ts > t0 AND ts < t3
-                            THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id) AS n_err
-            FROM (
-                SELECT user_id, event_type, ts, t0, t1, t2,
-                       min(CASE WHEN event_type = 'purchase' AND ts > t2
-                                THEN ts END) OVER (PARTITION BY user_id) AS t3
-                FROM (
-                    SELECT user_id, event_type, ts, t0, t1,
-                           min(CASE WHEN event_type = 'click' AND ts > t1
-                                    THEN ts END) OVER (PARTITION BY user_id) AS t2
-                    FROM (
-                        SELECT user_id, event_type, ts, t0,
-                               min(CASE WHEN event_type = 'view' AND ts > t0
-                                        THEN ts END) OVER (PARTITION BY user_id) AS t1
-                        FROM (
-                            SELECT user_id, event_type, ts,
-                                   min(CASE WHEN event_type = 'signup'
-                                            THEN ts END) OVER (PARTITION BY user_id) AS t0
-                            FROM events
-                            WHERE user_id < 300
-                        )
-                    )
-                )
-            )
-        )
-        WHERE t3 IS NOT NULL
-          AND epoch_us(t3) - epoch_us(t0) <= CAST(172800 AS BIGINT) * 1000000
-          AND n_err = 0
-        ORDER BY user_id
-    """,
+    oracle=cep_chain_oracle("WHERE user_id < 300"),
     tags=("streaming", "runtime", "cep", "typed-state", "timer", "tws"),
 )
 def q_stream_tws_cep_runtime(spark, sf_dir):
@@ -1577,7 +1592,7 @@ def q_stream_tws_cep_runtime(spark, sf_dir):
     and constant in SF."""
     from ..streaming.stateful import sequence_matches_tws
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: sequence_matches_tws(
@@ -1589,10 +1604,10 @@ def q_stream_tws_cep_runtime(spark, sf_dir):
         ),
         output_mode="update",
     )
-    non_empty = [bid for bid, tbl in batches if tbl.num_rows]
-    assert len(non_empty) <= 1, (
-        f"typed-state CEP gate expects a single-batch source; got emissions "
-        f"in batches {non_empty}"
+    _assert_single_batch(
+        batches,
+        "typed-state CEP chain anchoring would no longer follow the oracle's "
+        "global event-time order",
     )
     return _batches_df(spark, batches, schema).orderBy("user_id")
 
@@ -1665,7 +1680,7 @@ def q_stream_kmv_runtime(spark, sf_dir):
     from ..streaming.sketches import KMV_K, windowed_kmv
 
     win_s, k, hsp = 3600, KMV_K, 1 << 52
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: windowed_kmv(make(), watermark="30 minutes", window_s=win_s, k=k),
@@ -1820,7 +1835,7 @@ def _theta_pairs_frame(spark, sf_dir):
     from ..streaming.sketches import windowed_kmv
 
     k, hsp = _THP_K, _THP_H
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: windowed_kmv(
@@ -2056,93 +2071,6 @@ def q_stream_theta_curve_runtime(spark, sf_dir):
     )
 
 
-def _run_restarted_stream(spark, sf_dir, build, output_mode, split_us=None):
-    """Run ``build(make_stream)`` as TWO separate availableNow queries
-    over ONE checkpoint: the fixture is split at ``split_us`` (epoch
-    micros; default = the event-time median) into two files, pass 1 sees
-    only the first, the query terminates and is STOPPED, the second file
-    lands, and a brand-new query instance resumes from the checkpoint —
-    a real stop/recover cycle in which windows straddling the split
-    exist only as RECOVERED state.  Gates whose interesting state lives
-    in a narrow event-time band (e.g. earliest-match CEP chains, which
-    all complete in the fixture's early prefix) pass an explicit
-    ``split_us`` landing inside that band so the recovery is
-    value-visible at every SF.  Returns ([((phase, batch_id), rows)],
-    schema).
-
-    This is the fault-tolerance half of the streaming story the
-    single-run gates can't see: offsets, watermark, and operator state
-    all round-trip through the checkpoint, and exactly-once shows up as
-    the absence of duplicate/missing emissions in the union."""
-    from ..streaming.sources import events_stream
-
-    ckpt = _checkpoint_dir()
-    stream_dir = ckpt + "_src"
-    stage_dir = ckpt + "_stage"
-    os.makedirs(stream_dir, exist_ok=True)
-    ev = t(spark, sf_dir, "events")
-    if split_us is None:
-        split_us = int(
-            ev.agg(F.expr("percentile(unix_micros(ts), 0.5)")).collect()[0][0]
-        )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    batches: list[tuple[tuple[int, int], "pa.Table"]] = []
-    schema = None
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # stage BOTH halves in one single-task partitioned write (one
-        # fixture scan + one job, where the per-phase filtered writes paid
-        # two of each — optimization r10).  coalesce(1) stays load-bearing
-        # twice over: one file per phase keeps one micro-batch per pass,
-        # and the single in-order task preserves fixture row order inside
-        # each staged file (a keyed repartition would sort-before-shuffle).
-        (
-            ev.withColumn(
-                "_phase",
-                F.when(F.unix_micros("ts") <= split_us, 0).otherwise(1),
-            )
-            .coalesce(1)
-            .write.partitionBy("_phase")
-            .parquet(stage_dir)
-        )
-        for phase in (0, 1):
-            part_dir = os.path.join(stage_dir, f"_phase={phase}")
-            assert os.path.isdir(part_dir), (
-                f"restart staging produced no phase-{phase} rows — the "
-                f"split point {split_us} falls outside the fixture"
-            )
-            part = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
-            )
-            shutil.copy(
-                os.path.join(part_dir, part),
-                os.path.join(stream_dir, f"part-{phase}.parquet"),
-            )
-            out = build(lambda: events_stream(spark, stream_dir))
-            schema = out.schema
-
-            def sink(batch_df, batch_id, _p=phase):
-                batches.append(((_p, batch_id), batch_df.toArrow()))
-
-            q = (
-                out.writeStream.outputMode(output_mode)
-                .foreachBatch(sink)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                q.stop()
-        return batches, schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-
 # decided-region margin: win_end (600) + watermark (1800) + slack (60)
 _RESTART_MARGIN = 600 + 1800 + 60
 
@@ -2173,7 +2101,7 @@ def q_stream_restart_runtime(spark, sf_dir):
     never exercise: a watermarked 10-minute tumble aggregation runs as
     TWO separate availableNow queries over one checkpoint, stopped and
     resumed at the fixture's event-time median (see
-    ``_run_restarted_stream``).  Windows straddling the split accumulate
+    ``_run_stream``).  Windows straddling the split accumulate
     half their rows in pass 1, survive the stop as RECOVERED operator
     state, and complete in pass 2 — lost state undercounts them, replayed
     offsets double-count, and a watermark that fails to round-trip emits
@@ -2190,7 +2118,16 @@ def q_stream_restart_runtime(spark, sf_dir):
     deployment lives in (deploys, rebalances, failures all restart the
     query mid-state); state per window is one (n, sum) pair per
     event_type, watermark-bounded."""
-    batches, schema = _run_restarted_stream(
+    # the median split and the decided-region horizon in ONE job
+    med_us, max_us = (
+        t(spark, sf_dir, "events")
+        .agg(
+            F.expr("percentile(unix_micros(ts), 0.5)"),
+            F.max(F.unix_micros("ts")),
+        )
+        .first()
+    )
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: (
@@ -2209,10 +2146,9 @@ def q_stream_restart_runtime(spark, sf_dir):
             )
         ),
         output_mode="append",
+        split_us=int(med_us),
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - _RESTART_MARGIN
+    cutoff = max_us // 1_000_000 - _RESTART_MARGIN
     return (
         _batches_df(spark, batches, schema)
         .filter(F.col("win_start") <= F.lit(cutoff))
@@ -2284,7 +2220,7 @@ def q_stream_kll_runtime(spark, sf_dir):
     fixture SF); sketch state is O(k log n) bytes regardless of window
     row count — the property that makes streaming quantiles survive
     100 TB/day where exact percentile state (all values) cannot."""
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: (
@@ -2366,46 +2302,7 @@ def q_stream_kll_runtime(spark, sf_dir):
 
 @query(
     "q_stream_tws_restart_runtime",
-    oracle="""
-        SELECT user_id,
-               epoch_us(t0) AS t0_us,
-               epoch_us(t1) AS t1_us,
-               epoch_us(t2) AS t2_us,
-               epoch_us(t3) AS t3_us,
-               (epoch_us(t3) - epoch_us(t0)) // 1000000 AS span_s
-        FROM (
-            SELECT DISTINCT user_id, t0, t1, t2, t3,
-                   sum(CASE WHEN event_type = 'error' AND ts > t0 AND ts < t3
-                            THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id) AS n_err
-            FROM (
-                SELECT user_id, event_type, ts, t0, t1, t2,
-                       min(CASE WHEN event_type = 'purchase' AND ts > t2
-                                THEN ts END) OVER (PARTITION BY user_id) AS t3
-                FROM (
-                    SELECT user_id, event_type, ts, t0, t1,
-                           min(CASE WHEN event_type = 'click' AND ts > t1
-                                    THEN ts END) OVER (PARTITION BY user_id) AS t2
-                    FROM (
-                        SELECT user_id, event_type, ts, t0,
-                               min(CASE WHEN event_type = 'view' AND ts > t0
-                                        THEN ts END) OVER (PARTITION BY user_id) AS t1
-                        FROM (
-                            SELECT user_id, event_type, ts,
-                                   min(CASE WHEN event_type = 'signup'
-                                            THEN ts END) OVER (PARTITION BY user_id) AS t0
-                            FROM events
-                            WHERE user_id < 300
-                        )
-                    )
-                )
-            )
-        )
-        WHERE t3 IS NOT NULL
-          AND epoch_us(t3) - epoch_us(t0) <= CAST(172800 AS BIGINT) * 1000000
-          AND n_err = 0
-        ORDER BY user_id
-    """,
+    oracle=cep_chain_oracle("WHERE user_id < 300"),
     tags=(
         "streaming", "runtime", "cep", "typed-state", "restart",
         "checkpoint", "tws",
@@ -2459,7 +2356,7 @@ def q_stream_tws_restart_runtime(spark, sf_dir):
     assert pick is not None, "fixture has no matched chain to straddle"
     split_us = (pick["t0_us"] + pick["t3_us"]) // 2
 
-    batches, schema = _run_restarted_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         lambda make: sequence_matches_tws(
@@ -2547,7 +2444,7 @@ def q_stream_join_restart_runtime(spark, sf_dir):
     assert pick is not None, "fixture has no matched pair to straddle"
     split_us = (pick["view_us"] + pick["purchase_us"]) // 2
 
-    batches, schema = _run_restarted_stream(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
         _view_purchase_join_build,
@@ -2566,72 +2463,6 @@ def q_stream_join_restart_runtime(spark, sf_dir):
         _batches_df(spark, batches, schema)
         .orderBy("view_id", "purchase_id")
     )
-
-
-def _run_tws_processing_time(spark, sf_dir, build, n_expected):
-    """Drive a ProcessingTime transformWithState stream over the staged
-    fixture and return its emitted rows.  TTL'd state REQUIRES
-    timeMode="ProcessingTime", and in that mode the operator schedules
-    perpetual state-cleanup batches, so neither availableNow nor
-    processAllAvailable ever signals completion — this runner polls the
-    emission count up to ``n_expected`` (a TERMINATION condition only;
-    the oracle still value-checks every row) and stops the query, raising
-    on timeout so an under-emitting processor fails loud."""
-    import time as _time
-
-    from ..streaming.sources import events_stream
-
-    ckpt = _checkpoint_dir()
-    stream_dir = ckpt + "_src"
-    os.makedirs(stream_dir, exist_ok=True)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stream_dir, "events.parquet"),
-    )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    batches: list = []
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        out = build(events_stream(spark, stream_dir))
-        schema = out.schema
-        q = (
-            out.writeStream.outputMode("append")
-            .foreachBatch(lambda b, i: batches.append((i, b.toArrow())))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            deadline = _time.time() + 300
-            while sum(tbl.num_rows for _i, tbl in batches) < n_expected:
-                if q.exception():
-                    raise q.exception()
-                if _time.time() > deadline:
-                    raise TimeoutError(
-                        f"TWS stream emitted "
-                        f"{sum(tbl.num_rows for _i, tbl in batches)}"
-                        f"/{n_expected} rows"
-                    )
-                _time.sleep(0.1)
-            # settle: catch spurious extra emissions — but event-driven,
-            # not a fixed sleep: ProcessingTime mode keeps scheduling
-            # cleanup batches, so one FURTHER completed batch beyond the
-            # one that reached the count proves emissions have stopped
-            # (1 s cap keeps the old fixed-sleep bound as the fallback)
-            lp = q.lastProgress
-            reached = lp["batchId"] if lp else -1
-            settle_deadline = _time.time() + 1.0
-            while _time.time() < settle_deadline:
-                lp = q.lastProgress
-                if lp and lp["batchId"] > reached:
-                    break
-                _time.sleep(0.05)
-        finally:
-            q.stop()
-        return batches, schema
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stream_dir, ignore_errors=True)
 
 
 @query(
@@ -2673,17 +2504,18 @@ def q_stream_tws_ttl_runtime(spark, sf_dir):
         .distinct()
         .count()
     )
-    batches, schema = _run_tws_processing_time(
+    batches, schema = _run_stream(
         spark,
         sf_dir,
-        lambda ev: ttl_dedup_tws(
-            ev.withColumn(
+        lambda make: ttl_dedup_tws(
+            make().withColumn(
                 "day", F.floor(F.unix_timestamp("ts") / 86400).cast("bigint")
             ),
             ["event_type", "day"],
             ttl_ms=3_600_000,
         ),
-        n_expected,
+        output_mode="append",
+        until_rows=n_expected,
     )
     return (
         _batches_df(spark, batches, schema)
@@ -2804,7 +2636,7 @@ def q_stream_lsh_neardup_runtime(spark, sf_dir):
             bands=_NDP_BANDS,
         )
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="append", table="documents"
     )
     emitted = _batches_df(spark, batches, schema)
@@ -2916,7 +2748,7 @@ def q_stream_ingest_pipeline_runtime(spark, sf_dir):
             )
         )
 
-    batches, schema = _run_bounded_stream(
+    batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="append", table="documents"
     )
     max_doc = (

@@ -11,6 +11,8 @@ than the 200-partition default.
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
 from pyspark.sql import SparkSession
 
@@ -73,28 +75,70 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         # reliable (not local) checkpoints: zero persistent-RDD footprint
-        # and executor-loss-safe on a real cluster; the dir is gitignored
-        # (on a cluster this would be an HDFS/S3 path)
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ckpt_root = os.path.join(repo_root, "spark-warehouse", "_checkpoints")
-        # Prune checkpoint leftovers so the disk footprint is bounded
-        # (ADVICE r4): foreign-session subtrees (_checkpoints/<appId>),
-        # materialize() parquet dirs (<appId>_mat), and the UUID dirs RDD
-        # checkpointing creates when a process exits before the
-        # referenceTracking cleaner runs.  Age-guarded (r10): a fixed
-        # 3-hour threshold instead of name-prefix matching, so a starting
-        # session can never delete files a CONCURRENT session (bench +
-        # pytest on one box) is still reading.
-        import shutil
-        import time
-        if os.path.isdir(ckpt_root):
-            cutoff = time.time() - 3 * 3600
-            for sub in os.listdir(ckpt_root):
-                p = os.path.join(ckpt_root, sub)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
-        spark.sparkContext.setCheckpointDir(ckpt_root)
+        # and executor-loss-safe on a real cluster
+        prune_checkpoints()
+        spark.sparkContext.setCheckpointDir(checkpoint_root())
     return spark
+
+
+# checkpoint leftovers untouched this long are pruned at session start
+_PRUNE_AGE_S = 3 * 3600
+
+
+def checkpoint_root() -> str:
+    """Root of every checkpoint and materialization this engine writes:
+    the repo's gitignored ``spark-warehouse/_checkpoints`` (on a cluster
+    this would be an HDFS/S3 path)."""
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(repo_root, "spark-warehouse", "_checkpoints")
+
+
+def ensure_checkpoint_dir(sc) -> str:
+    """The session's checkpoint dir, first set to an applicationId-keyed
+    subdirectory of ``checkpoint_root()`` if the session has none.
+
+    The driver gate builds queries with ITS OWN SparkSession (not
+    ``get_spark``), which has no checkpoint dir — and almost certainly
+    lacks spark.cleaner.referenceTracking.cleanCheckpoints, so files
+    written by iterative operators would accumulate for the session
+    lifetime.  Keying the fallback by applicationId makes each foreign
+    session's leftovers one isolated subdirectory that
+    ``prune_checkpoints`` removes once stale (ADVICE r4)."""
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        sc.setCheckpointDir(os.path.join(checkpoint_root(), sc.applicationId))
+    return sc._jsc.sc().getCheckpointDir().get()
+
+
+def prune_checkpoints() -> None:
+    """Delete stale checkpoint leftovers so the disk footprint is bounded:
+    foreign-session subtrees (``<appId>`` dirs), ``materialize()``
+    parquet dirs, stream-runtime checkpoints, and the UUID dirs RDD
+    checkpointing creates when a process exits before the
+    referenceTracking cleaner runs.
+
+    Age-guarded rather than name-matched, so a starting session never
+    deletes files a CONCURRENT session (bench + pytest on one box) is
+    still writing: an entry goes only when the NEWEST mtime anywhere in
+    its subtree is older than ``_PRUNE_AGE_S``.  A live session keeps writing
+    below a top-level dir whose own mtime stays old, so that mtime alone
+    is not enough; it is a lower bound on the subtree's newest, though,
+    so only entries already past the cutoff by it get walked — session
+    start never walks a live tree whose top level is fresh."""
+    root = checkpoint_root()
+    if not os.path.isdir(root):
+        return
+    cutoff = time.time() - _PRUNE_AGE_S
+    for sub in os.listdir(root):
+        p = os.path.join(root, sub)
+        try:
+            if os.lstat(p).st_mtime >= cutoff:
+                continue
+            newest = max(
+                (os.lstat(os.path.join(d, n)).st_mtime
+                 for d, dirs, files in os.walk(p) for n in dirs + files),
+                default=0.0,
+            )
+            if newest < cutoff:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass

@@ -43,3 +43,28 @@ def test_no_persistent_rdds_after_builder(spark, name):
     df.count()  # run to completion, like the driver gate does
     leaked = dict(spark.sparkContext._jsc.getPersistentRDDs())
     assert not leaked, f"{name} left {len(leaked)} pinned RDD(s): {leaked}"
+
+
+def test_checkpoint_prune_keys_on_newest_mtime_in_subtree(tmp_path, monkeypatch):
+    """A session writing below an old top-level dir keeps it alive: only
+    entries whose whole subtree is stale are pruned."""
+    import os
+    import time
+
+    from flink_estimator_spark import session
+
+    old = time.time() - 4 * 3600
+    live = tmp_path / "live_app" / "rdd-1"
+    live.mkdir(parents=True)
+    (live / "part-0").write_text("fresh")
+    stale = tmp_path / "stale_app" / "rdd-1"
+    stale.mkdir(parents=True)
+    (stale / "part-0").write_text("old")
+    for p in (stale / "part-0", stale, stale.parent, live, live.parent):
+        os.utime(p, (old, old))
+
+    monkeypatch.setattr(session, "checkpoint_root", lambda: str(tmp_path))
+    session.prune_checkpoints()
+
+    assert (live / "part-0").exists()
+    assert not stale.parent.exists()

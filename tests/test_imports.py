@@ -14,6 +14,7 @@ import pytest
 FIRST_TOUCHES = [
     "flink_estimator_spark.functions",
     "flink_estimator_spark.operators.similarity",
+    "flink_estimator_spark.operators.sequence",
     "flink_estimator_spark.streaming",
     "flink_estimator_spark.plans",
     "flink_estimator_spark.estimator",

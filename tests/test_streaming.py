@@ -406,7 +406,7 @@ def _start_tws(spark, df, ckpt, rows):
     mode the operator schedules perpetual "cleaning up state" batches, so
     NEITHER processAllAvailable NOR availableNow ever signals completion
     — the caller polls a condition and stops the query manually.  State
-    partitions pinned small per the _run_bounded_stream finding (each
+    partitions pinned small per the _run_stream finding (each
     partition instantiates a RocksDB store per batch)."""
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     return (
@@ -566,7 +566,14 @@ def test_ttl_dedup_tws_state_survives_restart(spark, tmp_path, tmp_path_factory)
     rows1: list = []
     q = start(rows1)
     try:
-        assert _tws_wait(q, lambda: len(rows1) == 1), "phase-1 emission"
+        # stop only once the emitting batch is in the commit log: a stop
+        # between the sink and the commit makes the resumed query replay
+        # batch 0 and re-emit A from state it never committed
+        assert _tws_wait(
+            q,
+            lambda: len(rows1) == 1
+            and os.path.exists(os.path.join(ckpt, "commits", "0")),
+        ), "phase-1 emission"
     finally:
         q.stop()
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
@@ -1696,3 +1703,56 @@ def test_lsh_banded_signatures_match_batch_aggregate(spark):
     assert set(got) == set(want)
     mismatched = [k for k in got if got[k] != want[k]]
     assert not mismatched, mismatched[:5]
+
+
+# One gate per mode of the shared stream runner: single pass (symlink
+# staging, availableNow), checkpoint restart (two staged phases), and
+# ProcessingTime polling (until_rows).
+RUNNER_MODES = [
+    "q_stream_dedup_runtime",
+    "q_stream_restart_runtime",
+    "q_stream_tws_ttl_runtime",
+]
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "build_raises"])
+@pytest.mark.parametrize("name", RUNNER_MODES)
+def test_stream_runner_cleans_up(spark, monkeypatch, name, fail):
+    """After a gate's builder returns — or its stream builder raises — the
+    runner leaves no ``stream_runtime_*`` checkpoint, source or staging
+    dir under the checkpoint root, and ``spark.sql.shuffle.partitions``
+    is back to what the caller had."""
+    from flink_estimator_spark.plans import streaming_runtime as sr
+    from flink_estimator_spark.plans.registry import QUERIES
+    from flink_estimator_spark.session import checkpoint_root
+
+    def leftovers():
+        root = checkpoint_root()
+        if not os.path.isdir(root):
+            return set()
+        return {e for e in os.listdir(root) if e.startswith("stream_runtime_")}
+
+    if fail:
+        real = sr._run_stream
+
+        def failing(spark_, sf_dir, build, *args, **kwargs):
+            def boom(make):
+                build(make)
+                raise RuntimeError("planted build failure")
+
+            return real(spark_, sf_dir, boom, *args, **kwargs)
+
+        monkeypatch.setattr(sr, "_run_stream", failing)
+    before = leftovers()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        if fail:
+            with pytest.raises(RuntimeError, match="planted build failure"):
+                QUERIES[name].builder(spark, SF_SMALL)
+        else:
+            assert QUERIES[name].builder(spark, SF_SMALL).count() > 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert leftovers() - before == set()

@@ -21,27 +21,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-_MAT_N = itertools.count()
-
-
-def make_materialize():
-    from pyspark.sql import DataFrame
-
-    def materialize(df: DataFrame) -> DataFrame:
-        spark = df.sparkSession
-        sc = spark.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            sc.setCheckpointDir(os.path.join(
-                repo_root, "spark-warehouse", "_checkpoints", sc.applicationId))
-        base = sc._jsc.sc().getCheckpointDir().get()
-        path = os.path.join(base, f"mat_{next(_MAT_N)}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.schema(df.schema).parquet(path)
-
-    return materialize
-
-
 def run_query(spark, spec, group):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -79,7 +58,7 @@ def main() -> int:
 
     mods = [bpe_mod, dedup_mod, fuzzy_mod, graph_mod, pq_mod, sim_mod, sk_mod]
     orig = helpers_mod.eager_checkpoint
-    mat = make_materialize()
+    mat = helpers_mod.materialize
 
     def set_impl(fn):
         for m in mods:
