@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..plans._helpers import spread, t
+from ..plans._helpers import largest_remainder, spread, t
 from ..plans.registry import query
 
 
@@ -440,31 +440,13 @@ def q_temperature_mix(spark, sf_dir):
     tot = wgt.agg(
         F.sum("w").alias("tw"), F.sum("n_tokens").alias("tn")
     )
-    quota = wgt.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_tokens",
-        "w",
-        "tn",
-        F.expr(f"({_TEMP_BUDGET} * w) DIV tw").alias("base"),
-        F.expr(f"({_TEMP_BUDGET} * w) % tw").alias("rem"),
-    )
-    wall = W.orderBy(F.desc("rem"), "source").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    ranked = quota.select(
-        "source",
-        "n_tokens",
-        "tn",
-        "base",
-        F.row_number().over(W.orderBy(F.desc("rem"), "source")).alias("rr"),
-        (F.lit(_TEMP_BUDGET) - F.sum("base").over(wall)).alias("leftover"),
-    )
-    alloc = F.col("base") + F.when(F.col("rr") <= F.col("leftover"), 1).otherwise(0)
+    quota = wgt.crossJoin(F.broadcast(tot))
     return (
-        ranked.select(
+        largest_remainder(quota, "source", "w", "tw", _TEMP_BUDGET)
+        .select(
             "source",
             "n_tokens",
-            alloc.cast("bigint").alias("alloc_tokens"),
+            F.col("alloc").alias("alloc_tokens"),
             F.expr("n_tokens * 10000 DIV tn").alias("natural_bp"),
         )
         .withColumn(

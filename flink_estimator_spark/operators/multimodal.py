@@ -308,10 +308,11 @@ def phash_candidates(media: DataFrame, max_hamming: int = 7) -> DataFrame:
         raise ValueError(
             f"banding guarantees hamming < {_PHASH_BANDS}; got {max_hamming}"
         )
-    # unpinned: both band-join sides hash-shuffle the SAME (band, key)
-    # projection of the fingerprint stage, so ReusedExchange runs the
-    # Python decode once inside the single action (measured ~equal to a
-    # reliable checkpoint warm, much better cold, zero pins)
+    # unpinned: both band-join sides hash-shuffle the same (band, key)
+    # projection of the fingerprint stage, but only the exchange below the
+    # MapInPandas is reused — the Python decode runs once per join side
+    # (static and AQE-final plans alike; carried as the strict xfail
+    # KNOWN_UDF_DUPLICATES["q_multimodal_phash"] in tests/test_plan_audit.py)
     fp = phash_fingerprints(media)
     bands = fp.select(
         "media_id",

@@ -54,6 +54,24 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
+def _centroid_mean() -> Column:
+    """Per-group mean of ``v`` as ``c``: components floor-quantized to 1e-6
+    and summed as exact BIGINTs, so the mean is order-independent across
+    engines and partitionings (the oracles' ``_KM_MEAN``)."""
+    return (
+        F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint")).cast("double")
+        / F.count("*").cast("double")
+        / F.lit(1_000_000.0)
+    ).alias("c")
+
+
+def _centroid_d2_term() -> Column:
+    """One component's squared distance ``(v - c)^2``, floor-quantized to
+    1e-12 as a BIGINT so its sum is exact (the oracles' ``_KM_TERM``)."""
+    diff = F.col("v") - F.col("c")
+    return F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+
+
 def cosine_topk(
     queries_df: DataFrame,
     candidates_df: DataFrame,
@@ -798,17 +816,9 @@ def q_emb_ivf_ann(spark, sf_dir):
     ).withColumn("v", F.col("v").cast("double"))
     cent = (
         ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+    term = _centroid_d2_term()
     d2 = (
         ex.join(F.broadcast(cent), "pos")
         .groupBy("vec_id", "clabel")
@@ -1210,17 +1220,9 @@ def q_kmeans_assign(spark, sf_dir):
     ).withColumn("v", F.col("v").cast("double"))
     cent = (
         ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+    term = _centroid_d2_term()
     d2 = (
         ex.join(F.broadcast(cent), "pos")
         .groupBy("vec_id", "label", "clabel")
@@ -1271,8 +1273,7 @@ def kmeans_iterate(
     inertias: list[int] = []
     assign = None
     for _ in range(iters):
-        diff = F.col("v") - F.col("c")
-        term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+        term = _centroid_d2_term()
         d2 = (
             vectors.join(F.broadcast(cent), "pos")
             .groupBy("vec_id", "clabel")
@@ -1290,14 +1291,7 @@ def kmeans_iterate(
         cent = (
             vectors.join(assign.select("vec_id", "cluster"), "vec_id")
             .groupBy(F.col("cluster").alias("clabel"), "pos")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                    .cast("double")
-                    / F.count("*").cast("double")
-                    / F.lit(1_000_000.0)
-                ).alias("c")
-            )
+            .agg(_centroid_mean())
         )
     return assign.select("vec_id", "cluster"), inertias
 
@@ -1402,31 +1396,16 @@ def q_kmeans_iterate(spark, sf_dir):
     ).withColumn("v", F.col("v").cast("double"))
     seed = (
         ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
     assign, _inertias = kmeans_iterate(vectors, seed, iters=3)
     # recompute final per-cluster inertia from the last assignment
     final_cent = (
         vectors.join(assign, "vec_id")
         .groupBy(F.col("cluster").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+    term = _centroid_d2_term()
     per_vec = (
         vectors.join(assign, "vec_id")
         .join(
@@ -1492,6 +1471,31 @@ def quantize_int8(vec: Column, mn_arr: Column, mx_arr: Column) -> Column:
         )
 
     return F.transform(vec.cast("array<double>"), one)
+
+
+def _int8_codes(emb: DataFrame) -> DataFrame:
+    """(vec_id, code): every embedding's ``quantize_int8`` code against the
+    corpus bounds, broadcast as one row."""
+    bounds = quantization_bounds(emb)
+    return (
+        spread(emb, "vec_id")
+        .crossJoin(F.broadcast(bounds))
+        .select(
+            "vec_id",
+            quantize_int8(
+                F.col("embedding"), F.col("mn_arr"), F.col("mx_arr")
+            ).alias("code"),
+        )
+    )
+
+
+def _code_d2(a: Column, b: Column) -> Column:
+    """Exact squared L2 distance between two int8 code arrays (BIGINT fold)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
 
 
 _QUANT_SQL_DIM = 64
@@ -1679,14 +1683,7 @@ def label_centroids(e: DataFrame) -> DataFrame:
     ).withColumn("v", F.col("v").cast("double"))
     return (
         ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
 
 
@@ -1700,17 +1697,9 @@ def _quantized_label_assign(spark, sf_dir):
     ).withColumn("v", F.col("v").cast("double"))
     cent = (
         ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            (
-                F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-                .cast("double")
-                / F.count("*").cast("double")
-                / F.lit(1_000_000.0)
-            ).alias("c")
-        )
+        .agg(_centroid_mean())
     )
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+    term = _centroid_d2_term()
     d2 = (
         ex.join(F.broadcast(cent), "pos")
         .groupBy("vec_id", "clabel")
@@ -2085,16 +2074,8 @@ def q_silhouette(spark, sf_dir):
         .select("vec_id", "label", F.posexplode("embedding").alias("pos", "v"))
         .withColumn("v", F.col("v").cast("double"))
     )
-    cent = ex.groupBy(F.col("label").alias("clabel"), "pos").agg(
-        (
-            F.sum(F.floor(F.col("v") * 1_000_000).cast("bigint"))
-            .cast("double")
-            / F.count("*").cast("double")
-            / F.lit(1_000_000.0)
-        ).alias("c")
-    )
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
+    cent = ex.groupBy(F.col("label").alias("clabel"), "pos").agg(_centroid_mean())
+    term = _centroid_d2_term()
     d2 = (
         ex.join(F.broadcast(cent), "pos")
         .groupBy("vec_id", "clabel")
@@ -2280,27 +2261,10 @@ def q_emb_graph_ann(spark, sf_dir):
     NN-descent); the relational build here is the batch-rebuild shape."""
     c, m, b, h, q, k = _GANN_C, _GANN_M, _GANN_B, _GANN_H, _GANN_Q, _GANN_K
     emb = t(spark, sf_dir, "embeddings")
-    bounds = quantization_bounds(emb)
-    coded = (
-        spread(emb, "vec_id")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "vec_id",
-            quantize_int8(
-                F.col("embedding"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("code"),
-        )
-    )
+    coded = _int8_codes(emb)
     # five differently-shaped consumers (seeds, assignment scan, kNN join,
     # hop scoring, brute certificate) — one materialization (§7h)
     coded = eager_checkpoint(coded)
-
-    def qd(a: Column, bcol: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, bcol, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
 
     seeds = F.broadcast(
         coded.filter(F.col("vec_id") < c).select(
@@ -2311,7 +2275,7 @@ def q_emb_graph_ann(spark, sf_dir):
     assign = (
         coded.crossJoin(seeds)
         .select(
-            "vec_id", "code", "scid", qd(F.col("code"), F.col("scode")).alias("sd2")
+            "vec_id", "code", "scid", _code_d2(F.col("code"), F.col("scode")).alias("sd2")
         )
         .withColumn("_rk", F.row_number().over(wv))
         .filter(F.col("_rk") == 1)
@@ -2326,7 +2290,7 @@ def q_emb_graph_ann(spark, sf_dir):
     knn = (
         a_.join(b_, "cid")
         .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", qd(F.col("acode"), F.col("bcode")).alias("d2"))
+        .select("src", "dst", _code_d2(F.col("acode"), F.col("bcode")).alias("d2"))
         .withColumn("_rk", F.row_number().over(wkn))
         .filter(F.col("_rk") <= m)
         .select("src", "dst")
@@ -2357,7 +2321,7 @@ def q_emb_graph_ann(spark, sf_dir):
         scored = (
             cand.join(nodes, "node")
             .join(queries, "query_id")
-            .select("query_id", "node", qd(F.col("ncode"), F.col("qcode")).alias("d2"))
+            .select("query_id", "node", _code_d2(F.col("ncode"), F.col("qcode")).alias("d2"))
         )
         beam = (
             scored.withColumn("_rk", F.row_number().over(wq))
@@ -2381,7 +2345,7 @@ def q_emb_graph_ann(spark, sf_dir):
     brute = (
         nodes.crossJoin(queries)
         .filter(F.col("node") != F.col("query_id"))
-        .select("query_id", "node", qd(F.col("ncode"), F.col("qcode")).alias("d2"))
+        .select("query_id", "node", _code_d2(F.col("ncode"), F.col("qcode")).alias("d2"))
     )
     truth = brute.withColumn(
         "true_rk", F.row_number().over(wq).cast("long")
@@ -2489,33 +2453,16 @@ def q_kcenter_coreset(spark, sf_dir):
     k rounds × one corpus pass; state is one BIGINT per point,
     checkpoint-truncated every other round."""
     emb = t(spark, sf_dir, "embeddings")
-    bounds = quantization_bounds(emb)
-    coded = (
-        spread(emb, "vec_id")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "vec_id",
-            quantize_int8(
-                F.col("embedding"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("code"),
-        )
-    )
+    coded = _int8_codes(emb)
     # consumed every round (center lookup + distance fold) — materialize once
     coded = eager_checkpoint(coded)
-
-    def qd(a: Column, bcol: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, bcol, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
 
     c0 = coded.agg(F.min("vec_id")).collect()[0][0]
     center_code = F.broadcast(
         coded.filter(F.col("vec_id") == c0).select(F.col("code").alias("ccode"))
     )
     mind = coded.crossJoin(center_code).select(
-        "vec_id", "code", qd(F.col("code"), F.col("ccode")).alias("mind")
+        "vec_id", "code", _code_d2(F.col("code"), F.col("ccode")).alias("mind")
     )
     rows: list[tuple[int, int, int]] = []
     center = c0
@@ -2533,7 +2480,7 @@ def q_kcenter_coreset(spark, sf_dir):
         mind = mind.crossJoin(ncode).select(
             "vec_id",
             "code",
-            F.least(F.col("mind"), qd(F.col("code"), F.col("ccode"))).alias("mind"),
+            F.least(F.col("mind"), _code_d2(F.col("code"), F.col("ccode"))).alias("mind"),
         )
         if s % 2 == 1:  # truncate the least()-fold lineage every other round
             mind = eager_checkpoint(mind)
@@ -2615,25 +2562,8 @@ def q_mutual_knn_pairs(spark, sf_dir):
     relation on the reversed key — linear in edges."""
     m = _MKNN_M
     emb = t(spark, sf_dir, "embeddings")
-    bounds = quantization_bounds(emb)
-    coded = (
-        spread(emb, "vec_id")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "vec_id",
-            quantize_int8(
-                F.col("embedding"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("code"),
-        )
-    )
+    coded = _int8_codes(emb)
     coded = eager_checkpoint(coded)  # seeds + assignment + kNN sides
-
-    def qd(a: Column, bcol: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, bcol, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
 
     seeds = F.broadcast(
         coded.filter(F.col("vec_id") < _GANN_C).select(
@@ -2643,7 +2573,7 @@ def q_mutual_knn_pairs(spark, sf_dir):
     wv = W.partitionBy("vec_id").orderBy("sd2", "scid")
     assign = (
         coded.crossJoin(seeds)
-        .select("vec_id", "code", "scid", qd(F.col("code"), F.col("scode")).alias("sd2"))
+        .select("vec_id", "code", "scid", _code_d2(F.col("code"), F.col("scode")).alias("sd2"))
         .withColumn("_rk", F.row_number().over(wv))
         .filter(F.col("_rk") == 1)
         .select("vec_id", "code", F.col("scid").alias("cid"))
@@ -2661,7 +2591,7 @@ def q_mutual_knn_pairs(spark, sf_dir):
     knn = materialize(
         a_.join(b_, "cid")
         .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", qd(F.col("acode"), F.col("bcode")).alias("d2"))
+        .select("src", "dst", _code_d2(F.col("acode"), F.col("bcode")).alias("d2"))
         .withColumn("rk", F.row_number().over(wkn).cast("bigint"))
         .filter(F.col("rk") <= m)
     )
@@ -2767,17 +2697,7 @@ def q_emb_matryoshka(spark, sf_dir):
     pairs (a pair counts for D when it makes top-5 under BOTH the D-dim
     prefix and the full-width metric)."""
     emb = t(spark, sf_dir, "embeddings")
-    bounds = quantization_bounds(emb)
-    coded = (
-        spread(emb, "vec_id")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "vec_id",
-            quantize_int8(
-                F.col("embedding"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("code"),
-        )
-    )
+    coded = _int8_codes(emb)
     coded = eager_checkpoint(coded)  # shared query/node sides
     queries = F.broadcast(
         coded.filter(F.col("vec_id") < _MRL_Q).select(

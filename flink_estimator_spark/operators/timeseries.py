@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..plans._helpers import dec, t
+from ..plans._helpers import daily_revenue_week, dec, t
 from ..plans.registry import query
 
 
@@ -585,16 +585,8 @@ def q_ts_pattern_match(spark, sf_dir):
     drift.  The oracle re-derives each window relationally (frame
     self-join + pattern-index join) — an independent formulation of the
     same arithmetic."""
-    o = t(spark, sf_dir, "orders")
-    daily = o.groupBy("o_orderdate").agg(
-        (F.sum(dec("o_totalprice")) * 100).cast("bigint").alias("rev_cents")
-    )
-    w = W.orderBy("o_orderdate").rowsBetween(-6, 0)
     pat = F.array(*[F.lit(v).cast("bigint") for v in _TS_PATTERN])
-    framed = daily.select(
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("day_us"),
-        F.collect_list("rev_cents").over(w).alias("arr"),
-    ).filter(F.size("arr") == 7)
+    framed = daily_revenue_week(spark, sf_dir).filter(F.size("arr") == 7)
     d2 = F.expr(
         "aggregate(zip_with(arr, pat, (x, y) -> "
         "CAST(x - y AS DECIMAL(19,0)) * CAST(x - y AS DECIMAL(19,0))), "

@@ -12,6 +12,7 @@ import itertools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..session import ensure_checkpoint_dir
@@ -41,6 +42,49 @@ REVENUE_SQL = (
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
 )
 
+
+
+def daily_revenue_week(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day_us, arr): each order date as epoch micros and the ``rev_cents``
+    (daily revenue in integer cents) of its trailing 7-row frame.  The frame
+    is a global sort over one row per calendar day (~2.4k rows at any SF)."""
+    o = t(spark, sf_dir, "orders")
+    daily = o.groupBy("o_orderdate").agg(
+        (F.sum(dec("o_totalprice")) * 100).cast("bigint").alias("rev_cents")
+    )
+    w = W.orderBy("o_orderdate").rowsBetween(-6, 0)
+    return daily.select(
+        # o_orderdate is TIMESTAMP_NTZ; the UTC session timezone makes the
+        # cast an identity re-tag, matching the oracles' epoch_us
+        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("day_us"),
+        F.collect_list("rev_cents").over(w).alias("arr"),
+    )
+
+
+def largest_remainder(
+    df: DataFrame, key: str, weight: str, total: str, budget: int
+) -> DataFrame:
+    """``df`` plus ``alloc``: ``budget`` units apportioned over its rows in
+    proportion to ``weight`` out of the ``total`` column, by the
+    largest-remainder method.  Each row gets floor(budget * share), then the
+    leftover units go one each to the largest remainders (ties by ``key``),
+    so the allocations sum to ``budget`` exactly in integer arithmetic.  The
+    remainder rank is a global window, so ``df`` must be a handful of rows."""
+    quota = df.select(
+        "*",
+        F.expr(f"({budget} * {weight}) DIV {total}").alias("base"),
+        F.expr(f"({budget} * {weight}) % {total}").alias("rem"),
+    )
+    wall = W.orderBy(F.desc("rem"), key).rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing
+    )
+    ranked = quota.select(
+        "*",
+        F.row_number().over(W.orderBy(F.desc("rem"), key)).alias("rr"),
+        (F.lit(budget) - F.sum("base").over(wall)).alias("leftover"),
+    )
+    alloc = F.col("base") + F.when(F.col("rr") <= F.col("leftover"), 1).otherwise(0)
+    return ranked.select(*df.columns, alloc.cast("bigint").alias("alloc"))
 
 def cep_chain_oracle(where: str = "") -> str:
     """DuckDB oracle of the four-step CEP chain (signup -> view -> click ->

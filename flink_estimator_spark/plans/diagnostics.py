@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ._helpers import dec, t
+from ._helpers import daily_revenue_week, dec, largest_remainder, t
 from .registry import query
 
 
@@ -357,16 +357,8 @@ def q_rolling_median(spark, sf_dir):
     is legitimate here and only here: the input is ONE ROW PER CALENDAR DAY
     (bounded ~2.4k forever, invariant to SF — the daily aggregate upstream
     already did the distributed work)."""
-    o = t(spark, sf_dir, "orders")
-    daily = o.groupBy("o_orderdate").agg(
-        (F.sum(dec("o_totalprice")) * 100).cast("bigint").alias("rev_cents")
-    )
-    w = W.orderBy("o_orderdate").rowsBetween(-6, 0)
-    framed = daily.select(
-        # o_orderdate is TIMESTAMP_NTZ; the UTC session timezone makes the
-        # cast an identity re-tag, matching the oracle's epoch_us
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("day_us"),
-        F.array_sort(F.collect_list("rev_cents").over(w)).alias("arr"),
+    framed = daily_revenue_week(spark, sf_dir).select(
+        "day_us", F.array_sort("arr").alias("arr")
     )
     n = F.size("arr")
     return framed.select(
@@ -900,33 +892,10 @@ def q_budget_allocation(spark, sf_dir):
         .agg((F.sum(dec("o_totalprice")) * 100).cast("bigint").alias("rev_cents"))
     )
     tot = rev.agg(F.sum("rev_cents").alias("total"))
-    quota = rev.crossJoin(F.broadcast(tot)).select(
-        "segment",
-        "rev_cents",
-        F.expr(f"({_ALLOC_BUDGET} * rev_cents) DIV total").alias("base"),
-        F.expr(f"({_ALLOC_BUDGET} * rev_cents) % total").alias("rem"),
-    )
-    wall = W.orderBy(F.desc("rem"), "segment").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    ranked = quota.select(
-        "segment",
-        "rev_cents",
-        "base",
-        F.row_number().over(W.orderBy(F.desc("rem"), "segment")).alias("rr"),
-        (F.lit(_ALLOC_BUDGET) - F.sum("base").over(wall)).alias("leftover"),
-    )
+    quota = rev.crossJoin(F.broadcast(tot))
     return (
-        ranked.select(
-            "segment",
-            "rev_cents",
-            (
-                F.col("base")
-                + F.when(F.col("rr") <= F.col("leftover"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("allocation"),
-        )
+        largest_remainder(quota, "segment", "rev_cents", "total", _ALLOC_BUDGET)
+        .select("segment", "rev_cents", F.col("alloc").alias("allocation"))
         .orderBy("segment")
     )
 
