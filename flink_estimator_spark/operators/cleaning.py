@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..plans._helpers import spread, t
+from ..plans._helpers import spread, t, word_ngrams
 from ..plans.registry import query
 from .dedup import connected_components, jaccard_pairs
 
@@ -353,12 +353,7 @@ def q_ngram_decontamination(spark, sf_dir):
     tk = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     grams = spread(d, "doc_id").select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(tk) - 4, F.lit(0))),
-                lambda i: F.array_join(F.slice(tk, i, 5), " "),
-            )
-        ).alias("g"),
+        F.explode(word_ngrams(tk, 5)).alias("g"),
     )
     bench_g = grams.filter(F.col("doc_id") < 20).distinct()
     corpus_g = (

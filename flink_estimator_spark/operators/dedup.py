@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import eager_checkpoint, materialize, spread, t
+from ..plans._helpers import eager_checkpoint, materialize, spread, t, word_ngrams
 from ..plans.registry import query
 from .textstats import fingerprint
 
@@ -82,11 +82,7 @@ def shingle_df(
     # single-split scans would shingle in one task; spread first (see _helpers)
     df = spread(df, id_col)
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    k = F.size(words) - F.lit(n - 1)  # number of n-grams (may be <= 0)
-    grams = F.when(
-        k >= 1,
-        F.transform(F.sequence(F.lit(1), k), lambda i: F.concat_ws(" ", F.slice(words, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, n)
     sh_hash = (
         md5_word(F.col("_shingle_str"), 1, 15)
         if portable
@@ -1294,14 +1290,7 @@ def winnow_selected(d: DataFrame) -> DataFrame:
     from pyspark.sql import Window as W
 
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    k = F.size(words) - F.lit(_WINNOW_K - 1)
-    grams = F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(words, i, _WINNOW_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, _WINNOW_K)
     ex = (
         spread(d, "doc_id")
         .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
@@ -1535,14 +1524,7 @@ def longest_shared_runs(
     from pyspark.sql import Window as W
 
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n_gr = F.size(words) - F.lit(k - 1)
-    grams = F.when(
-        n_gr >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_gr),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, k)
     sh = (
         spread(docs, "doc_id")
         .select("doc_id", F.posexplode(grams).alias("pos0", "g"))
@@ -1593,14 +1575,7 @@ def _run_removals(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     from pyspark.sql import Window as W
 
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n_gr = F.size(words) - F.lit(k - 1)
-    grams = F.when(
-        n_gr >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_gr),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, k)
     sh = (
         spread(docs, "doc_id")
         .select("doc_id", F.posexplode(grams).alias("pos0", "g"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..plans._helpers import spread, t
+from ..plans._helpers import spread, t, word_ngrams
 from ..plans.registry import query
 
 _BM25_TERMS = ("spark", "merge", "window")
@@ -270,14 +270,7 @@ def q_tfidf_cosine_pairs(spark, sf_dir):
     normalize touches doubles (floor-quantized 1e-6)."""
     d = t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    k = F.size(words) - F.lit(4)
-    grams = F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(words, i, 5)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, 5)
     tf = (
         spread(d, "doc_id")
         .select("doc_id", F.explode(grams).alias("term"))

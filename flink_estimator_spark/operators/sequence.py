@@ -2,8 +2,9 @@
 
 The reference's "complex" workload class is pattern matching over event
 streams (`/root/reference/src/templates/estimation.html:231-245`).  Beyond
-the fixed 2-/3-step CEP duals, this operator matches an ARBITRARY k-step
-pattern declaratively:
+the fixed two-step funnel, this operator matches an ARBITRARY k-step
+pattern declaratively (``q_cep_three_step`` and ``q_cep_four_step`` both
+compile here):
 
     match_sequence(events, steps=[A, B, C, D], within_s=..., absent=E)
 
@@ -97,13 +98,6 @@ def match_sequence(
         )
         .distinct()
     )
-
-
-def _step_sql(i: int, etype: str, prev: str | None) -> str:
-    cond = f"event_type = '{etype}'"
-    if prev is not None:
-        cond += f" AND ts > {prev}"
-    return f"min(CASE WHEN {cond} THEN ts END) OVER (PARTITION BY user_id)"
 
 
 @query(

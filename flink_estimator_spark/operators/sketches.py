@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import materialize, spread, t
+from ..plans._helpers import materialize, spread, t, word_ngrams
 from ..plans.registry import query
 from .dedup import md5_word
 
@@ -315,6 +315,104 @@ def kmv_sketches(sh: DataFrame, key: str = "source", k: int = K_KMV) -> DataFram
     return lvl1.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") <= k)
 
 
+def _ppm(num: str, den: str) -> Column:
+    """``num * 1e6 DIV den`` as BIGINT, the product through DECIMAL(38,0):
+    an exact intersection is corpus-sized (~1e13 shingles at 100 TB) and an
+    estimated one reaches ~k*h/theta_min (~1.8e13 at theta_min ~ 247, the
+    stored falsifying example), so the *1e6 product overflows BIGINT; the
+    quotient itself is bounded (est_union >= est_inter*(k-1)/k => ppm <=
+    ~1.14e6).  The DuckDB oracles route the same products through HUGEINT."""
+    return F.expr(f"CAST((CAST({num} AS DECIMAL(38,0)) * 1000000) DIV {den} AS BIGINT)")
+
+
+def kmv_theta(hs: str, k: int, hsp: int) -> Column:
+    """Theta of the sorted KMV array column ``hs``: its k-th value once
+    saturated, else the whole hash space ``hsp``."""
+    return F.when(F.size(hs) == k, F.element_at(hs, k)).otherwise(F.lit(hsp))
+
+
+def kmv_est(hs: str, k: int, hsp: int) -> Column:
+    """Saturation-aware distinct estimate of the sorted KMV array column
+    ``hs``: its size while below k, else (k-1)·hsp DIV its k-th value."""
+    return F.when(F.size(hs) < k, F.size(hs).cast("bigint")).otherwise(
+        F.expr(f"CAST(({k - 1} * {hsp}) DIV element_at({hs}, {k}) AS BIGINT)")
+    )
+
+
+def kmv_union(arrays: Column, k: int) -> Column:
+    """The union sketch of an array of sorted KMV arrays: the k smallest
+    distinct values of their concatenation."""
+    return F.slice(F.array_sort(F.array_distinct(F.flatten(arrays))), 1, k)
+
+
+def theta_pairs(sk: DataFrame, keys: tuple[str, ...], k: int, hsp: int) -> DataFrame:
+    """Theta pair algebra over sketch objects.  ``sk`` holds one
+    (keys…, source, hs) row per sketch, ``hs`` the sorted k smallest
+    distinct hash values.  Returns, for every source pair with equal keys
+    (source_a < source_b): keys…, source_a, source_b, nk_a, nk_b, est_a,
+    est_b, est_union, est_inter, jacc_est_ppm.
+
+    Everything runs as array expressions in one broadcast self-join of the
+    sketch table: the retained intersection is the array intersect below
+    the pair's theta_min, the union sketch the k smallest of the merged
+    arrays (see ``theta_setops`` for why this form)."""
+    est = sk.select(
+        *keys,
+        "source",
+        "hs",
+        F.size("hs").cast("bigint").alias("nk"),
+        kmv_theta("hs", k, hsp).alias("theta"),
+        kmv_est("hs", k, hsp).alias("est_n"),
+    )
+
+    def side(s: str, key_names: list[str]) -> DataFrame:
+        return est.select(
+            *[F.col(c).alias(n) for c, n in zip(keys, key_names)],
+            F.col("source").alias(f"source_{s}"),
+            F.col("hs").alias(f"_hs_{s}"),
+            F.col("nk").alias(f"nk_{s}"),
+            F.col("theta").alias(f"_th_{s}"),
+            F.col("est_n").alias(f"est_{s}"),
+        )
+
+    b_keys = [f"_{c}_b" for c in keys]
+    cond = F.col("source_a") < F.col("source_b")
+    for c, b in zip(keys, b_keys):
+        cond = cond & (F.col(c) == F.col(b))
+    return (
+        side("a", list(keys))
+        .join(F.broadcast(side("b", b_keys)), cond)
+        .withColumn("theta_min", F.least("_th_a", "_th_b"))
+        # retained = |A_sk ∩ B_sk| below the pair theta — array intersect
+        # of the two (distinct-valued) sketch arrays
+        .withColumn(
+            "n_ret",
+            F.size(
+                F.filter(
+                    F.array_intersect(F.col("_hs_a"), F.col("_hs_b")),
+                    lambda x: x < F.col("theta_min"),
+                )
+            ).cast("bigint"),
+        )
+        .withColumn("_mu", kmv_union(F.array("_hs_a", "_hs_b"), k))
+        .withColumn("est_union", kmv_est("_mu", k, hsp))
+        .withColumn("est_inter", F.expr(f"CAST((n_ret * {hsp}) DIV theta_min AS BIGINT)"))
+        .withColumn("jacc_est_ppm", _ppm("est_inter", "est_union"))
+        .select(
+            *keys,
+            "source_a",
+            "source_b",
+            "nk_a",
+            "nk_b",
+            "est_a",
+            "est_b",
+            "est_union",
+            "est_inter",
+            "jacc_est_ppm",
+        )
+    )
+
+
 @query(
     "q_theta_setops",
     oracle=_theta_oracle(),
@@ -344,11 +442,7 @@ def q_theta_setops(spark, sf_dir):
     sketches are the approximate-analytics extension surface."""
     docs = spread(t(spark, sf_dir, "documents"), "doc_id")
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    ng = F.size(words) - F.lit(4)
-    grams = F.when(
-        ng >= 1,
-        F.transform(F.sequence(F.lit(1), ng), lambda i: F.concat_ws(" ", F.slice(words, i, 5))),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, 5)
     sh = (
         docs.select("source", F.explode(grams).alias("_s"))
         .select("source", md5_word(F.col("_s"), 1, 13).alias("h"))
@@ -375,7 +469,8 @@ def theta_setops(sh: DataFrame, k: int = K_KMV, hsp: int = _H_SPACE) -> DataFram
     values leave the tournament as ONE sorted array row, and all pair
     algebra — retained intersection under theta_min, union k-th smallest,
     the estimators — runs as array expressions inside a single broadcast
-    self-join of the |sources|-row sketch table.  That is the natural
+    self-join of the |sources|-row sketch table (``theta_pairs``, which the
+    windowed streaming gates run per window).  That is the natural
     physical form of sketching (pair ops on sketch *objects*, not
     re-shuffled sketch rows) and removes the h-keyed sketch self-join,
     the union distinct, and the union rank window the r9 plan paid —
@@ -401,59 +496,7 @@ def theta_setops(sh: DataFrame, k: int = K_KMV, hsp: int = _H_SPACE) -> DataFram
     sk = lvl1.groupBy("source").agg(
         F.slice(F.sort_array(F.collect_list("h")), 1, k).alias("hs")
     )
-    est = sk.select(
-        "source",
-        "hs",
-        F.when(F.size("hs") == k, F.element_at("hs", k))
-        .otherwise(F.lit(hsp))
-        .alias("theta"),
-        F.when(F.size("hs") < k, F.size("hs").cast("bigint"))
-        .otherwise(
-            F.expr(f"CAST(({k - 1} * {hsp}) DIV element_at(hs, {k}) AS BIGINT)")
-        )
-        .alias("est_n"),
-    )
-    merged = F.array_sort(F.array_distinct(F.concat(F.col("_hs_a"), F.col("_hs_b"))))
-    pairs = (
-        est.select(
-            F.col("source").alias("source_a"),
-            F.col("hs").alias("_hs_a"),
-            F.col("theta").alias("_th_a"),
-            F.col("est_n").alias("est_a"),
-        )
-        .join(
-            F.broadcast(
-                est.select(
-                    F.col("source").alias("source_b"),
-                    F.col("hs").alias("_hs_b"),
-                    F.col("theta").alias("_th_b"),
-                    F.col("est_n").alias("est_b"),
-                )
-            ),
-            F.col("source_a") < F.col("source_b"),
-        )
-        .withColumn("theta_min", F.least("_th_a", "_th_b"))
-        # retained = |A_sk ∩ B_sk| below the pair theta — array intersect
-        # of the two (distinct-valued) sketch arrays
-        .withColumn(
-            "n_ret",
-            F.size(
-                F.filter(
-                    F.array_intersect(F.col("_hs_a"), F.col("_hs_b")),
-                    lambda x: x < F.col("theta_min"),
-                )
-            ).cast("bigint"),
-        )
-        # union sketch = k smallest of the merged distinct values
-        .withColumn("_mu", merged)
-        .withColumn(
-            "est_union",
-            F.when(F.size("_mu") < k, F.size("_mu").cast("bigint")).otherwise(
-                F.expr(f"CAST(({k - 1} * {hsp}) DIV element_at(_mu, {k}) AS BIGINT)")
-            ),
-        )
-        .drop("_hs_a", "_hs_b", "_mu")
-    )
+    pairs = theta_pairs(sk, (), k, hsp)
 
     sha = sh.select(F.col("source").alias("source_a"), "h")
     shb = sh.select(F.col("source").alias("source_b"), "h")
@@ -475,27 +518,7 @@ def theta_setops(sh: DataFrame, k: int = K_KMV, hsp: int = _H_SPACE) -> DataFram
             "exact_union",
             (F.col("n_exact_a") + F.col("n_exact_b") - F.col("exact_inter")).cast("bigint"),
         )
-        .withColumn("est_inter", F.expr(f"CAST((n_ret * {hsp}) DIV theta_min AS BIGINT)"))
-        # ppm products through DECIMAL(38,0): exact_inter is corpus-sized
-        # (~1e13 shingles at 100 TB) and est_inter reaches ~k*h/theta_min
-        # (~1.8e13 at theta_min ~ 247, the stored falsifying example), so
-        # either *1e6 product overflows BIGINT; the quotient itself is
-        # bounded (est_union >= est_inter*(k-1)/k => ppm <= ~1.14e6).
-        # DuckDB oracle routes the same products through HUGEINT.
-        .withColumn(
-            "jacc_exact_ppm",
-            F.expr(
-                "CAST((CAST(exact_inter AS DECIMAL(38,0)) * 1000000)"
-                " DIV exact_union AS BIGINT)"
-            ),
-        )
-        .withColumn(
-            "jacc_est_ppm",
-            F.expr(
-                "CAST((CAST(est_inter AS DECIMAL(38,0)) * 1000000)"
-                " DIV est_union AS BIGINT)"
-            ),
-        )
+        .withColumn("jacc_exact_ppm", _ppm("exact_inter", "exact_union"))
     )
     return out.select(
         "source_a",

@@ -9,10 +9,10 @@ with a DuckDB oracle (identical expression semantics in both engines).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..plans._helpers import spread, t
+from ..plans._helpers import spread, t, word_ngrams
 from ..plans.registry import query
 
 # Tiny stopword inventories for the language heuristic.  The guess is a
@@ -81,16 +81,6 @@ def fingerprint(col: str = "text") -> Column:
     (the exact-dedup key)."""
     c = F.col(col)
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
-
-
-def with_text_stats(df: DataFrame, col: str = "text") -> DataFrame:
-    """Attach all text-analysis columns to a document DataFrame."""
-    out = df
-    for name, expr in quality_columns(col).items():
-        out = out.withColumn(name, expr)
-    return out.withColumn("lang_guess", lang_guess(col)).withColumn(
-        "fingerprint", fingerprint(col)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -628,14 +618,7 @@ def q_repeated_ngrams(spark, sf_dir):
     partial-combined; only (doc, gram, count) rides the shuffle."""
     d = t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    k = F.size(words) - F.lit(2)
-    grams = F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(words, i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, 3)
     c = (
         spread(d, "doc_id")
         .select("doc_id", F.explode(grams).alias("g"))

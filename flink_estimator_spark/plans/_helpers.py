@@ -210,3 +210,15 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, F.col(key))
+
+
+def word_ngrams(words: Column, n: int) -> Column:
+    """The word n-grams of the token array ``words``, in order, each joined
+    with single spaces; empty when there are fewer than ``n`` tokens (the
+    guard keeps ``sequence`` from counting down and ``slice`` from seeing
+    index 0)."""
+    k = F.size(words) - F.lit(n - 1)
+    return F.when(
+        k >= 1,
+        F.transform(F.sequence(F.lit(1), k), lambda i: F.concat_ws(" ", F.slice(words, i, n))),
+    ).otherwise(F.array().cast("array<string>"))

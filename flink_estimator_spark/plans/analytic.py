@@ -602,58 +602,28 @@ def q_cep_three_step(spark, sf_dir):
     class, estimation.html:231-245): earliest signup -> first later view ->
     first later purchase, the whole chain within 2 h of the signup, with NO
     error event strictly between signup and purchase.  Earliest-match
-    semantics (one attempt per user), so the pattern is four chained
-    partition-only window aggregates — one shuffle on user_id, no sort
-    window, no self-join.  Batch shadow of streaming.cep.three_step_matches."""
-    ev = t(spark, sf_dir, "events")
-    wu = W.partitionBy("user_id")
-    staged = (
-        ev.withColumn(
-            "s_ts", F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).over(wu)
-        )
-        .withColumn(
-            "v_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "view") & (F.col("ts") > F.col("s_ts")),
-                    F.col("ts"),
-                )
-            ).over(wu),
-        )
-        .withColumn(
-            "p_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("ts") > F.col("v_ts")),
-                    F.col("ts"),
-                )
-            ).over(wu),
-        )
-        .withColumn(
-            "n_err",
-            F.sum(
-                F.when(
-                    (F.col("event_type") == "error")
-                    & (F.col("ts") > F.col("s_ts"))
-                    & (F.col("ts") < F.col("p_ts")),
-                    1,
-                ).otherwise(0)
-            ).over(wu),
-        )
-    )
+    semantics (one attempt per user), compiled by the k-step
+    ``match_sequence`` to four chained partition-only window aggregates —
+    one shuffle on user_id, no sort window, no self-join.  Its streaming
+    dual is ``streaming.cep.sequence_matches`` with the same steps."""
+    # function-local: operators.sequence imports the plans package, so a
+    # module-level import breaks it as a first touch (tests/test_imports.py)
+    from ..operators.sequence import match_sequence
+
+    et = F.col("event_type")
     return (
-        staged.filter(
-            F.col("p_ts").isNotNull()
-            & (F.col("p_ts").cast("double") - F.col("s_ts").cast("double") <= 7200)
-            & (F.col("n_err") == 0)
+        match_sequence(
+            t(spark, sf_dir, "events"),
+            steps=[et == "signup", et == "view", et == "purchase"],
+            within_s=7200,
+            absent=et == "error",
         )
         .select(
             "user_id",
-            F.unix_micros("s_ts").alias("signup_us"),
-            F.unix_micros("v_ts").alias("view_us"),
-            F.unix_micros("p_ts").alias("purchase_us"),
+            F.col("t0_us").alias("signup_us"),
+            F.col("t1_us").alias("view_us"),
+            F.col("t2_us").alias("purchase_us"),
         )
-        .distinct()
         .orderBy("user_id")
     )
 

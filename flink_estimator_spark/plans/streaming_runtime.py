@@ -136,6 +136,15 @@ def _batches_rows(batches):
     return [r for _key, tbl in batches for r in tbl.to_pylist()]
 
 
+def _decided_cutoff_s(spark, sf_dir, margin_s):
+    """The last window start whose outcome the bounded stream has decided:
+    the fixture's max event second minus ``margin_s`` (window length +
+    watermark delay + timer slack, mirrored literally in each oracle)."""
+    ev = t(spark, sf_dir, "events")
+    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
+    return max_s - margin_s
+
+
 def _assert_single_batch(batches, why):
     """Fail loudly unless every emission came from ONE micro-batch.  Gates
     whose operator orders rows only WITHIN a batch match the oracle's
@@ -458,12 +467,11 @@ _VIEW_PURCHASE_JOIN_ORACLE = """
     """
 
 
-def _view_purchase_join_build(make):
-    """views joined to same-user purchases within the following 60 minutes
-    — the interval-join plan shared by the single-run join gate and the
-    join-restart gate (identical by construction, so the restart gate
-    exercises recovery of exactly the state machine the single-run gate
-    certifies)."""
+def _view_purchase_joined(make, watermark, how):
+    """Views joined (``how``) to same-user purchases within the following
+    60 minutes, both sides watermarked by ``watermark`` — the interval-join
+    state machine behind the inner and left-outer join gates; each gate
+    projects its own columns."""
     v = (
         make()
         .filter(F.col("event_type") == "view")
@@ -472,7 +480,7 @@ def _view_purchase_join_build(make):
             F.col("user_id").alias("v_user"),
             F.col("ts").alias("v_ts"),
         )
-        .withWatermark("v_ts", "2 hours")
+        .withWatermark("v_ts", watermark)
     )
     p = (
         make()
@@ -482,7 +490,7 @@ def _view_purchase_join_build(make):
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("p_ts"),
         )
-        .withWatermark("p_ts", "2 hours")
+        .withWatermark("p_ts", watermark)
     )
     return v.join(
         p,
@@ -490,7 +498,16 @@ def _view_purchase_join_build(make):
             "v_user = p_user AND p_ts >= v_ts"
             " AND p_ts <= v_ts + INTERVAL 60 MINUTES"
         ),
-    ).select(
+        how,
+    )
+
+
+def _view_purchase_join_build(make):
+    """The inner interval join shared by the single-run join gate and the
+    join-restart gate (identical by construction, so the restart gate
+    exercises recovery of exactly the state machine the single-run gate
+    certifies)."""
+    return _view_purchase_joined(make, "2 hours", "inner").select(
         "view_id",
         F.col("purchase_id"),
         F.col("v_user").alias("user_id"),
@@ -864,34 +881,7 @@ def q_stream_outer_join_runtime(spark, sf_dir):
     watermark horizon, keyed by user."""
 
     def build(make):
-        v = (
-            make()
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "30 minutes")
-        )
-        p = (
-            make()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "30 minutes")
-        )
-        return v.join(
-            p,
-            F.expr(
-                "v_user = p_user AND p_ts >= v_ts"
-                " AND p_ts <= v_ts + INTERVAL 60 MINUTES"
-            ),
-            "left_outer",
-        ).select(
+        return _view_purchase_joined(make, "30 minutes", "left_outer").select(
             "view_id",
             F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
             F.col("v_user").alias("user_id"),
@@ -1107,11 +1097,9 @@ def q_stream_topn_runtime(spark, sf_dir):
         lambda make: window_topn(make(), watermark="30 minutes", window_s=win_s),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
     # decided-region cutoff: window end (+3600) + watermark delay (1800) +
     # margin (60) — mirrored literally in the oracle's `win_start + 5460`
-    cutoff = max_s - 1800 - 60 - win_s
+    cutoff = _decided_cutoff_s(spark, sf_dir, 1800 + 60 + win_s)
     return (
         _batches_df(spark, batches, schema)
         .filter(F.col("win_start") <= F.lit(cutoff))
@@ -1180,9 +1168,7 @@ def q_stream_cms_runtime(spark, sf_dir):
         ),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - 1800 - 60 - win_s
+    cutoff = _decided_cutoff_s(spark, sf_dir, 1800 + 60 + win_s)
     return (
         _batches_df(spark, batches, schema)
         .filter(F.col("win_start") <= F.lit(cutoff))
@@ -1275,9 +1261,8 @@ def q_stream_chained_agg_runtime(spark, sf_dir):
     batches, schema = _run_stream(
         spark, sf_dir, build, output_mode="append"
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - 1800 - 660 - 3600  # delay + (inner window + margin) + hour
+    # delay + (inner window + margin) + hour
+    cutoff = _decided_cutoff_s(spark, sf_dir, 1800 + 660 + 3600)
     return (
         _batches_df(spark, batches, schema)
         .filter(F.col("hour_start") <= F.lit(cutoff))
@@ -1549,9 +1534,7 @@ def q_stream_tws_topn_runtime(spark, sf_dir):
         ),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - 1800 - 60 - win_s
+    cutoff = _decided_cutoff_s(spark, sf_dir, 1800 + 60 + win_s)
     return (
         _batches_df(spark, batches, schema)
         .filter(F.col("win_start") <= F.lit(cutoff))
@@ -1677,6 +1660,7 @@ def q_stream_kmv_runtime(spark, sf_dir):
     The DuckDB oracle rebuilds every sketch from raw events with the
     same md5 arithmetic.  Decided-region restriction is the timer gates'
     margin pattern (win_end + delay + 60 s, mirrored as ws + 5460)."""
+    from ..operators.sketches import kmv_est, kmv_theta, kmv_union
     from ..streaming.sketches import KMV_K, windowed_kmv
 
     win_s, k, hsp = 3600, KMV_K, 1 << 52
@@ -1686,38 +1670,24 @@ def q_stream_kmv_runtime(spark, sf_dir):
         lambda make: windowed_kmv(make(), watermark="30 minutes", window_s=win_s, k=k),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - 1800 - 60 - win_s
-    emitted = _batches_df(spark, batches, schema).filter(
-        F.col("win_start") <= F.lit(cutoff)
+    cutoff = _decided_cutoff_s(spark, sf_dir, 1800 + 60 + win_s)
+    per = (
+        _batches_df(spark, batches, schema)
+        .filter(F.col("win_start") <= F.lit(cutoff))
+        .groupBy("win_start")
+        .agg(F.sort_array(F.collect_list("h")).alias("hs"))
     )
-    per = emitted.groupBy("win_start").agg(
-        F.count("*").alias("nk"),
-        F.max(F.when(F.col("rn") == k, F.col("h"))).alias("_kth"),
-    ).select(
-        "win_start",
-        "nk",
-        F.when(F.col("nk") == k, F.col("_kth")).otherwise(F.lit(hsp)).alias("theta"),
-    )
-    mk = emitted.select("h").distinct().orderBy("h").limit(k)
-    merged = mk.agg(
+    merged = per.agg(
         F.lit(-1).cast("bigint").alias("win_start"),
-        F.count("*").alias("nk"),
-        F.when(F.count("*") == k, F.max("h")).otherwise(F.lit(hsp)).alias("theta"),
-    )
-    est = (
-        F.when(F.col("nk") < k, F.col("nk").cast("bigint"))
-        .otherwise(F.expr(f"CAST(({k - 1} * {hsp}) DIV theta AS BIGINT)"))
-        .alias("est_distinct")
+        kmv_union(F.collect_list("hs"), k).alias("hs"),
     )
     return (
         per.unionByName(merged)
         .select(
             "win_start",
-            F.col("nk").cast("bigint").alias("nk"),
-            F.col("theta").cast("bigint").alias("theta"),
-            est,
+            F.size("hs").cast("bigint").alias("nk"),
+            kmv_theta("hs", k, hsp).alias("theta"),
+            kmv_est("hs", k, hsp).alias("est_distinct"),
         )
         .orderBy("win_start")
     )
@@ -1832,9 +1802,9 @@ def _theta_pairs_frame(spark, sf_dir):
     est_inter, jacc_est_ppm) — the shared core of the pair gate and the
     threshold-curve gate (both run the stream; the curve only adds a
     fan-out over literal thresholds on the 290-row result)."""
+    from ..operators.sketches import theta_pairs
     from ..streaming.sketches import windowed_kmv
 
-    k, hsp = _THP_K, _THP_H
     batches, schema = _run_stream(
         spark,
         sf_dir,
@@ -1842,134 +1812,19 @@ def _theta_pairs_frame(spark, sf_dir):
             make(),
             watermark="30 minutes",
             window_s=_THP_WIN,
-            k=k,
+            k=_THP_K,
             by="event_type",
         ),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - _THP_MARGIN
-    km = _batches_df(spark, batches, schema).filter(
-        F.col("win_start") <= F.lit(cutoff)
+    cutoff = _decided_cutoff_s(spark, sf_dir, _THP_MARGIN)
+    sk = (
+        _batches_df(spark, batches, schema)
+        .filter(F.col("win_start") <= F.lit(cutoff))
+        .groupBy("win_start", "source")
+        .agg(F.sort_array(F.collect_list("h")).alias("hs"))
     )
-    th = (
-        km.groupBy("win_start", "source")
-        .agg(
-            F.count("*").alias("nk"),
-            F.max(F.when(F.col("rn") == k, F.col("h"))).alias("_kth"),
-        )
-        .select(
-            "win_start",
-            "source",
-            F.col("nk").cast("bigint").alias("nk"),
-            F.when(F.col("nk") == k, F.col("_kth"))
-            .otherwise(F.lit(hsp))
-            .alias("theta"),
-            F.when(F.col("nk") < k, F.col("nk").cast("bigint"))
-            .otherwise(F.expr(f"CAST(({k - 1} * {hsp}) DIV _kth AS BIGINT)"))
-            .alias("est_n"),
-        )
-    )
-    ta = th.select(
-        "win_start",
-        F.col("source").alias("source_a"),
-        F.col("nk").alias("nk_a"),
-        F.col("theta").alias("_th_a"),
-        F.col("est_n").alias("est_a"),
-    )
-    tb = th.select(
-        "win_start",
-        F.col("source").alias("source_b"),
-        F.col("nk").alias("nk_b"),
-        F.col("theta").alias("_th_b"),
-        F.col("est_n").alias("est_b"),
-    )
-    pairs = ta.join(tb, "win_start").filter(
-        F.col("source_a") < F.col("source_b")
-    ).withColumn("theta_min", F.least("_th_a", "_th_b"))
-
-    kma = km.select("win_start", F.col("source").alias("source_a"), "h")
-    kmb = km.select("win_start", F.col("source").alias("source_b"), "h")
-    retained = (
-        kma.join(kmb, ["win_start", "h"])
-        .filter(F.col("source_a") < F.col("source_b"))
-        .join(
-            F.broadcast(
-                pairs.select("win_start", "source_a", "source_b", "theta_min")
-            ),
-            ["win_start", "source_a", "source_b"],
-        )
-        .filter(F.col("h") < F.col("theta_min"))
-        .groupBy("win_start", "source_a", "source_b")
-        .agg(F.count("*").cast("bigint").alias("n_ret"))
-    )
-
-    from pyspark.sql import Window
-
-    uk = (
-        F.broadcast(pairs.select("win_start", "source_a", "source_b"))
-        .join(
-            km.select(F.col("win_start").alias("_ws"), "source", "h"),
-            (F.col("_ws") == F.col("win_start"))
-            & (
-                (F.col("source") == F.col("source_a"))
-                | (F.col("source") == F.col("source_b"))
-            ),
-        )
-        .select("win_start", "source_a", "source_b", "h")
-        .distinct()
-    )
-    wu = Window.partitionBy("win_start", "source_a", "source_b").orderBy("h")
-    uth = (
-        uk.withColumn("rn", F.row_number().over(wu))
-        .filter(F.col("rn") <= k)
-        .groupBy("win_start", "source_a", "source_b")
-        .agg(
-            F.count("*").alias("nu"),
-            F.max(F.when(F.col("rn") == k, F.col("h"))).alias("_ukth"),
-        )
-        .select(
-            "win_start",
-            "source_a",
-            "source_b",
-            F.when(F.col("nu") < k, F.col("nu").cast("bigint"))
-            .otherwise(F.expr(f"CAST(({k - 1} * {hsp}) DIV _ukth AS BIGINT)"))
-            .alias("est_union"),
-        )
-    )
-    return (
-        pairs.join(F.broadcast(uth), ["win_start", "source_a", "source_b"])
-        .join(
-            F.broadcast(retained),
-            ["win_start", "source_a", "source_b"],
-            "left",
-        )
-        .withColumn("n_ret", F.coalesce(F.col("n_ret"), F.lit(0).cast("bigint")))
-        .withColumn(
-            "est_inter",
-            F.expr(f"CAST((n_ret * {hsp}) DIV theta_min AS BIGINT)"),
-        )
-        .withColumn(
-            "jacc_est_ppm",
-            F.expr(
-                "CAST((CAST(est_inter AS DECIMAL(38,0)) * 1000000)"
-                " DIV est_union AS BIGINT)"
-            ),
-        )
-        .select(
-            "win_start",
-            "source_a",
-            "source_b",
-            "nk_a",
-            "nk_b",
-            "est_a",
-            "est_b",
-            "est_union",
-            "est_inter",
-            "jacc_est_ppm",
-        )
-    )
+    return theta_pairs(sk, ("win_start",), _THP_K, _THP_H)
 
 
 @query(
@@ -2243,9 +2098,7 @@ def q_stream_kll_runtime(spark, sf_dir):
         ),
         output_mode="append",
     )
-    ev = t(spark, sf_dir, "events")
-    max_s = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] // 1_000_000
-    cutoff = max_s - _KLL_MARGIN
+    cutoff = _decided_cutoff_s(spark, sf_dir, _KLL_MARGIN)
     km = _batches_df(spark, batches, schema).filter(
         F.col("win_start") <= F.lit(cutoff)
     )
@@ -2255,7 +2108,7 @@ def q_stream_kll_runtime(spark, sf_dir):
     win_col = (
         F.floor(F.unix_timestamp("ts") / _KLL_WIN) * _KLL_WIN
     ).cast("long")
-    decided = ev.select(
+    decided = t(spark, sf_dir, "events").select(
         win_col.alias("win_start"), "event_type", "value"
     ).filter(F.col("win_start") <= F.lit(cutoff))
     exact_cols = [

@@ -3,7 +3,7 @@ from .windows import cumulate_agg, hop_agg, multistage_agg, session_agg, session
 from .dedup import dedup_within_watermark, screen_against_ledger, screen_docs_against_corpus  # noqa: F401
 from .sketches import windowed_cms_cells  # noqa: F401
 from .curation import screen_embeddings_against_corpus  # noqa: F401
-from .cep import funnel_conversions, sequence_matches, three_step_matches  # noqa: F401
+from .cep import funnel_conversions, sequence_matches  # noqa: F401
 from .joins import enrich_with_customers, enrich_with_scd2, view_purchase_full_join, view_purchase_interval_join, view_purchase_left_join, window_join  # noqa: F401
 from .stateful import (  # noqa: F401
     count_window,

@@ -64,98 +64,6 @@ def _detect(
         yield pd.DataFrame({"user_id": [key[0]], "n_conversions": [total]})
 
 
-THREE_STEP_OUTPUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("signup_us", T.LongType()),
-        T.StructField("view_us", T.LongType()),
-        T.StructField("purchase_us", T.LongType()),
-    ]
-)
-
-# (s_us, v_us, first_err_after_s_us, done) — the open prefix of the earliest
-# signup -> view -> purchase chain, microsecond event times; done flips once
-# the single per-user match attempt resolves either way.
-THREE_STEP_STATE = T.StructType(
-    [
-        T.StructField("s_us", T.LongType()),
-        T.StructField("v_us", T.LongType()),
-        T.StructField("err_us", T.LongType()),
-        T.StructField("done", T.BooleanType()),
-    ]
-)
-
-THREE_STEP_TIMEOUT_S = 7200.0  # whole chain within 2 h of the signup
-
-
-def _three_step(
-    key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user state machine: earliest signup, first later view, first later
-    purchase; negation = no error strictly inside (signup, purchase); timeout
-    = purchase within THREE_STEP_TIMEOUT_S of the signup.  Earliest-match
-    semantics — the chain is determined by event order, so once it resolves
-    (matched or dead) the key is done and later events are discarded.  The
-    batch oracle is plans.analytic.q_cep_three_step."""
-    s_us = v_us = err_us = None
-    done = False
-    if state.exists:
-        s_us, v_us, err_us, done = state.get
-    out = None
-    if not done:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for _, r in rows.iterrows():
-            et = r["event_type"]
-            us = int(r["ts"].value // 1000)  # pandas ns -> epoch micros
-            if s_us is None:
-                if et == "signup":
-                    s_us = us
-                continue
-            if et == "error" and us > s_us and err_us is None:
-                err_us = us
-            if v_us is None:
-                if et == "view" and us > s_us:
-                    v_us = us
-                continue
-            if et == "purchase" and us > v_us:
-                done = True
-                matched = (
-                    (us - s_us) <= THREE_STEP_TIMEOUT_S * 1e6
-                    and (err_us is None or err_us >= us)
-                )
-                if matched:
-                    out = pd.DataFrame(
-                        {
-                            "user_id": [key[0]],
-                            "signup_us": [s_us],
-                            "view_us": [v_us],
-                            "purchase_us": [us],
-                        }
-                    )
-                break
-    state.update((s_us, v_us, err_us, done))
-    if out is not None:
-        yield out
-
-
-def three_step_matches(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming three-step CEP (signup -> view -> purchase within 2 h, no
-    error in between) over applyInPandasWithState; emits one row per user on
-    match completion."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _three_step,
-            outputStructType=THREE_STEP_OUTPUT,
-            stateStructType=THREE_STEP_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def sequence_matches(
     events: DataFrame,
     steps: list[str],
@@ -177,9 +85,9 @@ def sequence_matches(
 
     State is O(k) longs per key regardless of event volume — the chain
     anchors are the only memory, unlike an NFA with nondeterministic
-    branching (earliest-match needs no backtracking).  Like the 2-/3-step
-    processors above, cross-micro-batch event-time order is assumed from
-    the source (batches sorted within themselves); a production deployment
+    branching (earliest-match needs no backtracking).  Like the funnel
+    detector above, cross-micro-batch event-time order is assumed from the
+    source (batches sorted within themselves); a production deployment
     would delay resolution by the watermark before emitting.
     """
     if not steps:

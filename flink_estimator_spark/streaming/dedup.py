@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans._helpers import word_ngrams
+
 
 def dedup_within_watermark(
     events: DataFrame,
@@ -54,14 +56,7 @@ def lsh_banded_signatures(
     rows_per_band = num_hashes // bands
     n_digests = (num_hashes + 3) // 4
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    k = F.size(words) - F.lit(n - 1)
-    grams = F.when(
-        k >= 1,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words, n)
     # 60-bit md5 prefix per shingle — the portable shingle representation
     shingles = F.transform(
         grams,

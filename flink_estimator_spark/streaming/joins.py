@@ -15,18 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def view_purchase_interval_join(
-    events: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
+def _view_purchase_join(
+    events: DataFrame, within: str, watermark: str, how: str
 ) -> DataFrame:
-    """Inner interval join: every purchase paired with the same user's views
-    from the preceding ``within`` interval (inclusive of simultaneous).
-
-    Works identically on a batch DataFrame (no watermark needed there), so
-    the batch run is the streaming test's oracle.
-    """
-    streaming = events.isStreaming
+    """Purchases joined (``how``) to the same user's views from the
+    preceding ``within`` interval (inclusive of simultaneous).  Streaming
+    inputs get a watermark on both sides; a batch DataFrame runs the same
+    plan without one, so the batch run is the streaming tests' oracle."""
     v = events.filter(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
@@ -37,7 +32,7 @@ def view_purchase_interval_join(
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("p_ts"),
     )
-    if streaming:
+    if events.isStreaming:
         v = v.withWatermark("v_ts", watermark)
         p = p.withWatermark("p_ts", watermark)
     cond = (
@@ -45,8 +40,9 @@ def view_purchase_interval_join(
         & (F.col("v_ts") <= F.col("p_ts"))
         & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {within}"))
     )
-    return p.join(v, cond).select(
-        F.col("p_user").alias("user_id"),
+    return p.join(v, cond, how).select(
+        # p_user is null only on a full join's view-only rows
+        F.coalesce("p_user", "v_user").alias("user_id"),
         "purchase_id",
         "view_id",
         F.col("p_ts").cast("long").alias("purchase_s"),
@@ -54,94 +50,40 @@ def view_purchase_interval_join(
     )
 
 
+def view_purchase_interval_join(
+    events: DataFrame, within: str = "1 hour", watermark: str = "2 hours"
+) -> DataFrame:
+    """Inner interval join: every purchase paired with the same user's views
+    from the preceding ``within`` interval."""
+    return _view_purchase_join(events, within, watermark, "inner")
+
+
 def view_purchase_left_join(
-    events: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
+    events: DataFrame, within: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
     """LEFT OUTER stream-stream interval join: every purchase, with its
     preceding same-user views inside ``within`` — or a null view row when
     none exists (the outer side Flink's "full left join" complex class
-    exercises, test_basic_estimation.py:317).
-
-    Outer stream-stream joins additionally require the watermark + time
-    bound so the engine knows when a purchase can never match again and the
-    null-padded row may be emitted; state stays bounded exactly as in the
-    inner variant.  Batch DataFrames run the same plan (no watermark), so
-    the batch run is the streaming test's oracle.
-    """
-    streaming = events.isStreaming
-    v = events.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    )
-    p = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    if streaming:
-        v = v.withWatermark("v_ts", watermark)
-        p = p.withWatermark("p_ts", watermark)
-    cond = (
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {within}"))
-    )
-    return p.join(v, cond, "left_outer").select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "view_id",
-        F.col("p_ts").cast("long").alias("purchase_s"),
-        F.col("v_ts").cast("long").alias("view_s"),
-    )
+    exercises, test_basic_estimation.py:317).  Outer stream-stream joins
+    need the watermark + time bound so the engine knows when a purchase can
+    never match again and the null-padded row may be emitted; state stays
+    bounded exactly as in the inner variant."""
+    return _view_purchase_join(events, within, watermark, "left_outer")
 
 
 def view_purchase_full_join(
-    events: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
+    events: DataFrame, within: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
     """FULL OUTER stream-stream interval join: every (purchase, preceding
     same-user view) pair inside ``within``, plus null-padded rows for
     purchases with no view AND for views with no following purchase —
     Flink's "full left join between two streams" complex class
     (`/root/reference/tests/ut/test_basic_estimation.py:317`) taken to its
-    symmetric completion.
-
-    Same bounded-state machinery as the left variant: watermarks on both
-    sides plus the time-range predicate tell the engine when EITHER side's
-    row can never match again, at which point its null-padded result is
-    emittable and its state droppable.  Batch DataFrames run the same plan
-    (no watermark), so the batch run is the streaming test's oracle.
-    """
-    streaming = events.isStreaming
-    v = events.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    )
-    p = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    if streaming:
-        v = v.withWatermark("v_ts", watermark)
-        p = p.withWatermark("p_ts", watermark)
-    cond = (
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {within}"))
-    )
-    return p.join(v, cond, "full_outer").select(
-        F.coalesce(F.col("p_user"), F.col("v_user")).alias("user_id"),
-        "purchase_id",
-        "view_id",
-        F.col("p_ts").cast("long").alias("purchase_s"),
-        F.col("v_ts").cast("long").alias("view_s"),
-    )
+    symmetric completion.  Watermarks on both sides plus the time-range
+    predicate tell the engine when EITHER side's row can never match again,
+    at which point its null-padded result is emittable and its state
+    droppable."""
+    return _view_purchase_join(events, within, watermark, "full_outer")
 
 
 def enrich_with_customers(events: DataFrame, customers: DataFrame) -> DataFrame:

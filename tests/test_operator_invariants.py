@@ -158,32 +158,45 @@ def test_rollup_merge_equals_full_recompute_any_split(spark):
         assert merged == full, f"split at q{frac} lost or double-counted state"
 
 
-def test_match_sequence_generalizes_the_three_step_cep(spark):
-    """match_sequence at k=3 (same steps/bound/negation) must select exactly
-    the users of the hand-built q_cep_three_step — the generalized compiler
-    and the fixed-shape query are the same pattern."""
+def test_match_sequence_single_step_is_keys_with_the_event(spark):
+    """match_sequence at k=1 degenerates to "keys having any such event"."""
     from flink_estimator_spark.operators.sequence import match_sequence
-    from flink_estimator_spark.plans import QUERIES
 
     ev = read_table(spark, os.path.join(SF_SMALL, "events.parquet"))
     et = F.col("event_type")
-    gen = match_sequence(
-        ev,
-        steps=[et == "signup", et == "view", et == "purchase"],
-        within_s=7200,
-        absent=et == "error",
-    )
-    got = {r["user_id"] for r in gen.collect()}
-    exp = {
-        r["user_id"]
-        for r in QUERIES["q_cep_three_step"].builder(spark, SF_SMALL).collect()
-    }
-    assert got == exp
-    # and k=1 degenerates to "keys having any such event"
     one = match_sequence(ev, steps=[et == "signup"])
     assert one.count() == (
         ev.filter(et == "signup").select("user_id").distinct().count()
     )
+
+
+def test_ngram_decontamination_drops_docs_shorter_than_a_gram(spark, tmp_path):
+    """Docs with fewer than 5 tokens (and the empty doc) have no 5-grams:
+    the builder drops them as its oracle does instead of failing on
+    ``slice(tokens, 0, 5)``."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_estimator_spark.plans import QUERIES
+
+    texts = {
+        0: "a b c",
+        1: "a b c d",
+        2: "",
+        3: "The quick brown fox jumps over",
+        20: "quick brown fox jumps over the lazy dog",
+    }
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.table({"doc_id": list(texts), "text": list(texts.values())}), path
+    )
+    spec = QUERIES["q_ngram_decontamination"]
+    got = [tuple(r) for r in spec.builder(spark, str(tmp_path)).collect()]
+    assert got == [(3, 2, 1, 0.5)]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    assert con.execute(spec.oracle).fetchall() == got
 
 
 def test_kmeans_inertia_is_nonincreasing(spark):

@@ -200,23 +200,84 @@ def test_session_dynamic_gap_stream_matches_batch(spark, stream_dir, tmp_path):
     assert got == exp
 
 
-def test_cep_three_step_stream_matches_batch(spark, stream_dir, tmp_path):
-    from flink_estimator_spark.plans import QUERIES
-    from flink_estimator_spark.streaming import three_step_matches
+def _cep3_events(n_users=300):
+    """Synthetic events exercising every edge of the three-step pattern
+    (signup -> view -> purchase within 7200 s, no error strictly inside),
+    one scenario per ``user_id % 10``; 180 of the 300 users match."""
+    t0 = pd.Timestamp("2024-01-01")
+    us = lambda n: pd.Timedelta(microseconds=n)  # noqa: E731
+    sec = lambda n: pd.Timedelta(seconds=n)  # noqa: E731
+    scenarios = [
+        # span exactly 7200 s: matches
+        [("signup", sec(0)), ("view", sec(100)), ("purchase", sec(7200))],
+        # span 7200 s + 1 us: too late
+        [("signup", sec(0)), ("view", sec(100)), ("purchase", sec(7200) + us(1))],
+        # span 7200 s - 1 us: matches
+        [("signup", sec(0)), ("view", sec(100)), ("purchase", sec(7200) - us(1))],
+        # error strictly inside the span: no match
+        [("signup", sec(0)), ("view", sec(10)), ("error", sec(20)), ("purchase", sec(3600))],
+        # the only view precedes the signup: no match
+        [("view", sec(-10)), ("signup", sec(0)), ("purchase", sec(100))],
+        # a view before the signup and one after: the later one anchors
+        [("view", sec(-10)), ("signup", sec(0)), ("view", sec(50)), ("purchase", sec(200))],
+        # error at the purchase instant and after it: not inside, matches
+        [("signup", sec(0)), ("view", sec(5)), ("error", sec(60)),
+         ("purchase", sec(60)), ("error", sec(90))],
+        # error before the signup: matches
+        [("error", sec(-5)), ("signup", sec(0)), ("view", sec(1)), ("purchase", sec(2))],
+        # the earliest signup anchors the span (7300 s): no match
+        [("signup", sec(0)), ("signup", sec(100)), ("view", sec(200)), ("purchase", sec(7300))],
+        # a view at the signup instant is not after it; the first purchase wins
+        [("signup", sec(0)), ("view", sec(0)), ("view", us(1)),
+         ("purchase", us(2)), ("purchase", sec(30))],
+    ]
+    rows = []
+    for u in range(n_users):
+        base = t0 + pd.Timedelta(days=u)
+        for et, off in scenarios[u % 10]:
+            rows.append((len(rows), base + off, u, et, 1.0, "{}"))
+    pdf = pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+    )
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    return pa.Table.from_pandas(pdf, preserve_index=False)
 
-    ev = events_stream(spark, stream_dir)
+
+def test_cep_three_step_stream_matches_batch(spark, tmp_path):
+    """The streaming k-step matcher with the three CEP steps returns
+    exactly q_cep_three_step's rows over events that hit every boundary of
+    the pattern (exact and +-1 us spans, errors inside, at and outside the
+    span, views before the signup, repeated anchors)."""
+    from flink_estimator_spark.plans import QUERIES
+    from flink_estimator_spark.streaming import sequence_matches
+
+    tbl = _cep3_events()
+    (tmp_path / "sf").mkdir()
+    (tmp_path / "stream").mkdir()
+    pq.write_table(tbl, str(tmp_path / "sf" / "events.parquet"))
+    pq.write_table(tbl, str(tmp_path / "stream" / "part-000.parquet"))
+    ev = events_stream(spark, str(tmp_path / "stream"))
     out = _run_stream(
-        spark, three_step_matches(ev, watermark="40 days"), "cep3_out", tmp_path,
+        spark,
+        sequence_matches(
+            ev,
+            steps=["signup", "view", "purchase"],
+            within_s=7200,
+            absent="error",
+            watermark="40 days",
+        ),
+        "cep3_out",
+        tmp_path,
         mode="update",
     )
     got = {
-        (r["user_id"], r["signup_us"], r["view_us"], r["purchase_us"])
-        for r in out.filter(F.col("user_id") != SENTINEL_USER).collect()
+        (r["user_id"], r["t0_us"], r["t1_us"], r["t2_us"]) for r in out.collect()
     }
     exp = {
         (r["user_id"], r["signup_us"], r["view_us"], r["purchase_us"])
-        for r in QUERIES["q_cep_three_step"].builder(spark, SF_SMALL).collect()
+        for r in QUERIES["q_cep_three_step"].builder(spark, str(tmp_path / "sf")).collect()
     }
+    assert len(exp) == 180, "batch side lost a scenario"
     assert got == exp
 
 
