@@ -22,7 +22,6 @@ result-struct assembly) lives in ``engine.py`` as Catalyst column expressions.
 
 from __future__ import annotations
 
-import heapq
 import math
 from dataclasses import dataclass, field, replace
 from typing import Optional
@@ -252,27 +251,38 @@ def free_mem_per_node(s: Scenario, jm_memory: int, nb_nodes: int) -> tuple[list[
     return per_node, sum(per_node)
 
 
-def greedy_pack(
-    free: list[float], nb_tm: int, tm_mem_mb: int
-) -> tuple[list[int], int, bool, list[float]]:
+def greedy_pack(f0: float, f: float, nb_nodes: int, nb_tm: int, tm_mem_mb: int) -> list[int]:
     """Most-free-node-first placement, ties to the lowest index
-    (estimation.py:428-457)."""
-    n = len(free)
-    alloc = [0] * n
-    remaining = list(free)
-    # (-free, index) heap == "most remaining memory, ties to lowest index",
-    # identical pick order to the reference's linear scan but O(T log N).
-    heap = [(-r, i) for i, r in enumerate(remaining) if r >= tm_mem_mb]
-    heapq.heapify(heap)
-    for _ in range(nb_tm):
-        if not heap:
-            return alloc, (max(alloc) if alloc else 0), False, remaining
-        _, i = heapq.heappop(heap)
-        remaining[i] -= tm_mem_mb
-        alloc[i] += 1
-        if remaining[i] >= tm_mem_mb:
-            heapq.heappush(heap, (-remaining[i], i))
-    return alloc, max(alloc), True, remaining
+    (estimation.py:428-457), over node 0 with free memory ``f0`` and
+    ``nb_nodes - 1`` nodes with free memory ``f``.  Returns the
+    TaskManagers per node; fewer than ``nb_tm`` in all when the nodes run
+    out of room.
+
+    Closed form of the reference's pick-one-TM-at-a-time scan: the other
+    nodes all hold ``f - k*m`` after ``k`` TMs, so they fill in levels
+    ``k = 0 .. f//m - 1``, one TM each in index order per level; node 0
+    takes its next TM ahead of a level whenever it holds at least that
+    level's free memory (ties go to index 0), and fills what it has left
+    after the last level.  The loop runs at most ``f//m`` levels (under 128
+    in the kernel, where ``m >= 4096``) whatever the node and TM counts.
+    The float subtractions are exact: each result lies in ``[0, free]`` and
+    is a multiple of the free value's ulp."""
+    m, others = tm_mem_mb, nb_nodes - 1
+    placed = on0 = levels = partial = 0
+    for k in range(int(f // m)):
+        level_free = f - k * m
+        while placed < nb_tm and f0 - on0 * m >= level_free:
+            on0 += 1
+            placed += 1
+        take = min(others, nb_tm - placed)
+        placed += take
+        if take < others:
+            partial = take
+            break
+        levels += 1
+    else:
+        on0 += max(0, min(nb_tm - placed, int(f0 // m) - on0))
+    return [on0] + [levels + 1] * partial + [levels] * (others - partial)
 
 
 class PlacementError(ValueError):
@@ -284,28 +294,36 @@ def place_with_growth(
 ) -> tuple[int, list[int], int]:
     """Grow the node count until the TMs pack, then return
     (total memory MB, per-node allocation, grown node count)
-    (estimation.py:205-244 — node-count mutation made explicit here)."""
+    (estimation.py:205-244 — node-count mutation made explicit here).
+
+    The reference adds one node while the free memory falls short of the
+    TMs' total, and again while the greedy packing fails.  Both tests pass
+    from some node count on (each added node brings the same free memory and
+    the same number of TM slots), so the grown count is the larger of the
+    two thresholds, and the packing runs once, at that count."""
     required = nb_tm * tm_mem_mb
-    while True:
+    free, total_free = free_mem_per_node(s, jm_memory, nb_nodes)
+    if max(free) < tm_mem_mb:
+        raise PlacementError(
+            f"No worker can host a {tm_mem_mb} MB task manager: "
+            f"max free memory on a node is {max(free)} MB. "
+            "Increase worker_node_memory (or use a larger VM t-shirt) "
+            "so each node can hold at least one TM."
+        )
+    # every added node contributes the same free memory, so jump straight
+    # to the first count whose float sum of free memory is sufficient
+    # (estimation.py:231-233)
+    per_new_node = s.worker_node_memory_mb - OS_MEM_MB
+    while total_free < required:
+        nb_nodes += max(1, math.ceil((required - total_free) / per_new_node))
         free, total_free = free_mem_per_node(s, jm_memory, nb_nodes)
-        if not free or max(free) < tm_mem_mb:
-            raise PlacementError(
-                f"No worker can host a {tm_mem_mb} MB task manager: "
-                f"max free memory on a node is {max(free) if free else 0} MB. "
-                "Increase worker_node_memory (or use a larger VM t-shirt) "
-                "so each node can hold at least one TM."
-            )
-        if total_free < required:
-            # closed form of the reference's one-node-at-a-time growth
-            # (estimation.py:231-233): every added node contributes the same
-            # free memory, so jump straight to the first sufficient count.
-            per_new_node = s.worker_node_memory_mb - OS_MEM_MB
-            nb_nodes += max(1, math.ceil((required - total_free) / per_new_node))
-            continue
-        alloc, _mx, ok, _rem = greedy_pack(free, nb_tm, tm_mem_mb)
-        if ok:
-            return jm_memory + required, alloc, nb_nodes
-        nb_nodes += 1
+    # then to the first count with a TM slot for every TM: node 0 has
+    # f0 // m slots, every other node f // m >= 1 (the check above)
+    slots0 = max(0, int(free[0] // tm_mem_mb))
+    slots = int(per_new_node // tm_mem_mb)
+    nb_nodes = max(nb_nodes, 1 + -(-max(0, nb_tm - slots0) // slots))
+    alloc = greedy_pack(free[0], per_new_node, nb_nodes, nb_tm, tm_mem_mb)
+    return jm_memory + required, alloc, nb_nodes
 
 
 # ---------------------------------------------------------------------------
@@ -441,7 +459,7 @@ def sizing_core(s: Scenario) -> SizingCore:
             s, out.jm_memory, out.nb_task_managers, out.tm_process_memory_mb, nb_nodes
         )
         out.nb_worker_nodes_final = nb_nodes
-        non_zero = sum(1 for a in out.node_allocations if a > 0)
+        non_zero = len(out.node_allocations) - out.node_allocations.count(0)
         out.total_nodes = min(non_zero, out.nodes_from_cpu)
     except (PlacementError, ValueError) as exc:
         out.error = str(exc)

@@ -14,17 +14,24 @@ Design split (SURVEY.md §4):
 * The genuinely iterative steps — the state/throughput sizing passes, the
   TM memory/count fixpoint, and greedy bin-packing with node growth
   (reference estimation.py:205-281,428-457,556-597) — run the pure-Python
-  kernel from ``calculus.py`` inside one Arrow-batched Pandas UDF.  Python
-  arithmetic inside the kernel also gives bit-exact ``math.ceil``/``round``
-  semantics where Spark's SQL functions differ (banker's rounding etc.).
+  kernel from ``calculus.py`` inside one Arrow-batched Pandas UDF, called
+  once per scenario.  The kernel's placement is closed form (at most two
+  steps per TaskManager slot level of a node), so a scenario that needs
+  thousands of nodes costs about as much as one that needs a single node.
+  Python arithmetic inside the kernel also gives bit-exact
+  ``math.ceil``/``round`` semantics where Spark's SQL functions differ
+  (banker's rounding etc.).
 
 At scale: the UDF is embarrassingly parallel per row (no shuffle), so a
 scenario table partitions freely across executors; all pre/post stages are
 narrow column transformations.
 
 Plan shape: ``estimate_df`` is two projections — defaulting, normalization,
-``scenario_id`` and the kernel call in one ``select``, result assembly in a
-second — so building it costs two analyzer passes, not one per column.
+the submitted row (``input_parameters``) and the kernel call in one
+``select``, result assembly and ``scenario_id`` in a second — so building it
+costs two analyzer passes, not one per column.  Because each result row
+carries the row it was estimated from, saving results
+(``persistence.envelope_df``) reads nothing but the results.
 
 Barrier rule: the kernel call is marked nondeterministic, so it runs exactly
 once per scenario whatever the consumer does with the result.  Filtering
@@ -195,18 +202,12 @@ def normalize(df: DataFrame) -> DataFrame:
 
 def submitted_sql(columns: list[str]) -> str:
     """The submitted scenario row as a struct of the ``scenario_schema``
-    fields, before any defaulting (a missing column reads as NULL)."""
+    fields, before any defaulting (a missing column reads as NULL):
+    ``estimate_df``'s ``input_parameters``."""
     return _named_struct({
         f.name: f.name if f.name in columns else f"CAST(NULL AS {f.dataType.simpleString()})"
         for f in scenario_schema.fields
     })
-
-
-def scenario_id_col(df: DataFrame) -> Column:
-    """sha2 of the submitted scenario row as JSON.  It pairs each input row
-    with its own result (``persistence.envelope_df``) and its first 8 hex
-    digits are the saved envelope's estimation id."""
-    return F.expr(f"sha2(to_json({submitted_sql(df.columns)}), 256)")
 
 
 def validation_errors_col() -> Column:
@@ -368,8 +369,11 @@ def _scaling_sql(tm_cpus: str) -> dict[str, str]:
 
 def estimate_df(df: DataFrame) -> DataFrame:
     """Estimate every scenario row; returns the nested ``EstimationResult``
-    struct columns, an ``error`` string column (null == success) and the
-    ``scenario_id`` of the submitted row (``scenario_id_col``).
+    struct columns, an ``error`` string column (null == success), the
+    ``scenario_id`` of the submitted row (sha2 of its JSON; its first 8 hex
+    digits are the saved envelope's estimation id) and the submitted row
+    itself as ``input_parameters`` (``submitted_sql``), so a result carries
+    everything its saved envelope holds.
 
     Input: any DataFrame with the ``scenario_schema`` columns (missing
     nullable values are defaulted, as the reference's Pydantic layer does).
@@ -382,7 +386,7 @@ def estimate_df(df: DataFrame) -> DataFrame:
     kernel = _sizing_core_udf(F.expr(_named_struct({n: d[n] for n in _KERNEL_FIELDS})))
     staged = df.select(
         *[F.expr(f"{e} AS {n}") for n, e in _normalized_sql(d).items()],
-        scenario_id_col(df).alias("scenario_id"),
+        F.expr(f"{submitted_sql(df.columns)} AS input_parameters"),
         kernel.alias("core"),
     )
 
@@ -438,5 +442,6 @@ def estimate_df(df: DataFrame) -> DataFrame:
         *[f"CASE WHEN core.error IS NULL THEN {_named_struct(fields)} END AS {name}"
           for name, fields in sections.items()],
         "core.error AS error",
-        "scenario_id",
+        "sha2(to_json(input_parameters), 256) AS scenario_id",
+        "input_parameters",
     )

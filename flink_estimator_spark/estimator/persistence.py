@@ -5,9 +5,11 @@ Two write paths:
 
 * ``save_estimations_df`` — the engine path: a whole results DataFrame is
   written as JSON-lines envelopes in one distributed write (no collect).
-  ``envelope_df`` pairs each input row with its result on ``scenario_id``
-  (sha2 of the submitted row, emitted by ``estimate_df``); the estimation
-  id is its first 8 hex digits, so re-running the same scenarios produces
+  ``envelope_df`` shapes each valid ``estimate_df`` row into an envelope
+  in one projection: the row carries its own submitted scenario
+  (``input_parameters``) and its ``scenario_id`` (sha2 of that row), so
+  no input is scanned again and nothing is joined.  The estimation id is
+  the id's first 8 hex digits, so re-running the same scenarios produces
   identical ids — the deterministic analogue of the reference's uuid4
   prefix.
 * ``save_estimation`` — single-record convenience mirroring the reference's
@@ -27,8 +29,6 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import scenario_id_col, submitted_sql
-
 VERSION = "1.0"
 _FORBIDDEN = ("..", "/", "\\")
 
@@ -39,23 +39,19 @@ def _sanitize_project(name: str) -> str:
 
 
 def envelope_df(inputs: DataFrame, results: DataFrame, saved_at: str) -> DataFrame:
-    """Join inputs and results into SavedEstimation envelopes (one row per
-    distinct valid scenario).  ``saved_at`` is supplied by the caller —
-    never wall clock inside the plan — so writes are reproducible.
+    """SavedEstimation envelopes, one row per distinct valid scenario.
+    ``saved_at`` is supplied by the caller — never wall clock inside the
+    plan — so writes are reproducible.
 
-    ``results`` is ``estimate_df`` of the same scenarios.  Each input row
-    pairs with its own result through ``scenario_id``, the sha2 of the
-    submitted row, which ``estimate_df`` emits and this side recomputes
-    from ``inputs``: scenarios that share a name, or differ only in fields
-    the result does not echo, never swap results, and an invalid input is
-    never saved with a valid twin's result."""
-    inp = inputs.select(
-        scenario_id_col(inputs).alias("scenario_id"),
-        F.expr(submitted_sql(inputs.columns)).alias("input_parameters"),
-        F.lit(saved_at).alias("saved_at"),
-    )
+    ``results`` is ``estimate_df`` of the scenarios to save.  Each result
+    row already carries the row it was estimated from (``input_parameters``),
+    so scenarios that share a name, or differ only in fields the result does
+    not echo, never swap results, and an invalid input is never saved with a
+    valid twin's result.  ``inputs`` is not read: it stays in the signature
+    for existing callers."""
     return (
-        inp.join(results.filter("error IS NULL"), "scenario_id")
+        results.filter("error IS NULL")
+        .withColumn("saved_at", F.lit(saved_at))
         .selectExpr(
             "named_struct('estimation_id', substring(scenario_id, 1, 8), 'timestamp', saved_at,"
             " 'project_name', input_parameters.project_name, 'saved_at', saved_at) AS metadata",
@@ -66,8 +62,7 @@ def envelope_df(inputs: DataFrame, results: DataFrame, saved_at: str) -> DataFra
             " 'capacity_analysis', capacity_analysis) AS estimation_results",
             f"'{VERSION}' AS version",
         )
-        # byte-identical duplicate scenarios share one id and multiply
-        # through the join; their envelopes are identical, so collapse
+        # byte-identical duplicate scenarios share one envelope
         .dropDuplicates()
     )
 

@@ -1512,15 +1512,13 @@ def q_longest_shared_run(spark, sf_dir):
     )
 
 
-def longest_shared_runs(
-    docs: DataFrame, k: int = _RUN_K, max_df: int = _RUN_MAX_DF
-) -> DataFrame:
-    """(id_a, id_b, run_tokens, n_matches) for every document pair sharing
-    at least one ``k``-gram — the diagonal-island reduction behind
-    ``q_longest_shared_run`` (see its docstring for the algorithm and the
-    scale argument).  ``run_tokens`` is the longest verbatim token run,
-    ``n_matches`` the total matched shingle positions after the
-    ``max_df`` boilerplate guard."""
+def _diagonal_islands(docs: DataFrame, k: int, max_df: int) -> DataFrame:
+    """(id_a, id_b, pa, diag, isl): every position ``pa`` of document
+    ``id_a`` whose ``k``-gram (a 60-bit md5 word) recurs in a later document
+    ``id_b`` on diagonal ``diag = pa - pb``, for the shingles that occur at
+    most ``max_df`` times.  Consecutive matches on one diagonal share the
+    island key ``isl`` (gaps and islands), so one island is one verbatim
+    shared run of ``count + k - 1`` tokens."""
     from pyspark.sql import Window as W
 
     words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
@@ -1548,8 +1546,20 @@ def longest_shared_runs(
     isl = F.col("pa") - F.row_number().over(
         W.partitionBy("id_a", "id_b", "diag").orderBy("pa")
     )
+    return m.withColumn("isl", isl)
+
+
+def longest_shared_runs(
+    docs: DataFrame, k: int = _RUN_K, max_df: int = _RUN_MAX_DF
+) -> DataFrame:
+    """(id_a, id_b, run_tokens, n_matches) for every document pair sharing
+    at least one ``k``-gram — the diagonal-island reduction behind
+    ``q_longest_shared_run`` (see its docstring for the algorithm and the
+    scale argument).  ``run_tokens`` is the longest verbatim token run,
+    ``n_matches`` the total matched shingle positions after the
+    ``max_df`` boilerplate guard."""
     runs = (
-        m.withColumn("isl", isl)
+        _diagonal_islands(docs, k, max_df)
         .groupBy("id_a", "id_b", "diag", "isl")
         .agg(F.count("*").alias("run_len"))
     )
@@ -1572,35 +1582,8 @@ def _run_removals(docs: DataFrame, k: int, max_df: int) -> DataFrame:
     and all later copies are marked.  A run of L islands on diagonal
     ``diag`` starting at ``min(pa)`` covers positions
     ``min(pa) - diag .. min(pa) - diag + L + k - 2`` of the later doc."""
-    from pyspark.sql import Window as W
-
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    grams = word_ngrams(words, k)
-    sh = (
-        spread(docs, "doc_id")
-        .select("doc_id", F.posexplode(grams).alias("pos0", "g"))
-        .select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            md5_word(F.col("g"), 1, 15).alias("s"),
-        )
-    )
-    fdf = sh.groupBy("s").agg(F.count("*").alias("d_"))
-    keep = sh.join(fdf.filter(F.col("d_") <= max_df), "s").select(
-        "doc_id", "pos", "s"
-    )
-    a = keep.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "s")
-    b = keep.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pb"), "s")
-    m = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "pa", (F.col("pa") - F.col("pb")).alias("diag"))
-    )
-    isl = F.col("pa") - F.row_number().over(
-        W.partitionBy("id_a", "id_b", "diag").orderBy("pa")
-    )
     spans = (
-        m.withColumn("isl", isl)
+        _diagonal_islands(docs, k, max_df)
         .groupBy("id_a", "id_b", "diag", "isl")
         .agg(F.min("pa").alias("min_pa"), F.count("*").alias("cnt"))
         .select(

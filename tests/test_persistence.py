@@ -18,7 +18,7 @@ from flink_estimator_spark.estimator.persistence import (
     save_estimations_df,
 )
 from tests.conftest import arrow_eval_nodes
-from tests.scenarios import GOLDEN
+from tests.scenarios import GOLDEN, INVALID
 
 SECTIONS = ("input_summary", "resource_estimates", "cluster_recommendations",
             "scaling_recommendations", "capacity_analysis")
@@ -112,6 +112,51 @@ def test_envelope_runs_kernel_once(spark):
     inputs = _inputs_df(spark, GOLDEN)
     env = envelope_df(inputs, estimate_df(inputs), saved_at="2026-08-13T00:00:00")
     assert arrow_eval_nodes(env) == 1
+
+
+def _submitted_rows(cases):
+    """Scenario rows with every nullable field NULL in turn."""
+    rows = []
+    for kw in cases:
+        s = Scenario(**kw)
+        rows.append(tuple(getattr(s, f.name) for f in scenario_schema.fields))
+    base = rows[0]
+    for i in range(1, len(base)):
+        rows.append(tuple(None if j == i else v for j, v in enumerate(base)))
+    rows.append((base[0],) + (None,) * (len(base) - 1))
+    return rows
+
+
+@pytest.mark.parametrize("with_t_size", [True, False], ids=["t_size", "no_t_size"])
+def test_estimate_df_emits_the_submitted_row(spark, with_t_size):
+    """``input_parameters`` is the submitted row before any defaulting,
+    NULLs included; a missing ``worker_node_t_size`` column reads as NULL."""
+    rows = _submitted_rows(GOLDEN + INVALID)
+    cols = [f.name for f in scenario_schema.fields]
+    df = spark.createDataFrame(rows, scenario_schema)
+    if not with_t_size:
+        df = df.drop("worker_node_t_size")
+    got = sorted((tuple(r["input_parameters"]) for r in estimate_df(df).collect()), key=repr)
+    # worker_node_t_size is the schema's last field
+    want = sorted((r if with_t_size else r[:-1] + (None,) for r in rows), key=repr)
+    assert got == want
+    assert estimate_df(df).schema["input_parameters"].dataType.names == cols
+
+
+def test_envelope_plan_reads_results_only(spark, tmp_path):
+    """Building envelopes neither joins nor broadcasts, and the scenarios
+    are scanned once, by the estimate."""
+    path = str(tmp_path / "scenarios.parquet")
+    _inputs_df(spark, GOLDEN + INVALID).write.parquet(path)
+    inputs = spark.read.parquet(path)
+    env = envelope_df(inputs, estimate_df(inputs), saved_at="2026-08-13T00:00:00")
+    env.collect()
+    plan = env._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    text = plan.toString()
+    assert "Join" not in text and "BroadcastExchange" not in text, text
+    assert text.count("FileScan parquet") == 1, text
 
 
 def test_single_save_list_delete(tmp_path):

@@ -281,6 +281,26 @@ def test_cep_three_step_stream_matches_batch(spark, tmp_path):
     assert got == exp
 
 
+def test_cep_three_step_oracle_matches_builder_on_boundary_events(spark, tmp_path):
+    """q_cep_three_step's DuckDB oracle and its builder return the same 180
+    matches over ``_cep3_events``: the fixture tables hold 0-1 matching
+    users, so this is where the oracle's 7200 s bound, its strict error
+    window and its anchors are checked against the builder."""
+    import duckdb
+
+    from flink_estimator_spark.plans import QUERIES, get_oracle_sql
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(_cep3_events(), path)
+    got = sorted(tuple(r) for r in QUERIES["q_cep_three_step"].builder(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(get_oracle_sql()["q_cep_three_step"]).fetchall())
+    con.close()
+    assert len(want) == 180
+    assert got == want
+
+
 def test_sequence_matches_stream_matches_batch(spark, stream_dir, tmp_path):
     """Streaming k-step matcher vs the gated batch q_cep_four_step: same
     steps/bound/negation config must yield identical match rows."""
