@@ -11,17 +11,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import _parquet_schema
+
+
 def events_stream(spark: SparkSession, directory: str) -> DataFrame:
     """File-based event stream with the fixture's schema.
 
     ``readStream`` needs an explicit schema that matches the files' physical
     encoding, and the fixture generator has shipped ``ts`` as TIMESTAMP(NANOS)
     (→ long under ``nanosAsLong``) in one round and TIMESTAMP(MICROS, ntz) in
-    another — so peek the batch reader's inferred schema once (footer-only,
-    no data scan) and normalize the same way ``sources.tables.read_table``
-    does.  Everything downstream sees session-zoned TimestampType."""
+    another — so take the batch reader's inferred schema and normalize the
+    same way ``sources.tables.read_table`` does.  Everything downstream sees
+    session-zoned TimestampType.
+
+    The inference reads only parquet footers, but it is a Spark job.  It
+    comes from ``read_table``'s schema memo, which keys on the files'
+    identity through symlinks, so a fresh stream directory that symlinks an
+    already-inferred fixture launches no job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = spark.read.parquet(directory).schema
+    physical = _parquet_schema(spark, directory)
     raw = (
         spark.readStream.schema(physical)
         .option("maxFilesPerTrigger", 1)
@@ -38,8 +46,9 @@ def events_stream(spark: SparkSession, directory: str) -> DataFrame:
 def documents_stream(spark: SparkSession, directory: str) -> DataFrame:
     """File-based document stream (the arriving-crawl shape): same schema as
     the ``documents`` fixture table, micro-batched one file per trigger so a
-    multi-file directory exercises real incremental arrival."""
-    physical = spark.read.parquet(directory).schema
+    multi-file directory exercises real incremental arrival.  The schema
+    comes from the same memo as ``events_stream``'s."""
+    physical = _parquet_schema(spark, directory)
     return (
         spark.readStream.schema(physical)
         .option("maxFilesPerTrigger", 1)

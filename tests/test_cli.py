@@ -5,8 +5,11 @@ drives; here we pin the argument wiring and the Plane-A one-shot."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cli(*args: str) -> subprocess.CompletedProcess:
@@ -14,7 +17,7 @@ def _cli(*args: str) -> subprocess.CompletedProcess:
         [sys.executable, "-m", "flink_estimator_spark", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=180,
     )
 

@@ -6,15 +6,19 @@ reproduces when nothing else has initialized the package."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 FIRST_TOUCHES = [
     "flink_estimator_spark.functions",
     "flink_estimator_spark.operators.similarity",
     "flink_estimator_spark.operators.sequence",
+    "flink_estimator_spark.sources",
     "flink_estimator_spark.streaming",
     "flink_estimator_spark.plans",
     "flink_estimator_spark.estimator",
@@ -27,7 +31,7 @@ def test_first_touch_import(module):
         [sys.executable, "-c", f"import {module}"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
