@@ -33,12 +33,16 @@ costs two analyzer passes, not one per column.  Because each result row
 carries the row it was estimated from, saving results
 (``persistence.envelope_df``) reads nothing but the results.
 
-Barrier rule: the kernel call is marked nondeterministic, so it runs exactly
-once per scenario whatever the consumer does with the result.  Filtering
-result columns (``error``, a result struct) is free: the filter stays above
-the kernel instead of copying it into a second Python stage.  The flip side
-is that a filter applied after ``estimate_df`` no longer prunes kernel work,
-even on an input column — filter the scenarios *before* ``estimate_df``.
+Barrier rule: the kernel call is marked nondeterministic, so Catalyst never
+copies it: filtering result columns (``error``, a result struct) is free,
+the filter stays above the kernel instead of copying it into a second Python
+stage.  The flip side is that a filter applied after ``estimate_df`` no
+longer prunes kernel work, even on an input column — filter the scenarios
+*before* ``estimate_df``.  One consumer still runs the kernel twice per
+scenario: a global sort (``orderBy``) of the result, whose range
+partitioner samples its input in a separate job that evaluates the kernel.
+Sort the scenarios *before* ``estimate_df`` instead; its projections keep
+the input's rows and order (SCALE.md §6).
 """
 
 from __future__ import annotations

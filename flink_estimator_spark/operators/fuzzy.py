@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import t
+from ..plans._helpers import local_df, t
 from ..plans.registry import query
 
 # digit positions (1-indexed within the string) for Customer#ddddddddd,
@@ -397,4 +397,4 @@ def resolve_entities(spark, edges: DataFrame, cap: int = _ER_LOCAL_CAP) -> DataF
         if m is None or v < m:
             comp_min[r] = v
     rows = [(v, comp_min[find(v)]) for v in sorted(parent)]
-    return spark.createDataFrame(rows, "doc_id string, cluster string")
+    return local_df(spark, rows, "doc_id string, cluster string")

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import eager_checkpoint, materialize, t
+from ..plans._helpers import eager_checkpoint, local_df, materialize, t
 from ..plans.registry import query
 
 _PR_ITERS = 3
@@ -554,7 +554,8 @@ def kcore_trajectory(
         (r, na, ne, ck, i > 0 and rows[i - 1][1:] == (na, ne, ck))
         for i, (r, na, ne, ck) in enumerate(rows)
     ]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         out,
         "round bigint, n_alive bigint, n_edges bigint, "
         "deg_checksum bigint, is_fixpoint boolean",

@@ -21,7 +21,7 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -308,15 +308,13 @@ def phash_candidates(media: DataFrame, max_hamming: int = 7) -> DataFrame:
         raise ValueError(
             f"banding guarantees hamming < {_PHASH_BANDS}; got {max_hamming}"
         )
-    # unpinned: both band-join sides hash-shuffle the same (band, key)
-    # projection of the fingerprint stage, but only the exchange below the
-    # MapInPandas is reused — the Python decode runs once per join side
-    # (static and AQE-final plans alike; carried as the strict xfail
-    # KNOWN_UDF_DUPLICATES["q_multimodal_phash"] in tests/test_plan_audit.py)
+    # one grouped side: the fingerprints are exploded into their (band, key)
+    # buckets and each bucket pairs its members, sorted by id, i < j.  A
+    # self-join on (band, key) ran the Python decode once per join side
+    # (only the exchange below MapInPandas was reused).  A bucket is one
+    # row here, as it was one task's key group under the join.
     fp = phash_fingerprints(media)
     bands = fp.select(
-        "media_id",
-        "phash",
         F.explode(
             F.array(
                 *[
@@ -325,28 +323,43 @@ def phash_candidates(media: DataFrame, max_hamming: int = 7) -> DataFrame:
                         F.shiftrightunsigned(F.col("phash"), 8 * b)
                         .bitwiseAND(F.lit(255))
                         .alias("key"),
+                        "media_id",
+                        "phash",
                     )
                     for b in range(_PHASH_BANDS)
                 ]
             )
         ).alias("bk"),
-    ).select("media_id", "phash", "bk.band", "bk.key")
-    a = bands.select(
-        F.col("media_id").alias("id_a"), F.col("phash").alias("fp_a"), "band", "key"
+    ).select("bk.*")
+    m = F.col("m")
+
+    def pairs_from(i: Column) -> Column:
+        a = F.element_at(m, i)
+        return F.transform(
+            F.slice(m, i + 1, F.size(m) - i),
+            lambda b: F.struct(
+                a["media_id"].alias("id_a"),
+                b["media_id"].alias("id_b"),
+                F.bit_count(a["phash"].bitwiseXOR(b["phash"])).alias("hamming"),
+            ),
+        )
+
+    pairs = (
+        bands.groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list(F.struct("media_id", "phash"))).alias("m"))
+        .filter(F.size(m) >= 2)
+        .select(
+            F.explode(
+                F.flatten(F.transform(F.sequence(F.lit(1), F.size(m) - 1), pairs_from))
+            ).alias("p")
+        )
+        .select("p.*")
     )
-    b = bands.select(
-        F.col("media_id").alias("id_b"), F.col("phash").alias("fp_b"), "band", "key"
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "fp_a", "fp_b")
+    return (
+        pairs.filter(F.col("hamming") <= max_hamming)
         .distinct()
+        .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
     )
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return cand.select(
-        "id_a", "id_b", ham.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def _phash_oracle(max_hamming: int = 7) -> str:

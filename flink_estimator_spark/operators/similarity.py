@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..plans._helpers import eager_checkpoint, materialize, spread, t
+from ..plans._helpers import eager_checkpoint, local_df, materialize, spread, t
 from ..plans.registry import query
 
 
@@ -2484,8 +2484,8 @@ def q_kcenter_coreset(spark, sf_dir):
         )
         if s % 2 == 1:  # truncate the least()-fold lineage every other round
             mind = eager_checkpoint(mind)
-    return spark.createDataFrame(
-        rows, "step bigint, center_id bigint, radius_q bigint"
+    return local_df(
+        spark, rows, "step bigint, center_id bigint, radius_q bigint"
     ).orderBy("step")
 
 

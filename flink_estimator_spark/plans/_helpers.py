@@ -11,9 +11,12 @@ from __future__ import annotations
 import itertools
 import os
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..session import ensure_checkpoint_dir
 from ..sources.tables import read_table
@@ -21,6 +24,22 @@ from ..sources.tables import read_table
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def local_df(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """DataFrame of driver-held ``rows`` (tuples in field order) with
+    exactly ``schema`` (a ``StructType`` or a DDL string).  The rows go to
+    the JVM as one Arrow table and plan as a ``LocalTableScan``: a list
+    passed to ``createDataFrame`` instead becomes a pickled ``PythonRDD``,
+    and every action over it starts Python workers (SCALE.md §6)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    aschema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(aschema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, aschema)], schema=aschema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def dec(col: str | Column, scale: int = 2) -> Column:

@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._helpers import dec, spread, t
+from ._helpers import dec, local_df, spread, t
 from .registry import query
 
 
@@ -95,7 +95,8 @@ def q_range_join_bands(spark, sf_dir):
     scale; the fact side is spread so the per-pair predicate evaluation
     parallelizes even from a single-split scan)."""
     ev = spread(t(spark, sf_dir, "events"), "event_id")
-    bands = spark.createDataFrame(
+    bands = local_df(
+        spark,
         [("micro", 0.0, 5.0), ("small", 5.0, 20.0), ("mid", 20.0, 50.0), ("large", 50.0, 1e18)],
         T.StructType(
             [
@@ -217,15 +218,17 @@ def q_pandas_udf_score(spark, sf_dir):
     def score(qty: pd.Series, price: pd.Series, disc: pd.Series) -> pd.Series:
         return qty * 2.0 + price * 0.001 + (disc > 0.05) * 10.0
 
+    # sorted before the projection: a scalar UDF keeps its input's rows
+    # and order, and the sort's sampling job then reads no Python output
     return (
         t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") <= 500)
+        .orderBy("l_orderkey", "l_linenumber")
         .select(
             "l_orderkey",
             "l_linenumber",
             score("l_quantity", "l_extendedprice", "l_discount").alias("score"),
         )
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 

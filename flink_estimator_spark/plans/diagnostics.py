@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ._helpers import daily_revenue_week, dec, largest_remainder, t
+from ._helpers import daily_revenue_week, dec, largest_remainder, local_df, t
 from .registry import query
 
 
@@ -1058,9 +1058,7 @@ def q_benford_audit(spark, sf_dir):
     ).cast("bigint")
     obs = o.select(d.alias("d")).groupBy("d").agg(F.count("*").alias("n"))
     tot = obs.agg(F.sum("n").alias("total"))
-    exp = o.sparkSession.createDataFrame(
-        _BENFORD_Q6, "d bigint, expected_q6 bigint"
-    )
+    exp = local_df(spark, _BENFORD_Q6, "d bigint, expected_q6 bigint")
     return (
         exp.join(obs, "d", "left")
         .select("d", F.coalesce("n", F.lit(0)).alias("n"), "expected_q6")

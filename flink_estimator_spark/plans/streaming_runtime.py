@@ -81,7 +81,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from ..session import checkpoint_root
-from ._helpers import cep_chain_oracle, t
+from ._helpers import cep_chain_oracle, local_df, t
 from .registry import query
 
 # NOTE: ..streaming imports stay function-local in this module.  The plans
@@ -113,7 +113,7 @@ def _batches_df(spark, batches, schema, last_only=False):
         tabs = [tbl for _key, tbl in batches]
     tabs = [tbl for tbl in tabs if tbl.num_rows]
     if not tabs:
-        return spark.createDataFrame([], schema=schema)
+        return local_df(spark, [], schema)
     # enforce the DECLARED schema on the non-empty path too (ADVICE r9):
     # both branches then source types from the same declaration instead of
     # Arrow inference.  The check is metadata-only — passing schema= into

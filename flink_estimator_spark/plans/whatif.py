@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._helpers import t
+from ._helpers import local_df, t
 from .registry import query
 
 # Traffic multipliers over the observed rate.  The fixture spans ~30 days of
@@ -63,7 +63,8 @@ def q_whatif_capacity_grid(spark, sf_dir):
     grid = (
         profiles.crossJoin(
             F.broadcast(
-                spark.createDataFrame(
+                local_df(
+                    spark,
                     [(g, lat) for g in GROWTH for lat in LATENCY_TIERS],
                     "growth INT, latency DOUBLE",
                 )
@@ -86,7 +87,9 @@ def q_whatif_capacity_grid(spark, sf_dir):
         )
     )
     # widen to the full scenario schema (unset knobs ride as typed nulls;
-    # estimate_df applies the reference's Pydantic-style defaults)
+    # estimate_df applies the reference's Pydantic-style defaults).  Sorted
+    # here, not after estimate_df: the sort's sampling job would run the
+    # kernel a second time, and estimate_df keeps its input's row order.
     full = grid.select(
         *[
             F.col(f.name).cast(f.dataType)
@@ -94,7 +97,7 @@ def q_whatif_capacity_grid(spark, sf_dir):
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in scenario_schema.fields
         ]
-    )
+    ).orderBy("project_name")
     sized = estimate_df(full)
     return sized.select(
         "project_name",
@@ -103,4 +106,4 @@ def q_whatif_capacity_grid(spark, sf_dir):
         F.col("resource_estimates.total_memory_mb").alias("total_memory_mb"),
         F.col("resource_estimates.total_worker_node_needed").alias("nodes"),
         F.col("cluster_recommendations.taskmanagers.count").alias("taskmanagers"),
-    ).orderBy("project_name")
+    )

@@ -187,6 +187,41 @@ def test_batched_distributed_bpe_is_exact_and_sublinear(spark):
     assert jobs <= 10, jobs
 
 
+def _checkpoint_files(sc) -> set[str]:
+    root = sc._jsc.sc().getCheckpointDir().get().removeprefix("file:")
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+
+def test_auto_mode_writes_no_checkpoint(spark):
+    """Auto mode decides local vs distributed from one bounded collect of
+    the vocabulary, which also feeds local learning: nothing is
+    checkpointed on the local path."""
+    from flink_estimator_spark.session import ensure_checkpoint_dir
+
+    sc = spark.sparkContext
+    ensure_checkpoint_dir(sc)
+    docs = t(spark, SF_DIR, "documents")
+    before = _checkpoint_files(sc)
+    stats: dict = {}
+    merges, _ = bpe_train(docs, iters=6, _stats=stats)
+    assert stats["rounds"] == 0, stats
+    assert _checkpoint_files(sc) - before == set()
+    texts = [r["text"] for r in docs.select("text").collect()]
+    assert merges == _reference_bpe(texts, iters=6)
+
+
+def test_auto_mode_over_cap_goes_distributed(spark):
+    """A vocabulary above ``local_cap`` runs the distributed loop, whose
+    merges still equal the reference trainer's."""
+    docs = t(spark, SF_DIR, "documents")
+    stats: dict = {}
+    got, vocab = bpe_train(docs, iters=6, local_cap=5, _stats=stats)
+    assert stats["rounds"] >= 1, stats
+    assert vocab.count() > 5
+    texts = [r["text"] for r in docs.select("text").collect()]
+    assert got == _reference_bpe(texts, iters=6)
+
+
 def test_merges_compose_into_multichar_tokens(spark):
     docs = t(spark, SF_DIR, "documents")
     merges, vocab = bpe_train(docs, iters=6)

@@ -6,14 +6,18 @@ scale-up, asserted against Catalyst's actual output rather than hoped for:
 * dimension joins broadcast instead of shuffling the fact side;
 * no query plans an unintended cartesian product;
 * hot aggregation paths stay inside whole-stage codegen;
-* no Python UDF is evaluated by two Python stages of one plan.
+* no Python UDF is evaluated by two Python stages of one plan;
+* no global sort samples Python output, and no plan reads driver rows
+  through a ``PythonRDD``.
 """
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
 import os
+import pathlib
 import re
 
 import pytest
@@ -221,18 +225,94 @@ def test_python_udf_calls_parses_plan_nodes():
     assert python_eval_nodes(plan) == [{"score", "other"}, {"run"}]
 
 
+# A global sort's range partitioner samples its input in a job of its own,
+# so a Python stage in the same stage below a ``rangepartitioning`` Exchange
+# runs twice.  Row-aligned Python (scalar UDFs) goes above the sort instead;
+# the entries here are map/grouped-map stages whose output rows are not
+# their input rows, so the sort cannot move below them.  Query -> reason.
+ALLOWED_SAMPLER_PYTHON = {
+    "q_grouped_pandas_minmax": "applyInPandas emits the scaled rows the query sorts",
+    "q_multimodal_ahash": "mapInPandas decodes the hashes the query sorts",
+    "q_multimodal_decode": "mapInPandas decodes the image rows the query sorts",
+    "q_multimodal_features": "mapInPandas decodes the feature rows the query sorts",
+    "q_multimodal_frames": "mapInPandas explodes each clip into the frames the query sorts",
+    "q_multimodal_jpeg": "mapInPandas decodes the JPEG rows the query sorts",
+    "q_multimodal_resize": "mapInPandas emits the resized rows the query sorts",
+    "q_multimodal_wav": "mapInPandas decodes the audio rows the query sorts",
+    "q_multimodal_y4m": "mapInPandas decodes the video frames the query sorts",
+}
+
+_NODE = re.compile(r"^[\s:|]*[+:]- ")
+
+
+def sampled_python_nodes(plan: str) -> list[str]:
+    """Python-eval nodes that share a stage with the child side of a
+    ``rangepartitioning`` Exchange: the lines below it down to the next
+    exchange (a stage boundary)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        m = _NODE.match(line)
+        return len(m.group(0)) if m else 0
+
+    found = []
+    for i, line in enumerate(lines):
+        if "Exchange rangepartitioning" not in line:
+            continue
+        top, skip = depth(line), None
+        for below in lines[i + 1:]:
+            d = depth(below)
+            if d <= top:
+                break
+            if skip is not None and d > skip:
+                continue
+            skip = d if "Exchange" in below else None
+            if skip is None and _PY_EVAL_NODE.search(below):
+                found.append(below.strip())
+    return found
+
+
+def test_sampled_python_nodes_stop_at_stage_boundaries():
+    plan = """\
+*(3) Sort [k#1 ASC NULLS FIRST], true, 0
++- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+   +- *(2) Project [k#1, v#2]
+      +- MapInPandas run(k#0)#3, [k#1, v#2], false
+         +- Exchange hashpartitioning(k#0, 4), REPARTITION_BY_NUM, [plan_id=7]
+            +- ArrowEvalPython [other(k#0)#4], [pythonUDF0#5], 200
+               +- LocalTableScan [k#0]"""
+    assert sampled_python_nodes(plan) == ["+- MapInPandas run(k#0)#3, [k#1, v#2], false"]
+    above = """\
+*(3) Project [k#1, pythonUDF0#5 AS s#4]
++- ArrowEvalPython [score(k#1)#3], [pythonUDF0#5], 200
+   +- *(2) Sort [k#1 ASC NULLS FIRST], true, 0
+      +- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+         +- LocalTableScan [k#1]"""
+    assert sampled_python_nodes(above) == []
+
+
+def python_rdd_leaves(plan) -> list[str]:
+    """Lineages of a physical plan's RDD scans that pass through a
+    ``PythonRDD``: driver rows pickled by ``createDataFrame(list)``.  Read
+    from the plan's leaves, so nothing runs, and broadcast sides count."""
+    leaves = plan.collectLeaves()
+    found = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "RDDScanExec":
+            lineage = leaf.rdd().toDebugString()
+            if "PythonRDD" in lineage:
+                found.append(lineage)
+    return found
+
+
 # A query may call one Python UDF from two Python stages only where it
 # really applies that UDF to two different inputs.  Entries: query -> reason.
 ALLOWED_UDF_REPEATS: dict[str, str] = {}
 
 # Plans that evaluate one UDF on the same rows twice.  Each is a defect on
 # ROADMAP.md, marked as a strict xfail so that fixing it forces the entry out.
-KNOWN_UDF_DUPLICATES = {
-    # both sides of the band self-join run the fingerprint decode: the
-    # exchange under MapInPandas is reused, the MapInPandas is not (also
-    # in the AQE final plan, where one side becomes a broadcast)
-    "q_multimodal_phash": "fingerprint MapInPandas runs once per join side",
-}
+KNOWN_UDF_DUPLICATES: dict[str, str] = {}
 
 
 @pytest.mark.parametrize("name", [
@@ -241,19 +321,49 @@ KNOWN_UDF_DUPLICATES = {
     for n in sorted(QUERIES)
 ])
 def test_python_udf_evaluated_once(static_plan_spark, name):
-    """A Python UDF that shows up in two Python-eval nodes runs twice per
-    row: the optimizer copied its call (a filter pushed below the projection
-    that calls it, or a subtree planned once per consumer)."""
+    """Python work runs once per row.  A Python UDF that shows up in two
+    Python-eval nodes runs twice: the optimizer copied its call (a filter
+    pushed below the projection that calls it, or a subtree planned once
+    per consumer).  A Python stage that a global sort samples runs twice.
+    And rows the driver holds must reach the JVM as Arrow
+    (``plans._helpers.local_df``), not through a ``PythonRDD`` that starts
+    Python workers for every action over them."""
     if name in ALLOWED_UDF_REPEATS:
         pytest.skip(ALLOWED_UDF_REPEATS[name])
-    plan = (
+    physical = (
         QUERIES[name].builder(static_plan_spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
+        ._jdf.queryExecution().executedPlan()
     )
+    plan = physical.toString()
     nodes = python_eval_nodes(plan)
     repeated = sorted({u for calls in nodes for u in calls
                        if sum(u in c for c in nodes) > 1})
     assert not repeated, f"{name}: {repeated} evaluated by more than one Python stage:\n{plan}"
+    sampled = sampled_python_nodes(plan)
+    if name in ALLOWED_SAMPLER_PYTHON:
+        assert sampled, f"{name} is in ALLOWED_SAMPLER_PYTHON but no sort samples Python"
+    else:
+        assert not sampled, f"{name}: a global sort samples Python output: {sampled}"
+    pickled = python_rdd_leaves(physical)
+    assert not pickled, f"{name} reads driver rows through Python:\n{pickled[0]}"
+
+
+def test_no_list_built_dataframes():
+    """Driver rows go through ``local_df``: ``createDataFrame`` over a list
+    literal or comprehension plans a pickled ``PythonRDD``."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "flink_estimator_spark"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and node.args
+                and isinstance(node.args[0], (ast.List, ast.ListComp))
+            ):
+                found.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    assert not found, found
 
 
 @pytest.mark.parametrize("name", ["q1_pricing_summary", "q6_forecast_revenue"])
