@@ -191,13 +191,6 @@ def _with_sql(df: DataFrame, sql: dict[str, str]) -> DataFrame:
     return df.withColumns({name: F.expr(e) for name, e in sql.items()})
 
 
-def apply_defaults(df: DataFrame) -> DataFrame:
-    """Pydantic-style defaulting only (reference models.py:67-84) — no
-    T-shirt overwrite, so the result still carries the *raw* capacity values
-    the reference validates against."""
-    return _with_sql(df, _default_sql(df.columns))
-
-
 def normalize(df: DataFrame) -> DataFrame:
     """Defaulting + T-shirt normalization + derived columns, all Catalyst
     (reference models.py:67-84, estimation.py:601-606)."""

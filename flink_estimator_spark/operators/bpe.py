@@ -90,6 +90,24 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
     return pairs.groupBy("p.a", "p.b").agg(F.sum("freq").alias("n"))
 
 
+def _greedy_apply(syms: list[str], merges: list[tuple[str, str]]) -> list[str]:
+    """Standard BPE application: each merge rule, in list order, applied
+    greedily left-to-right over the symbol sequence — the one merge loop
+    behind training (``_local_bpe``, ``_merge_pairs``) and encoding."""
+    out = list(syms)
+    for a, b in merges:
+        nxt, i, n = [], 0, len(out)
+        while i < n:
+            if i + 1 < n and out[i] == a and out[i + 1] == b:
+                nxt.append(a + b)
+                i += 2
+            else:
+                nxt.append(out[i])
+                i += 1
+        out = nxt
+    return out
+
+
 def _merge_pairs(vocab: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """Vocabulary-local application of an ORDERED merge batch: each (a, b)
     -> ab left-to-right (standard BPE greedy semantics), applied in list
@@ -98,20 +116,7 @@ def _merge_pairs(vocab: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            merged = []
-            for syms in pdf["syms"]:
-                out = list(syms)
-                for a, b in pairs:
-                    nxt, i, n = [], 0, len(out)
-                    while i < n:
-                        if i + 1 < n and out[i] == a and out[i + 1] == b:
-                            nxt.append(a + b)
-                            i += 2
-                        else:
-                            nxt.append(out[i])
-                            i += 1
-                    out = nxt
-                merged.append(out)
+            merged = [_greedy_apply(syms, pairs) for syms in pdf["syms"]]
             yield pd.DataFrame(
                 {"word": pdf["word"], "freq": pdf["freq"], "syms": merged}
             )
@@ -221,15 +226,7 @@ def _local_bpe(
                     where.pop(p, None)
                 else:
                     counts[p] = c
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
+            out = _greedy_apply(syms, [(a, b)])
             words[wi] = (out, f)
             for i in range(len(out) - 1):
                 p = (out[i], out[i + 1])
@@ -376,24 +373,6 @@ CERT_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def _greedy_apply(syms: list[str], merges: list[tuple[str, str]]) -> list[str]:
-    """Standard BPE application: each merge rule, in list order, applied
-    greedily left-to-right over the symbol sequence (the `_merge_pairs`
-    inner loop, shared semantics with training)."""
-    out = list(syms)
-    for a, b in merges:
-        nxt, i, n = [], 0, len(out)
-        while i < n:
-            if i + 1 < n and out[i] == a and out[i + 1] == b:
-                nxt.append(a + b)
-                i += 2
-            else:
-                nxt.append(out[i])
-                i += 1
-        out = nxt
-    return out
-
-
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -454,19 +433,60 @@ def _cert_replace_chain_sql() -> str:
     return expr
 
 
-@query(
-    "q_bpe_encode_cert",
-    oracle=rf"""
+def _cert_enc_ctes(key: str) -> str:
+    """DuckDB CTEs of the certificate encode: ``words`` (``key``, word) for
+    each ``[a-z]+`` word of the documents, ``enc`` adding its replace-chain
+    encoding ``e`` (one ``(`` per token)."""
+    return rf"""
         WITH words AS (
-            SELECT doc_id, word FROM (
-                SELECT doc_id,
+            SELECT {key}, word FROM (
+                SELECT {key},
                        unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
                 FROM documents)
             WHERE regexp_full_match(word, '[a-z]+')),
         enc AS (
-            SELECT doc_id, word,
+            SELECT {key}, word,
                    {_cert_replace_chain_sql()} AS e
             FROM words)
+"""
+
+
+def _cert_per_word(spark, sf_dir, key: str) -> DataFrame:
+    """(``key``, wlen, wtok): each ``[a-z]+`` word of the documents with its
+    length and its token count under CERT_MERGES, encoded in built-in
+    string functions (``(t)(h)(e</w>)`` symbols, one ``replace`` per
+    ordered merge rule) so the encode is JVM codegen."""
+    from functools import reduce
+
+    d = t(spark, sf_dir, "documents")
+    words = (
+        spread(d, "doc_id")
+        .select(
+            key,
+            F.explode(
+                F.split(F.lower(F.trim(F.col("text"))), _WORD_RE)
+            ).alias("word"),
+        )
+        .filter(F.col("word").rlike("^[a-z]+$"))
+    )
+    sym = F.concat(
+        F.lit("("), F.array_join(F.split("word", ""), ")("), F.lit(")(</w>)")
+    )
+    enc = reduce(
+        lambda c, m: F.replace(c, F.lit(f"({m[0]})({m[1]})"), F.lit(f"({m[0]}{m[1]})")),
+        CERT_MERGES,
+        sym,
+    )
+    return words.select(
+        key,
+        F.length("word").alias("wlen"),
+        (F.length(enc) - F.length(F.replace(enc, F.lit("("), F.lit("")))).alias("wtok"),
+    )
+
+
+@query(
+    "q_bpe_encode_cert",
+    oracle=_cert_enc_ctes("doc_id") + """
         SELECT doc_id,
                CAST(count(*) AS BIGINT) AS n_words,
                CAST(sum(length(word)) AS BIGINT) AS n_chars,
@@ -491,34 +511,9 @@ def q_bpe_encode_cert(spark, sf_dir):
     path for learned (non-literal) merge tables is ``bpe_encode`` (Arrow
     pass with per-batch word memoization), differentially tested against
     this query on CERT_MERGES."""
-    from functools import reduce
-
-    d = t(spark, sf_dir, "documents")
-    words = (
-        spread(d, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), _WORD_RE)
-            ).alias("word"),
-        )
-        .filter(F.col("word").rlike("^[a-z]+$"))
-    )
-    sym = F.concat(
-        F.lit("("), F.array_join(F.split("word", ""), ")("), F.lit(")(</w>)")
-    )
-    enc = reduce(
-        lambda c, m: F.replace(c, F.lit(f"({m[0]})({m[1]})"), F.lit(f"({m[0]}{m[1]})")),
-        CERT_MERGES,
-        sym,
-    )
-    per_word = words.select(
-        "doc_id",
-        F.length("word").alias("wlen"),
-        (F.length(enc) - F.length(F.replace(enc, F.lit("("), F.lit("")))).alias("wtok"),
-    )
     return (
-        per_word.groupBy("doc_id")
+        _cert_per_word(spark, sf_dir, "doc_id")
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
             F.sum("wlen").alias("n_chars"),
@@ -530,17 +525,7 @@ def q_bpe_encode_cert(spark, sf_dir):
 
 @query(
     "q_tokenizer_fertility",
-    oracle=rf"""
-        WITH words AS (
-            SELECT source, word FROM (
-                SELECT source,
-                       unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-                FROM documents)
-            WHERE regexp_full_match(word, '[a-z]+')),
-        enc AS (
-            SELECT source, word,
-                   {_cert_replace_chain_sql()} AS e
-            FROM words)
+    oracle=_cert_enc_ctes("source") + """
         SELECT source,
                CAST(count(*) AS BIGINT) AS n_words,
                CAST(sum(length(word)) AS BIGINT) AS n_chars,
@@ -568,34 +553,9 @@ def q_tokenizer_fertility(spark, sf_dir):
     re-aggregated at source grain with exact basis-point ratios — the
     eval loop over the tokenizer family mirrors the classifier family's
     (train q_bpe_merges -> apply q_bpe_encode_cert -> EVALUATE here)."""
-    from functools import reduce
-
-    d = t(spark, sf_dir, "documents")
-    words = (
-        spread(d, "doc_id")
-        .select(
-            "source",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), _WORD_RE)
-            ).alias("word"),
-        )
-        .filter(F.col("word").rlike("^[a-z]+$"))
-    )
-    sym = F.concat(
-        F.lit("("), F.array_join(F.split("word", ""), ")("), F.lit(")(</w>)")
-    )
-    enc = reduce(
-        lambda c, m: F.replace(c, F.lit(f"({m[0]})({m[1]})"), F.lit(f"({m[0]}{m[1]})")),
-        CERT_MERGES,
-        sym,
-    )
-    per_word = words.select(
-        "source",
-        F.length("word").alias("wlen"),
-        (F.length(enc) - F.length(F.replace(enc, F.lit("("), F.lit("")))).alias("wtok"),
-    )
     return (
-        per_word.groupBy("source")
+        _cert_per_word(spark, sf_dir, "source")
+        .groupBy("source")
         .agg(
             F.count("*").alias("n_words"),
             F.sum("wlen").alias("n_chars"),

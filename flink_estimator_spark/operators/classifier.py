@@ -257,16 +257,32 @@ def q_classifier_eval(spark, sf_dir):
     )
 
 
-@query(
-    "q_classifier_auc",
-    oracle=rf"""
-        WITH {_NB_SCORED_CTES},
+# ``sb`` (s, np, nn): held-out docs per coarse score bucket (score_q div
+# 1e4, 1e-2 log-odds), positives (English) and negatives apart
+_SCORE_BUCKET_CTES = f"""{_NB_SCORED_CTES},
         sb AS (
             SELECT score_q // 10000 AS s,
                    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS np,
                    CAST(sum(CASE WHEN lang != 'en' THEN 1 ELSE 0 END) AS BIGINT) AS nn
             FROM scored GROUP BY 1
-        ),
+        )"""
+
+
+def _score_buckets(spark, sf_dir):
+    """The Spark form of ``_SCORE_BUCKET_CTES``' ``sb``."""
+    is_pos = (F.col("lang") == "en").cast("bigint")
+    return (
+        _nb_scored(spark, sf_dir)
+        .select(F.expr("score_q DIV 10000").alias("s"), is_pos.alias("p"))
+        .groupBy("s")
+        .agg(F.sum("p").alias("np"), F.sum(F.lit(1) - F.col("p")).alias("nn"))
+    )
+
+
+@query(
+    "q_classifier_auc",
+    oracle=rf"""
+        WITH {_SCORE_BUCKET_CTES},
         c AS (
             SELECT s, np, nn,
                    COALESCE(sum(nn) OVER (ORDER BY s
@@ -307,13 +323,7 @@ def q_classifier_auc(spark, sf_dir):
     Overflow posture matches ks_two_sample: u2*10000 stays in BIGINT
     while n_pos*n_neg <= (2^63-1)/2e4, ~6e5 held-out docs per class
     squared — beyond that the same quantized-fraction protocol applies."""
-    s = _nb_scored(spark, sf_dir)
-    is_pos = (F.col("lang") == "en").cast("bigint")
-    sb = (
-        s.select(F.expr("score_q DIV 10000").alias("s"), is_pos.alias("p"))
-        .groupBy("s")
-        .agg(F.sum("p").alias("np"), F.sum(F.lit(1) - F.col("p")).alias("nn"))
-    )
+    sb = _score_buckets(spark, sf_dir)
     w = W.orderBy("s").rowsBetween(W.unboundedPreceding, -1)
     c = sb.select(
         "s", "np", "nn",
@@ -540,13 +550,7 @@ def q_classifier_calibration(spark, sf_dir):
 @query(
     "q_threshold_sweep",
     oracle=rf"""
-        WITH {_NB_SCORED_CTES},
-        sb AS (
-            SELECT score_q // 10000 AS s,
-                   CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS np,
-                   CAST(sum(CASE WHEN lang != 'en' THEN 1 ELSE 0 END) AS BIGINT) AS nn
-            FROM scored GROUP BY 1
-        ),
+        WITH {_SCORE_BUCKET_CTES},
         c AS (
             SELECT s,
                    CAST(sum(np) OVER (ORDER BY s DESC
@@ -581,13 +585,7 @@ def q_threshold_sweep(spark, sf_dir):
     precision/recall/F1 are single truncating integral divisions
     (F1 = 2tp/(2tp+fp+fn) needs no intermediate ratio: with
     fn = n_pos − tp it is exactly tp·20000 div (tp+fp+n_pos))."""
-    s = _nb_scored(spark, sf_dir)
-    is_pos = (F.col("lang") == "en").cast("bigint")
-    sb = (
-        s.select(F.expr("score_q DIV 10000").alias("s"), is_pos.alias("p"))
-        .groupBy("s")
-        .agg(F.sum("p").alias("np"), F.sum(F.lit(1) - F.col("p")).alias("nn"))
-    )
+    sb = _score_buckets(spark, sf_dir)
     w = W.orderBy(F.desc("s")).rowsBetween(W.unboundedPreceding, 0)
     c = sb.select(
         "s",

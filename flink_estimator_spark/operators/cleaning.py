@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..plans._helpers import spread, t, word_ngrams
+from ..plans._helpers import JACCARD_CLUSTER_CTES, spread, t, word_ngrams
 from ..plans.registry import query
 from .dedup import connected_components, jaccard_pairs
 
@@ -184,44 +184,7 @@ def q_training_order(spark, sf_dir):
 
 @query(
     "q_dedup_keep_list",
-    oracle=r"""
-        WITH pairs AS (
-            SELECT id_a, id_b FROM (
-                WITH sh AS (
-                    SELECT DISTINCT doc_id, shingle FROM (
-                        SELECT doc_id,
-                               array_to_string(words[i:i+4], ' ') AS shingle
-                        FROM (
-                            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                            FROM documents
-                        ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-                    )
-                ),
-                sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-                inter AS (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2
-                )
-                SELECT id_a, id_b
-                FROM inter
-                JOIN sizes sa ON sa.doc_id = id_a
-                JOIN sizes sb ON sb.doc_id = id_b
-                WHERE CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter) >= 0.5
-            )
-        ),
-        sym AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT src AS id FROM sym),
-        reach AS (
-            WITH RECURSIVE r(src, dst) AS (
-                SELECT id, id FROM nodes
-                UNION
-                SELECT r.src, s.dst FROM r JOIN sym s ON r.dst = s.src
-            ) SELECT * FROM r
-        ),
+    oracle=JACCARD_CLUSTER_CTES + """,
         labels AS (
             SELECT src AS doc_id, min(dst) AS cluster
             FROM reach GROUP BY src

@@ -22,7 +22,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import eager_checkpoint, materialize, spread, t, word_ngrams
+from ..plans._helpers import (
+    JACCARD_CLUSTER_CTES,
+    JACCARD_CTES,
+    SHINGLE_INTER_SQL,
+    SHINGLE_SIZE_CTES,
+    SHINGLES_CTE,
+    eager_checkpoint,
+    materialize,
+    minhash_ctes,
+    spread,
+    t,
+    word_ngrams,
+)
 from ..plans.registry import query
 from .textstats import fingerprint
 
@@ -374,23 +386,7 @@ def q_dedup_exact_docs(spark, sf_dir):
 
 @query(
     "q_dedup_jaccard_pairs",
-    oracle=r"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+    oracle=JACCARD_CTES + """
         SELECT id_a, id_b, inter,
                CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter) AS jaccard
         FROM inter
@@ -406,52 +402,6 @@ def q_dedup_jaccard_pairs(spark, sf_dir):
     return jaccard_pairs(t(spark, sf_dir, "documents"), threshold=0.5).orderBy(
         "id_a", "id_b"
     )
-
-
-def minhash_ctes(num_hashes: int = 16, bands: int = 4) -> str:
-    """The sh/sig/banded CTE bodies of the portable MinHash-LSH DuckDB
-    replay (md5-60 shingles, md5-word signatures, md5 band keys) — shared
-    by the batch LSH oracle below and the streaming near-dup gate's oracle
-    (plans/streaming_runtime.py), which append different pair selections."""
-    rows = num_hashes // bands
-    h_mins = ",\n            ".join(
-        f"min(CAST(('0x' || substr(md5(CAST(shingle AS VARCHAR) || '#{i // 4}'),"
-        f" {(i % 4) * 8 + 1}, 8)) AS BIGINT)) AS h{i}"
-        for i in range(num_hashes)
-    )
-
-    def key_sql(b: int) -> str:
-        concat = " || '#' || ".join(
-            f"CAST(h{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        return f"CAST(('0x' || substr(md5({concat}), 1, 15)) AS BIGINT)"
-
-    band_rows = "\n                UNION ALL\n".join(
-        f"                SELECT doc_id, {b} AS band, {key_sql(b)} AS key FROM sig"
-        for b in range(bands)
-    )
-    return f"""sh AS (
-            SELECT DISTINCT doc_id,
-                   CAST(('0x' || substr(md5(shingle_str), 1, 15)) AS BIGINT)
-                       AS shingle
-            FROM (
-                SELECT doc_id, array_to_string(words[i:i+4], ' ') AS shingle_str
-                FROM (
-                    SELECT doc_id,
-                           string_split_regex(trim(lower(text)), '\\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1,
-                                greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sig AS (
-            SELECT doc_id,
-            {h_mins}
-            FROM sh GROUP BY doc_id
-        ),
-        banded AS (
-{band_rows}
-        )"""
 
 
 def _minhash_oracle(num_hashes: int = 16, bands: int = 4) -> str:
@@ -657,44 +607,7 @@ def connected_components(
 
 @query(
     "q_dedup_clusters",
-    oracle=r"""
-        WITH pairs AS (
-            SELECT id_a, id_b FROM (
-                WITH sh AS (
-                    SELECT DISTINCT doc_id, shingle FROM (
-                        SELECT doc_id,
-                               array_to_string(words[i:i+4], ' ') AS shingle
-                        FROM (
-                            SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                            FROM documents
-                        ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-                    )
-                ),
-                sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-                inter AS (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2
-                )
-                SELECT id_a, id_b
-                FROM inter
-                JOIN sizes sa ON sa.doc_id = id_a
-                JOIN sizes sb ON sb.doc_id = id_b
-                WHERE CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter) >= 0.5
-            )
-        ),
-        sym AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT src AS id FROM sym),
-        reach AS (
-            WITH RECURSIVE r(src, dst) AS (
-                SELECT id, id FROM nodes
-                UNION
-                SELECT r.src, s.dst FROM r JOIN sym s ON r.dst = s.src
-            ) SELECT * FROM r
-        )
+    oracle=JACCARD_CLUSTER_CTES + """
         SELECT src AS doc_id, min(dst) AS cluster
         FROM reach GROUP BY src
         ORDER BY doc_id
@@ -771,23 +684,7 @@ def q_shared_spans(spark, sf_dir):
 
 @query(
     "q_minhash_recall",
-    oracle=r"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+    oracle=JACCARD_CTES + """
         SELECT 'minhash_vs_exact' AS method,
                CAST(count(*) AS BIGINT) AS n_high_pairs,
                TRUE AS recall_ok
@@ -1016,23 +913,7 @@ def prefix_jaccard_pairs(
 
 @query(
     "q_jaccard_prefix_pairs",
-    oracle=r"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+    oracle=JACCARD_CTES + """
         SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
                CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter) AS jaccard
         FROM inter
@@ -1110,18 +991,8 @@ def q_incremental_dedup(spark, sf_dir):
 
 @query(
     "q_containment_pairs",
-    oracle=r"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+    oracle=f"""
+        WITH {SHINGLE_SIZE_CTES},
         inter AS (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
             FROM sh a JOIN sh b ON a.shingle = b.shingle
@@ -1180,17 +1051,8 @@ def q_containment_pairs(spark, sf_dir):
 
 @query(
     "q_dup_ngram_fraction",
-    oracle=r"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
+    oracle=f"""
+        WITH {SHINGLES_CTE},
         docfreq AS (
             SELECT shingle, CAST(count(*) AS BIGINT) AS df_ FROM sh GROUP BY 1
         )
@@ -1429,20 +1291,19 @@ def q_winnow_shared_pairs(spark, sf_dir):
 
 _RUN_K = 5          # shingle width for the run detector
 _RUN_MAX_DF = 50    # boilerplate guard on positional shingle frequency
-
-
-@query(
-    "q_longest_shared_run",
-    oracle=rf"""
-        WITH seq AS (
+# DuckDB side of the diagonal-island queries (Spark: ``_diagonal_islands``).
+# ``seq``: (doc_id, token list l, 1-based position i) per token; ``m``: the
+# positional _RUN_K-gram md5 matches between documents, (id_a, id_b, pa,
+# diag = pa - pb), shingles above _RUN_MAX_DF occurrences dropped.
+_RUN_SEQ_CTE = r"""seq AS (
             SELECT doc_id, l, unnest(range(1, len(l) + 1)) AS i
             FROM (
                 SELECT doc_id,
                        string_split_regex(lower(trim(text)), '\s+') AS l
                 FROM documents
             )
-        ),
-        sh AS (
+        )"""
+_RUN_MATCH_CTES = f"""sh AS (
             SELECT doc_id, i AS pos,
                    CAST(('0x' || substr(md5(
                        array_to_string(l[i : i + {_RUN_K - 1}], ' ')
@@ -1459,7 +1320,14 @@ _RUN_MAX_DF = 50    # boilerplate guard on positional shingle frequency
                    a.pos AS pa, a.pos - b.pos AS diag
             FROM keep a JOIN keep b
               ON a.s = b.s AND a.doc_id < b.doc_id
-        ),
+        )"""
+
+
+@query(
+    "q_longest_shared_run",
+    oracle=rf"""
+        WITH {_RUN_SEQ_CTE},
+        {_RUN_MATCH_CTES},
         runs AS (
             SELECT id_a, id_b,
                    CAST(count(*) AS BIGINT) AS run_len
@@ -1646,33 +1514,9 @@ def rewrite_duplicated_runs(
 @query(
     "q_dedup_rewrite",
     oracle=rf"""
-        WITH seq AS (
-            SELECT doc_id, l, unnest(range(1, len(l) + 1)) AS i
-            FROM (
-                SELECT doc_id,
-                       string_split_regex(lower(trim(text)), '\s+') AS l
-                FROM documents
-            )
-        ),
+        WITH {_RUN_SEQ_CTE},
         toks AS (SELECT doc_id, i AS pos, l[i] AS tok FROM seq),
-        sh AS (
-            SELECT doc_id, i AS pos,
-                   CAST(('0x' || substr(md5(
-                       array_to_string(l[i : i + {_RUN_K - 1}], ' ')
-                   ), 1, 15)) AS BIGINT) AS s
-            FROM seq WHERE i + {_RUN_K - 1} <= len(l)
-        ),
-        fdf AS (SELECT s, count(*) AS d FROM sh GROUP BY 1),
-        keep AS (
-            SELECT sh.doc_id, sh.pos, sh.s
-            FROM sh JOIN fdf USING (s) WHERE fdf.d <= {_RUN_MAX_DF}
-        ),
-        m AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   a.pos AS pa, a.pos - b.pos AS diag
-            FROM keep a JOIN keep b
-              ON a.s = b.s AND a.doc_id < b.doc_id
-        ),
+        {_RUN_MATCH_CTES},
         isl AS (
             SELECT id_a, id_b, diag, pa,
                    pa - row_number() OVER (
@@ -1947,27 +1791,12 @@ _CURVE_THRESHOLDS = (1, 5, 10, 20, 30, 40, 50, 60, 70, 80, 90)  # percent
 @query(
     "q_dedup_threshold_curve",
     oracle=rf"""
-        WITH sh AS (
-            SELECT DISTINCT doc_id, shingle FROM (
-                SELECT doc_id,
-                       array_to_string(words[i:i+4], ' ') AS shingle
-                FROM (
-                    SELECT doc_id,
-                           string_split_regex(trim(lower(text)), '\s+') AS words
-                    FROM documents
-                ), LATERAL (SELECT unnest(generate_series(1,
-                                greatest(len(words) - 4, 0))) AS i)
-            )
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+        WITH {SHINGLE_SIZE_CTES},
         pairs AS (
             SELECT id_a, id_b, inter,
                    sa.n_sh + sb.n_sh - inter AS uni
             FROM (
-                SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-                FROM sh a JOIN sh b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
+                {SHINGLE_INTER_SQL}
             )
             JOIN sizes sa ON sa.doc_id = id_a
             JOIN sizes sb ON sb.doc_id = id_b

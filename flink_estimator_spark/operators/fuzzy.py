@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import local_df, t
+from ..plans._helpers import REACH_CTES, local_df, t
 from ..plans.registry import query
 
 # digit positions (1-indexed within the string) for Customer#ddddddddd,
@@ -286,14 +286,7 @@ def q_fuzzy_name_pairs(spark, sf_dir):
             SELECT name_a AS src, name_b AS dst FROM pairs
             UNION SELECT name_b, name_a FROM pairs
         ),
-        nodes AS (SELECT DISTINCT src AS id FROM sym),
-        reach AS (
-            WITH RECURSIVE r(src, dst) AS (
-                SELECT id, id FROM nodes
-                UNION
-                SELECT r.src, s.dst FROM r JOIN sym s ON r.dst = s.src
-            ) SELECT * FROM r
-        ),
+        {REACH_CTES},
         lab AS (SELECT src AS name, min(dst) AS cluster FROM reach GROUP BY src)
         SELECT lab.cluster AS canonical_name,
                CAST(count(*) AS BIGINT) AS n_members,

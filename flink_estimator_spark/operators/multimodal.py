@@ -588,15 +588,24 @@ DECODE_SCHEMA = T.StructType(
 _IMG_W, _IMG_H = 16, 12
 
 
-def _synthetic_rgb(media_id: int) -> "np.ndarray":
+def _synthetic_rgb(media_id: int, h: int = _IMG_H, w: int = _IMG_W) -> "np.ndarray":
     """Deterministic (h, w, 3) test image: flat byte j carries
     (media_id * 31 + j * 7) % 256 — an arithmetic progression DuckDB can
-    replay exactly, so the oracle checks the REAL encode->decode round
-    trip end-to-end."""
-    j = np.arange(_IMG_H * _IMG_W * 3, dtype=np.int64)
-    return ((media_id * 31 + j * 7) % 256).astype(np.uint8).reshape(
-        _IMG_H, _IMG_W, 3
-    )
+    replay exactly (``_rgb_pixels_cte``), so the oracle checks the REAL
+    encode->decode round trip end-to-end."""
+    j = np.arange(h * w * 3, dtype=np.int64)
+    return ((media_id * 31 + j * 7) % 256).astype(np.uint8).reshape(h, w, 3)
+
+
+def _rgb_pixels_cte(n: int) -> str:
+    """DuckDB ``px`` (media_id, j, v): the first ``n`` bytes of every
+    ``_synthetic_rgb`` image (documents below 60)."""
+    return f"""px AS (
+            SELECT d.doc_id AS media_id, j.j,
+                   (d.doc_id * 31 + j.j * 7) % 256 AS v
+            FROM (SELECT doc_id FROM documents WHERE doc_id < 60) d,
+                 (SELECT unnest(range(0, {n})) AS j) j
+        )"""
 
 
 def decode_image_features(media: DataFrame) -> DataFrame:
@@ -626,12 +635,7 @@ def decode_image_features(media: DataFrame) -> DataFrame:
 @query(
     "q_multimodal_decode",
     oracle=f"""
-        WITH px AS (
-            SELECT d.doc_id AS media_id, j.j,
-                   (d.doc_id * 31 + j.j * 7) % 256 AS v
-            FROM (SELECT doc_id FROM documents WHERE doc_id < 60) d,
-                 (SELECT unnest(range(0, {_IMG_H * _IMG_W * 3})) AS j) j
-        )
+        WITH {_rgb_pixels_cte(_IMG_H * _IMG_W * 3)}
         SELECT media_id,
                CAST({_IMG_W} AS INT) AS width,
                CAST({_IMG_H} AS INT) AS height,
@@ -984,22 +988,10 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
-def _synthetic_rgb_sq(media_id: int) -> "np.ndarray":
-    j = np.arange(_AH_SIDE * _AH_SIDE * 3, dtype=np.int64)
-    return ((media_id * 31 + j * 7) % 256).astype(np.uint8).reshape(
-        _AH_SIDE, _AH_SIDE, 3
-    )
-
-
 @query(
     "q_multimodal_ahash",
     oracle=f"""
-        WITH px AS (
-            SELECT d.doc_id AS media_id, j.j,
-                   (d.doc_id * 31 + j.j * 7) % 256 AS v
-            FROM (SELECT doc_id FROM documents WHERE doc_id < 60) d,
-                 (SELECT unnest(range(0, {_AH_SIDE * _AH_SIDE * 3})) AS j) j
-        ),
+        WITH {_rgb_pixels_cte(_AH_SIDE * _AH_SIDE * 3)},
         gray AS (
             SELECT media_id, j // 3 AS p, sum(v) // 3 AS g
             FROM px GROUP BY media_id, j // 3
@@ -1048,7 +1040,7 @@ def q_multimodal_ahash(spark, sf_dir):
         for pdf in batches:
             rows = []
             for d in pdf["doc_id"].astype("int64"):
-                img = decode_png(encode_png(_synthetic_rgb_sq(int(d))))
+                img = decode_png(encode_png(_synthetic_rgb(int(d), _AH_SIDE, _AH_SIDE)))
                 h = ahash_from_image(img)
                 rows.append(
                     (int(d), h & 0xFFFFFFFF, h >> 32, bin(h).count("1"))

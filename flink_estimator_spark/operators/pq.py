@@ -262,18 +262,8 @@ def _pq_ctes(iters: int = _PQ_ITERS) -> str:
     return ",\n        ".join(parts)
 
 
-@query(
-    "q_emb_pq_adc",
-    oracle=f"""
-        WITH {_pq_ctes()},
-        adc AS (
-            SELECT lut.qid, codes.vec_id AS cand_id,
-                   CAST(sum(lut.d2) AS BIGINT) AS adc_d2
-            FROM codes JOIN lut ON codes.sub = lut.sub AND codes.code = lut.code
-            WHERE codes.vec_id != lut.qid
-            GROUP BY lut.qid, codes.vec_id
-        ),
-        shortlist AS (
+# the ADC+R tail of both PQ oracles over their ``adc(qid, cand_id, adc_d2)``
+_ADC_RERANK_SQL = f"""shortlist AS (
             SELECT qid, cand_id, adc_d2 FROM (
                 SELECT qid, cand_id, adc_d2,
                        row_number() OVER (PARTITION BY qid
@@ -296,7 +286,64 @@ def _pq_ctes(iters: int = _PQ_ITERS) -> str:
                                       ORDER BY d2, cand_id) AS rk
             FROM rerank
         ) WHERE rk <= {_PQ_TOPK}
-        ORDER BY qid, rk
+        ORDER BY qid, rk"""
+
+
+def _query_lut(ex: DataFrame, cb: DataFrame) -> DataFrame:
+    """(qid, sub, code, d2): the ADC lookup table — each query vector's
+    quantized squared distance to every codeword of every subspace."""
+    diff = F.col("v") - F.col("c")
+    term = F.floor(diff * diff * F.lit(_T12)).cast("bigint")
+    return (
+        ex.filter(F.col("vec_id") < _PQ_NQ)
+        .join(F.broadcast(cb), ["sub", "pos"])
+        .groupBy(F.col("vec_id").alias("qid"), "sub", "code")
+        .agg(F.sum(term).alias("d2"))
+    )
+
+
+def _adc_rerank(ex: DataFrame, adc: DataFrame) -> DataFrame:
+    """The top-_PQ_TOPK rows (qid, cand_id, adc_d2, d2, rk) per query:
+    ``adc``'s _PQ_SHORTLIST best candidates by ADC distance, exactly
+    reranked on the raw components ``ex``."""
+    w_adc = W.partitionBy("qid").orderBy("adc_d2", "cand_id")
+    shortlist = (
+        adc.withColumn("rk", F.row_number().over(w_adc))
+        .filter(F.col("rk") <= _PQ_SHORTLIST)
+        .select("qid", "cand_id", "adc_d2")
+    )
+    qex = ex.filter(F.col("vec_id") < _PQ_NQ).select(
+        F.col("vec_id").alias("qid"), "pos", F.col("v").alias("qv")
+    )
+    rdiff = F.col("qv") - F.col("v")
+    rterm = F.floor(rdiff * rdiff * F.lit(_T12)).cast("bigint")
+    rerank = (
+        ex.join(F.broadcast(shortlist), ex["vec_id"] == F.col("cand_id"))
+        .join(F.broadcast(qex), ["qid", "pos"])
+        .groupBy("qid", "cand_id", "adc_d2")
+        .agg(F.sum(rterm).cast("bigint").alias("d2"))
+    )
+    w_ex = W.partitionBy("qid").orderBy("d2", "cand_id")
+    return (
+        rerank.withColumn("rk", F.row_number().over(w_ex).cast("bigint"))
+        .filter(F.col("rk") <= _PQ_TOPK)
+        .select("qid", "cand_id", "adc_d2", "d2", "rk")
+        .orderBy("qid", "rk")
+    )
+
+
+@query(
+    "q_emb_pq_adc",
+    oracle=f"""
+        WITH {_pq_ctes()},
+        adc AS (
+            SELECT lut.qid, codes.vec_id AS cand_id,
+                   CAST(sum(lut.d2) AS BIGINT) AS adc_d2
+            FROM codes JOIN lut ON codes.sub = lut.sub AND codes.code = lut.code
+            WHERE codes.vec_id != lut.qid
+            GROUP BY lut.qid, codes.vec_id
+        ),
+        {_ADC_RERANK_SQL}
     """,
     tags=("llm", "similarity", "ann", "pq", "compression", "trained"),
 )
@@ -315,47 +362,14 @@ def q_emb_pq_adc(spark, sf_dir):
     cb, codes = pq_codebooks_and_codes(e)
 
     ex = _components(e)
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(_T12)).cast("bigint")
-    lut = (
-        ex.filter(F.col("vec_id") < _PQ_NQ)
-        .join(F.broadcast(cb), ["sub", "pos"])
-        .groupBy(F.col("vec_id").alias("qid"), "sub", "code")
-        .agg(F.sum(term).alias("d2"))
-    )
+    lut = _query_lut(ex, cb)
     adc = (
         codes.join(F.broadcast(lut), ["sub", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", F.col("vec_id").alias("cand_id"))
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w_adc = W.partitionBy("qid").orderBy("adc_d2", "cand_id")
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .filter(F.col("rk") <= _PQ_SHORTLIST)
-        .select("qid", "cand_id", "adc_d2")
-    )
-
-    qex = ex.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"), "pos", F.col("v").alias("qv")
-    )
-    rdiff = F.col("qv") - F.col("v")
-    rterm = F.floor(rdiff * rdiff * F.lit(_T12)).cast("bigint")
-    rerank = (
-        ex.join(
-            F.broadcast(shortlist), ex["vec_id"] == F.col("cand_id")
-        )
-        .join(F.broadcast(qex), ["qid", "pos"])
-        .groupBy("qid", "cand_id", "adc_d2")
-        .agg(F.sum(rterm).cast("bigint").alias("d2"))
-    )
-    w_ex = W.partitionBy("qid").orderBy("d2", "cand_id")
-    return (
-        rerank.withColumn("rk", F.row_number().over(w_ex).cast("bigint"))
-        .filter(F.col("rk") <= _PQ_TOPK)
-        .select("qid", "cand_id", "adc_d2", "d2", "rk")
-        .orderBy("qid", "rk")
-    )
+    return _adc_rerank(ex, adc)
 
 
 _IVF_NPROBE = 3  # coarse lists probed per query
@@ -414,30 +428,7 @@ _COARSE_CTES = f"""exl AS (
                     AND lut.sub = codes.sub AND lut.code = codes.code
             GROUP BY cn.qid, cn.cand_id
         ),
-        shortlist AS (
-            SELECT qid, cand_id, adc_d2 FROM (
-                SELECT qid, cand_id, adc_d2,
-                       row_number() OVER (PARTITION BY qid
-                                          ORDER BY adc_d2, cand_id) AS rk
-                FROM adc
-            ) WHERE rk <= {_PQ_SHORTLIST}
-        ),
-        rerank AS (
-            SELECT s.qid, s.cand_id, s.adc_d2,
-                   CAST(sum(CAST(floor((q.v - c.v) * (q.v - c.v)
-                                       * 1000000000000) AS BIGINT)) AS BIGINT) AS d2
-            FROM shortlist s
-            JOIN ex c ON c.vec_id = s.cand_id
-            JOIN ex q ON q.vec_id = s.qid AND q.pos = c.pos
-            GROUP BY s.qid, s.cand_id, s.adc_d2
-        )
-        SELECT qid, cand_id, adc_d2, d2, CAST(rk AS BIGINT) AS rk FROM (
-            SELECT qid, cand_id, adc_d2, d2,
-                   row_number() OVER (PARTITION BY qid
-                                      ORDER BY d2, cand_id) AS rk
-            FROM rerank
-        ) WHERE rk <= {_PQ_TOPK}
-        ORDER BY qid, rk
+        {_ADC_RERANK_SQL}
     """,
     tags=("llm", "similarity", "ann", "ivf", "pq", "compression", "trained"),
 )
@@ -459,6 +450,9 @@ def q_emb_ivfpq_adc(spark, sf_dir):
     q_emb_pq_adc's verbatim.  Everything — coarse routing, codebook
     training, code assignment, ADC sums, rerank — replays in the DuckDB
     oracle's quantized-BIGINT arithmetic."""
+    # function-local: similarity imports plans, which imports this module
+    from .similarity import label_centroids
+
     e = spread(t(spark, sf_dir, "embeddings"), "vec_id")
     cb, codes = pq_codebooks_and_codes(e)
 
@@ -467,18 +461,7 @@ def q_emb_ivfpq_adc(spark, sf_dir):
     # distance runs inline per (vector, cluster) row — corpus x C rows with
     # no aggregation exchange, where the posexploded join form shuffled
     # corpus x C x dim rows through a groupBy (same _assign rationale)
-    exl = (
-        e.select("vec_id", "label", F.posexplode("embedding").alias("pos", "v"))
-        .withColumn("v", F.col("v").cast("double"))
-    )
-    ccent = exl.groupBy(F.col("label").alias("clabel"), "pos").agg(
-        (
-            F.sum(F.floor(F.col("v") * _T6).cast("bigint")).cast("double")
-            / F.count("*").cast("double")
-            / F.lit(float(_T6))
-        ).alias("c")
-    )
-    cpacked = ccent.groupBy("clabel").agg(
+    cpacked = label_centroids(e).groupBy("clabel").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
         ).alias("carr")
@@ -524,14 +507,7 @@ def q_emb_ivfpq_adc(spark, sf_dir):
     )
 
     ex = _components(e)
-    diff = F.col("v") - F.col("c")
-    term = F.floor(diff * diff * F.lit(_T12)).cast("bigint")
-    lut = (
-        ex.filter(F.col("vec_id") < _PQ_NQ)
-        .join(F.broadcast(cb), ["sub", "pos"])
-        .groupBy(F.col("vec_id").alias("qid"), "sub", "code")
-        .agg(F.sum(term).alias("d2"))
-    )
+    lut = _query_lut(ex, cb)
     # broadcast the candidate list into the code-table probe: cands is
     # bounded by Q x nprobe x |probed list| (the whole point of IVF),
     # while shuffling the corpus-sized code table for a sort-merge join
@@ -544,27 +520,4 @@ def q_emb_ivfpq_adc(spark, sf_dir):
         .groupBy("qid", "cand_id")
         .agg(F.sum("d2").cast("bigint").alias("adc_d2"))
     )
-    w_adc = W.partitionBy("qid").orderBy("adc_d2", "cand_id")
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .filter(F.col("rk") <= _PQ_SHORTLIST)
-        .select("qid", "cand_id", "adc_d2")
-    )
-    qex = ex.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"), "pos", F.col("v").alias("qv")
-    )
-    rdiff = F.col("qv") - F.col("v")
-    rterm = F.floor(rdiff * rdiff * F.lit(_T12)).cast("bigint")
-    rerank = (
-        ex.join(F.broadcast(shortlist), ex["vec_id"] == F.col("cand_id"))
-        .join(F.broadcast(qex), ["qid", "pos"])
-        .groupBy("qid", "cand_id", "adc_d2")
-        .agg(F.sum(rterm).cast("bigint").alias("d2"))
-    )
-    w_ex = W.partitionBy("qid").orderBy("d2", "cand_id")
-    return (
-        rerank.withColumn("rk", F.row_number().over(w_ex).cast("bigint"))
-        .filter(F.col("rk") <= _PQ_TOPK)
-        .select("qid", "cand_id", "adc_d2", "d2", "rk")
-        .orderBy("qid", "rk")
-    )
+    return _adc_rerank(ex, adc)

@@ -72,6 +72,51 @@ def _centroid_d2_term() -> Column:
     return F.floor(diff * diff * F.lit(1_000_000_000_000)).cast("bigint")
 
 
+def _label_exploded(e: DataFrame) -> DataFrame:
+    """(vec_id, label, pos, v): one row per embedding component, as double."""
+    return e.select(
+        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
+    ).withColumn("v", F.col("v").cast("double"))
+
+
+def _label_codebook(ex: DataFrame) -> DataFrame:
+    return ex.groupBy(F.col("label").alias("clabel"), "pos").agg(_centroid_mean())
+
+
+def label_centroids(e: DataFrame) -> DataFrame:
+    """(clabel, pos, c): per-label floor-quantized mean centroids — the
+    shared coarse quantizer's codebook (q_emb_centroids arithmetic)."""
+    return _label_codebook(_label_exploded(e))
+
+
+def _label_d2(e: DataFrame, *keys: str) -> DataFrame:
+    """(``keys``, clabel, d2): the quantized squared L2 distance from every
+    vector of ``e`` to every label centroid (``keys`` from vec_id, label);
+    the codebook is a broadcast dim x labels table."""
+    ex = _label_exploded(e)
+    return (
+        ex.join(F.broadcast(_label_codebook(ex)), "pos")
+        .groupBy(*keys, "clabel")
+        .agg(F.sum(_centroid_d2_term()).alias("d2"))
+    )
+
+
+def _ranked_by_d2(d2: DataFrame) -> DataFrame:
+    """``d2`` plus ``rk``: each centroid's distance rank for its vector,
+    ties by centroid label."""
+    w = W.partitionBy("vec_id").orderBy("d2", "clabel")
+    return d2.withColumn("rk", F.row_number().over(w))
+
+
+def _nearest_centroid(d2: DataFrame) -> DataFrame:
+    """(vec_id, cluster, d2): the argmin of ``d2`` per vector."""
+    return (
+        _ranked_by_d2(d2)
+        .filter(F.col("rk") == 1)
+        .select("vec_id", F.col("clabel").alias("cluster"), "d2")
+    )
+
+
 def cosine_topk(
     queries_df: DataFrame,
     candidates_df: DataFrame,
@@ -529,6 +574,48 @@ _COS_SQL = (
 )
 
 
+# the exact-cosine top-5 of each query's candidates ``cand(q_id, c_id)``
+_COS_TOP5_SQL = f"""
+        SELECT query_id, neighbor_id, cos_sim, rk FROM (
+            SELECT p.q_id AS query_id, p.c_id AS neighbor_id,
+                   {_COS_SQL} AS cos_sim,
+                   row_number() OVER (PARTITION BY p.q_id
+                                      ORDER BY {_COS_SQL} DESC, p.c_id) AS rk
+            FROM cand p
+            JOIN embeddings a ON a.vec_id = p.c_id
+            JOIN embeddings b ON b.vec_id = p.q_id
+        ) WHERE rk <= 5
+        ORDER BY query_id, rk"""
+
+# DuckDB forms of _centroid_mean and _centroid_d2_term
+_KM_MEAN = (
+    "CAST(sum(CAST(floor(v * 1000000) AS BIGINT)) AS DOUBLE)"
+    " / CAST(count(*) AS DOUBLE) / 1000000.0"
+)
+_KM_TERM = "CAST(floor((ex.v - {c}.c) * (ex.v - {c}.c) * 1000000000000) AS BIGINT)"
+
+
+def _label_d2_ctes(keys: str = "ex.vec_id") -> str:
+    """DuckDB CTEs of the label-seeded coarse quantizer: ``ex`` (vec_id,
+    label, pos, v), the label centroids ``cent`` (clabel, pos, c) and the
+    quantized squared distances ``d`` (``keys``, clabel, d2)."""
+    return f"""ex AS (
+            SELECT vec_id, label, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
+            FROM (SELECT vec_id, label, embedding,
+                         unnest(range(1, len(embedding) + 1)) AS i
+                  FROM embeddings)
+        ),
+        cent AS (
+            SELECT label AS clabel, pos, {_KM_MEAN} AS c
+            FROM ex GROUP BY label, pos
+        ),
+        d AS (
+            SELECT {keys}, cent.clabel, sum({_KM_TERM.format(c="cent")}) AS d2
+            FROM ex JOIN cent ON ex.pos = cent.pos
+            GROUP BY {keys}, cent.clabel
+        )"""
+
+
 @query(
     "q_emb_cosine_topk",
     oracle=f"""
@@ -749,27 +836,7 @@ _IVF_NPROBE = 2
 @query(
     "q_emb_ivf_ann",
     oracle=f"""
-        WITH ex AS (
-            SELECT vec_id, label, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
-            FROM (
-                SELECT vec_id, label, embedding,
-                       unnest(range(1, len(embedding) + 1)) AS i
-                FROM embeddings
-            )
-        ),
-        cent AS (
-            SELECT label AS clabel, pos,
-                   CAST(sum(CAST(floor(v * 1000000) AS BIGINT)) AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE) / 1000000.0 AS c
-            FROM ex GROUP BY label, pos
-        ),
-        d AS (
-            SELECT ex.vec_id, cent.clabel,
-                   sum(CAST(floor((ex.v - cent.c) * (ex.v - cent.c)
-                                  * 1000000000000) AS BIGINT)) AS d2
-            FROM ex JOIN cent ON ex.pos = cent.pos
-            GROUP BY ex.vec_id, cent.clabel
-        ),
+        WITH {_label_d2_ctes()},
         ranked AS (
             SELECT vec_id, clabel,
                    row_number() OVER (PARTITION BY vec_id
@@ -784,16 +851,7 @@ _IVF_NPROBE = 2
             SELECT q_id, c_id FROM probes JOIN inv USING (cluster)
             WHERE c_id != q_id
         )
-        SELECT query_id, neighbor_id, cos_sim, rk FROM (
-            SELECT p.q_id AS query_id, p.c_id AS neighbor_id,
-                   {_COS_SQL} AS cos_sim,
-                   row_number() OVER (PARTITION BY p.q_id
-                                      ORDER BY {_COS_SQL} DESC, p.c_id) AS rk
-            FROM cand p
-            JOIN embeddings a ON a.vec_id = p.c_id
-            JOIN embeddings b ON b.vec_id = p.q_id
-        ) WHERE rk <= 5
-        ORDER BY query_id, rk
+{_COS_TOP5_SQL}
     """,
     tags=("llm", "similarity", "ivf", "ann"),
 )
@@ -811,26 +869,12 @@ def q_emb_ivf_ann(spark, sf_dir):
     means) stays the production default in ``ivf_ann``, recall-certified by
     q_emb_ivf_recall and equivalence-tested in pytest."""
     e = t(spark, sf_dir, "embeddings")
-    ex = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    cent = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(_centroid_mean())
-    )
-    term = _centroid_d2_term()
-    d2 = (
-        ex.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "clabel")
-        .agg(F.sum(term).alias("d2"))
-    )
-    wv = W.partitionBy("vec_id").orderBy("d2", "clabel")
-    ranked = d2.withColumn("crk", F.row_number().over(wv))
-    inv = ranked.filter(F.col("crk") == 1).select(
+    ranked = _ranked_by_d2(_label_d2(e, "vec_id"))
+    inv = ranked.filter(F.col("rk") == 1).select(
         F.col("vec_id").alias("neighbor_id"), F.col("clabel").alias("cluster")
     )
     probes = ranked.filter(
-        (F.col("crk") <= _IVF_NPROBE) & (F.col("vec_id") < 50)
+        (F.col("rk") <= _IVF_NPROBE) & (F.col("vec_id") < 50)
     ).select(F.col("vec_id").alias("query_id"), F.col("clabel").alias("cluster"))
     # each vector lives in exactly one list and each (query, cluster) probe is
     # unique, so the probe->list join emits each candidate pair once: no
@@ -918,16 +962,7 @@ _CAND_UNION = "\n                UNION ALL\n".join(
 {_CAND_UNION}
             )
         )
-        SELECT query_id, neighbor_id, cos_sim, rk FROM (
-            SELECT p.q_id AS query_id, p.c_id AS neighbor_id,
-                   {_COS_SQL} AS cos_sim,
-                   row_number() OVER (PARTITION BY p.q_id
-                                      ORDER BY {_COS_SQL} DESC, p.c_id) AS rk
-            FROM cand p
-            JOIN embeddings a ON a.vec_id = p.c_id
-            JOIN embeddings b ON b.vec_id = p.q_id
-        ) WHERE rk <= 5
-        ORDER BY query_id, rk
+{_COS_TOP5_SQL}
     """,
     tags=("llm", "similarity", "lsh", "ann"),
 )
@@ -1158,28 +1193,8 @@ def q_emb_centroids(spark, sf_dir):
 
 @query(
     "q_kmeans_assign",
-    oracle="""
-        WITH ex AS (
-            SELECT vec_id, label, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
-            FROM (
-                SELECT vec_id, label, embedding,
-                       unnest(range(1, len(embedding) + 1)) AS i
-                FROM embeddings
-            )
-        ),
-        cent AS (
-            SELECT label AS clabel, pos,
-                   CAST(sum(CAST(floor(v * 1000000) AS BIGINT)) AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE) / 1000000.0 AS c
-            FROM ex GROUP BY label, pos
-        ),
-        d AS (
-            SELECT ex.vec_id, ex.label, cent.clabel,
-                   sum(CAST(floor((ex.v - cent.c) * (ex.v - cent.c)
-                                  * 1000000000000) AS BIGINT)) AS d2
-            FROM ex JOIN cent ON ex.pos = cent.pos
-            GROUP BY ex.vec_id, ex.label, cent.clabel
-        ),
+    oracle=f"""
+        WITH {_label_d2_ctes("ex.vec_id, ex.label")},
         best AS (
             SELECT vec_id, label, clabel,
                    row_number() OVER (PARTITION BY vec_id
@@ -1212,25 +1227,9 @@ def q_kmeans_assign(spark, sf_dir):
     argmin window.  At production scale the same step runs as the numpy
     matmul bucketing used by lsh_ann; this query is the exact-arithmetic
     reference for it."""
-    from pyspark.sql import Window as W
-
-    e = t(spark, sf_dir, "embeddings")
-    ex = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    cent = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(_centroid_mean())
-    )
-    term = _centroid_d2_term()
-    d2 = (
-        ex.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "label", "clabel")
-        .agg(F.sum(term).alias("d2"))
-    )
-    w = W.partitionBy("vec_id").orderBy("d2", "clabel")
+    d2 = _label_d2(t(spark, sf_dir, "embeddings"), "vec_id", "label")
     return (
-        d2.withColumn("rk", F.row_number().over(w))
+        _ranked_by_d2(d2)
         .filter(F.col("rk") == 1)
         .groupBy(F.col("clabel").alias("cluster"))
         .agg(
@@ -1267,8 +1266,6 @@ def kmeans_iterate(
     (clabel, pos, c double).  Returns (assignments (vec_id, cluster),
     [inertia per iteration]).
     """
-    from pyspark.sql import Window as W
-
     cent = init_centroids
     inertias: list[int] = []
     assign = None
@@ -1279,12 +1276,7 @@ def kmeans_iterate(
             .groupBy("vec_id", "clabel")
             .agg(F.sum(term).alias("d2"))
         )
-        w = W.partitionBy("vec_id").orderBy("d2", "clabel")
-        assign = (
-            d2.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", F.col("clabel").alias("cluster"), "d2")
-        )
+        assign = _nearest_centroid(d2)
         # feeds inertia, next centroids, result; zero pin afterwards
         assign = eager_checkpoint(assign)
         inertias.append(assign.agg(F.sum("d2")).collect()[0][0])
@@ -1297,11 +1289,6 @@ def kmeans_iterate(
 
 
 _KM_ITERS = 3
-_KM_MEAN = (
-    "CAST(sum(CAST(floor(v * 1000000) AS BIGINT)) AS DOUBLE)"
-    " / CAST(count(*) AS DOUBLE) / 1000000.0"
-)
-_KM_TERM = "CAST(floor((ex.v - {c}.c) * (ex.v - {c}.c) * 1000000000000) AS BIGINT)"
 
 
 def _kmeans_iterate_oracle(iters: int = _KM_ITERS) -> str:
@@ -1391,14 +1378,7 @@ def q_kmeans_iterate(spark, sf_dir):
     vectors = e.select(
         "vec_id", F.posexplode("embedding").alias("pos", "v")
     ).withColumn("v", F.col("v").cast("double"))
-    ex = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    seed = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(_centroid_mean())
-    )
-    assign, _inertias = kmeans_iterate(vectors, seed, iters=3)
+    assign, _inertias = kmeans_iterate(vectors, label_centroids(e), iters=3)
     # recompute final per-cluster inertia from the last assignment
     final_cent = (
         vectors.join(assign, "vec_id")
@@ -1504,17 +1484,24 @@ _QUANT_CODE = (
     "least(255, greatest(0, CAST(floor(((CAST({side}.embedding[d.i] AS DOUBLE) - d.mn) * 256.0)"
     " / (d.mx - d.mn)) AS BIGINT))) END"
 )
+# DuckDB: per-dimension corpus bounds ``dims`` (i, mn, mx), and the int8
+# codes ``codes`` (vec_id, i, c) of every vector (``_int8_codes``)
+_INT8_DIMS_CTE = f"""dims AS (
+            SELECT gs.i,
+                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
+                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
+            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
+            GROUP BY gs.i)"""
+_INT8_CODES_CTES = f"""{_INT8_DIMS_CTE},
+        codes AS MATERIALIZED (
+            SELECT e.vec_id, d.i, {_QUANT_CODE.format(side="e")} AS c
+            FROM embeddings e, dims d)"""
 
 
 @query(
     "q_emb_quantized_topk",
     oracle=f"""
-        WITH dims AS (
-            SELECT gs.i,
-                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
-                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
-            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
-            GROUP BY gs.i),
+        WITH {_INT8_DIMS_CTE},
         pairs AS (
             SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
                    sum(({_QUANT_CODE.format(side='a')} - {_QUANT_CODE.format(side='b')})
@@ -1675,62 +1662,15 @@ def q_geo_radius_join(spark, sf_dir):
 _SEMDEDUP_TAU = 0.40
 
 
-def label_centroids(e: DataFrame) -> DataFrame:
-    """(clabel, pos, c): per-label floor-quantized mean centroids — the
-    shared coarse quantizer's codebook (q_emb_centroids arithmetic)."""
-    ex = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    return (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(_centroid_mean())
-    )
-
-
 def _quantized_label_assign(spark, sf_dir):
-    """(vec_id, cluster): every vector assigned to its quantized-L2-nearest
+    """(vec_id, cluster, d2): every vector assigned to its quantized-L2-nearest
     label-seeded centroid — the shared coarse quantizer (q_kmeans_assign /
     q_emb_ivf_ann arithmetic, deterministic on any engine/partitioning)."""
-    e = t(spark, sf_dir, "embeddings")
-    ex = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    cent = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(_centroid_mean())
-    )
-    term = _centroid_d2_term()
-    d2 = (
-        ex.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "clabel")
-        .agg(F.sum(term).alias("d2"))
-    )
-    w = W.partitionBy("vec_id").orderBy("d2", "clabel")
-    return (
-        d2.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", F.col("clabel").alias("cluster"), "d2")
-    )
+    return _nearest_centroid(_label_d2(t(spark, sf_dir, "embeddings"), "vec_id"))
 
 
 _KM_ASSIGN_CTES = f"""
-        ex AS (
-            SELECT vec_id, label, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS v
-            FROM (SELECT vec_id, label, embedding,
-                         unnest(range(1, len(embedding) + 1)) AS i
-                  FROM embeddings)
-        ),
-        cent AS (
-            SELECT label AS clabel, pos, {_KM_MEAN} AS c
-            FROM ex GROUP BY label, pos
-        ),
-        d AS (
-            SELECT ex.vec_id, cent.clabel,
-                   sum(CAST(floor((ex.v - cent.c) * (ex.v - cent.c)
-                                  * 1000000000000) AS BIGINT)) AS d2
-            FROM ex JOIN cent ON ex.pos = cent.pos
-            GROUP BY ex.vec_id, cent.clabel
-        ),
+        {_label_d2_ctes()},
         assign AS (
             SELECT vec_id, clabel AS cluster, d2 FROM (
                 SELECT vec_id, clabel, d2,
@@ -2069,18 +2009,7 @@ def q_silhouette(spark, sf_dir):
     denominator).  Plan: the one broadcast-centroid distance pass every
     family member shares, ONE window pass per vec_id (row_number + lead
     fetch a and b together, no rk<=2 self-join), then a k-row aggregate."""
-    ex = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", F.posexplode("embedding").alias("pos", "v"))
-        .withColumn("v", F.col("v").cast("double"))
-    )
-    cent = ex.groupBy(F.col("label").alias("clabel"), "pos").agg(_centroid_mean())
-    term = _centroid_d2_term()
-    d2 = (
-        ex.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "clabel")
-        .agg(F.sum(term).alias("d2"))
-    )
+    d2 = _label_d2(t(spark, sf_dir, "embeddings"), "vec_id")
     w = W.partitionBy("vec_id").orderBy("d2", "clabel")
     a2 = F.col("d2").cast("double")
     b2 = F.col("b2").cast("double")
@@ -2127,6 +2056,56 @@ _GANN_H = 4   # unrolled hops
 _GANN_Q = 10  # query vectors (vec_id < Q)
 _GANN_K = 5   # returned neighbors per query
 
+# DuckDB kNN-graph build shared with q_mutual_knn_pairs: ``sd`` holds each
+# vector's code distance to the seed vectors (vec_id < _GANN_C); ``knnd``
+# the distances between vectors of one seed cluster (``assign``: vec_id, cid)
+_GANN_SEED_D2_CTE = f"""sd AS MATERIALIZED (
+            SELECT a.vec_id, s.vec_id AS scid,
+                   sum((a.c - s.c) * (a.c - s.c)) AS d2
+            FROM codes a JOIN codes s ON s.vec_id < {_GANN_C} AND s.i = a.i
+            GROUP BY a.vec_id, s.vec_id)"""
+_GANN_KNN_D2_CTE = """knnd AS MATERIALIZED (
+            SELECT aa.vec_id AS src, bb.vec_id AS dst,
+                   sum((ca.c - cb.c) * (ca.c - cb.c)) AS d2
+            FROM assign aa
+            JOIN assign bb ON bb.cid = aa.cid AND bb.vec_id != aa.vec_id
+            JOIN codes ca ON ca.vec_id = aa.vec_id
+            JOIN codes cb ON cb.vec_id = bb.vec_id AND cb.i = ca.i
+            GROUP BY aa.vec_id, bb.vec_id)"""
+
+
+def _nearest_seed(coded: DataFrame) -> DataFrame:
+    """(vec_id, code, scid, sd2, _rk): each int8-coded vector with its
+    nearest seed vector (vec_id < _GANN_C) by code distance, ties by seed
+    id — the coarse clustering of the graph-ANN kNN build."""
+    seeds = F.broadcast(
+        coded.filter(F.col("vec_id") < _GANN_C).select(
+            F.col("vec_id").alias("scid"), F.col("code").alias("scode")
+        )
+    )
+    wv = W.partitionBy("vec_id").orderBy("sd2", "scid")
+    return (
+        coded.crossJoin(seeds)
+        .select(
+            "vec_id", "code", "scid", _code_d2(F.col("code"), F.col("scode")).alias("sd2")
+        )
+        .withColumn("_rk", F.row_number().over(wv))
+        .filter(F.col("_rk") == 1)
+    )
+
+
+def _cluster_d2(assign: DataFrame) -> DataFrame:
+    """(src, dst, d2): code distances between the distinct vectors of each
+    seed cluster of ``assign`` (vec_id, code, cid) — sum(|cluster|²) pairs,
+    never corpus²."""
+    a_ = assign.select("cid", F.col("vec_id").alias("src"), F.col("code").alias("acode"))
+    b_ = assign.select("cid", F.col("vec_id").alias("dst"), F.col("code").alias("bcode"))
+    return (
+        a_.join(b_, "cid")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst", _code_d2(F.col("acode"), F.col("bcode")).alias("d2"))
+    )
+
 
 def _gann_oracle() -> str:
     """DuckDB replay of the ENTIRE pipeline — quantization, seed
@@ -2135,8 +2114,7 @@ def _gann_oracle() -> str:
     value-gates (portable-hash/quantized-arithmetic rule).  Generations
     are AS MATERIALIZED (the q_kcore_peel lesson: each hop references its
     predecessor multiple times)."""
-    c, m, b, h, q, k = _GANN_C, _GANN_M, _GANN_B, _GANN_H, _GANN_Q, _GANN_K
-    code = _QUANT_CODE.format(side="e")
+    m, b, h, q, k = _GANN_M, _GANN_B, _GANN_H, _GANN_Q, _GANN_K
     hops = []
     for i in range(1, h + 1):
         hops.append(f"""
@@ -2161,20 +2139,8 @@ def _gann_oracle() -> str:
                 FROM sc{i})
             WHERE rk <= {b})""")
     return f"""
-        WITH dims AS (
-            SELECT gs.i,
-                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
-                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
-            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
-            GROUP BY gs.i),
-        codes AS MATERIALIZED (
-            SELECT e.vec_id, d.i, {code} AS c
-            FROM embeddings e, dims d),
-        sd AS MATERIALIZED (
-            SELECT a.vec_id, s.vec_id AS scid,
-                   sum((a.c - s.c) * (a.c - s.c)) AS d2
-            FROM codes a JOIN codes s ON s.vec_id < {c} AND s.i = a.i
-            GROUP BY a.vec_id, s.vec_id),
+        WITH {_INT8_CODES_CTES},
+        {_GANN_SEED_D2_CTE},
         assign AS MATERIALIZED (
             SELECT vec_id, CAST(scid AS BIGINT) AS cid FROM (
                 SELECT vec_id, scid,
@@ -2182,14 +2148,7 @@ def _gann_oracle() -> str:
                                           ORDER BY d2, scid) AS rk
                 FROM sd)
             WHERE rk = 1),
-        knnd AS MATERIALIZED (
-            SELECT aa.vec_id AS src, bb.vec_id AS dst,
-                   sum((ca.c - cb.c) * (ca.c - cb.c)) AS d2
-            FROM assign aa
-            JOIN assign bb ON bb.cid = aa.cid AND bb.vec_id != aa.vec_id
-            JOIN codes ca ON ca.vec_id = aa.vec_id
-            JOIN codes cb ON cb.vec_id = bb.vec_id AND cb.i = ca.i
-            GROUP BY aa.vec_id, bb.vec_id),
+        {_GANN_KNN_D2_CTE},
         knn AS (
             SELECT src, dst FROM (
                 SELECT src, dst,
@@ -2259,38 +2218,22 @@ def q_emb_graph_ann(spark, sf_dir):
     broadcast query side × linear scan, the q_emb_quantized_topk class).
     Production engines grow the graph incrementally (HNSW insert order,
     NN-descent); the relational build here is the batch-rebuild shape."""
-    c, m, b, h, q, k = _GANN_C, _GANN_M, _GANN_B, _GANN_H, _GANN_Q, _GANN_K
+    m, b, h, q, k = _GANN_M, _GANN_B, _GANN_H, _GANN_Q, _GANN_K
     emb = t(spark, sf_dir, "embeddings")
     coded = _int8_codes(emb)
     # five differently-shaped consumers (seeds, assignment scan, kNN join,
     # hop scoring, brute certificate) — one materialization (§7h)
     coded = eager_checkpoint(coded)
 
-    seeds = F.broadcast(
-        coded.filter(F.col("vec_id") < c).select(
-            F.col("vec_id").alias("scid"), F.col("code").alias("scode")
-        )
-    )
-    wv = W.partitionBy("vec_id").orderBy("sd2", "scid")
-    assign = (
-        coded.crossJoin(seeds)
-        .select(
-            "vec_id", "code", "scid", _code_d2(F.col("code"), F.col("scode")).alias("sd2")
-        )
-        .withColumn("_rk", F.row_number().over(wv))
-        .filter(F.col("_rk") == 1)
-        .select("vec_id", "code", F.col("scid").cast("bigint").alias("cid"))
+    assign = _nearest_seed(coded).select(
+        "vec_id", "code", F.col("scid").cast("bigint").alias("cid")
     )
     # consumed by the kNN self-join (both sides) and the hub aggregate
     assign = eager_checkpoint(assign)
 
-    a_ = assign.select("cid", F.col("vec_id").alias("src"), F.col("code").alias("acode"))
-    b_ = assign.select("cid", F.col("vec_id").alias("dst"), F.col("code").alias("bcode"))
     wkn = W.partitionBy("src").orderBy("d2", "dst")
     knn = (
-        a_.join(b_, "cid")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", _code_d2(F.col("acode"), F.col("bcode")).alias("d2"))
+        _cluster_d2(assign)
         .withColumn("_rk", F.row_number().over(wkn))
         .filter(F.col("_rk") <= m)
         .select("src", "dst")
@@ -2387,7 +2330,6 @@ def _kcenter_oracle(steps: int = _KC_STEPS) -> str:
     generation materializes the running min-distance table, takes the
     argmax row (ORDER BY mind DESC, vec_id LIMIT 1 — the deterministic
     tie-break), and folds the new center's distances in with least()."""
-    code = _QUANT_CODE.format(side="e")
     gens = []
     rows = ["""            SELECT CAST(0 AS BIGINT) AS step,
                    (SELECT min(vec_id) FROM embeddings) AS center_id,
@@ -2410,15 +2352,7 @@ def _kcenter_oracle(steps: int = _KC_STEPS) -> str:
                    (SELECT vec_id FROM c{s}) AS center_id,
                    (SELECT CAST(max(mind) AS BIGINT) FROM m{s}) AS radius_q""")
     return f"""
-        WITH dims AS (
-            SELECT gs.i,
-                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
-                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
-            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
-            GROUP BY gs.i),
-        codes AS MATERIALIZED (
-            SELECT e.vec_id, d.i, {code} AS c
-            FROM embeddings e, dims d),
+        WITH {_INT8_CODES_CTES},
         m0 AS MATERIALIZED (
             SELECT a.vec_id, sum((a.c - s.c) * (a.c - s.c)) AS mind
             FROM codes a
@@ -2505,34 +2439,15 @@ _MKNN_M = 8
 @query(
     "q_mutual_knn_pairs",
     oracle=f"""
-        WITH dims AS (
-            SELECT gs.i,
-                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
-                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
-            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
-            GROUP BY gs.i),
-        codes AS MATERIALIZED (
-            SELECT e.vec_id, d.i, {_QUANT_CODE.format(side="e")} AS c
-            FROM embeddings e, dims d),
-        sd AS MATERIALIZED (
-            SELECT a.vec_id, s.vec_id AS scid,
-                   sum((a.c - s.c) * (a.c - s.c)) AS d2
-            FROM codes a JOIN codes s ON s.vec_id < {_GANN_C} AND s.i = a.i
-            GROUP BY a.vec_id, s.vec_id),
+        WITH {_INT8_CODES_CTES},
+        {_GANN_SEED_D2_CTE},
         assign AS MATERIALIZED (
             SELECT vec_id, scid AS cid FROM (
                 SELECT vec_id, scid,
                        row_number() OVER (PARTITION BY vec_id
                                           ORDER BY d2, scid) AS rk
                 FROM sd) WHERE rk = 1),
-        knnd AS MATERIALIZED (
-            SELECT aa.vec_id AS src, bb.vec_id AS dst,
-                   sum((ca.c - cb.c) * (ca.c - cb.c)) AS d2
-            FROM assign aa
-            JOIN assign bb ON bb.cid = aa.cid AND bb.vec_id != aa.vec_id
-            JOIN codes ca ON ca.vec_id = aa.vec_id
-            JOIN codes cb ON cb.vec_id = bb.vec_id AND cb.i = ca.i
-            GROUP BY aa.vec_id, bb.vec_id),
+        {_GANN_KNN_D2_CTE},
         knn AS (
             SELECT src, dst, d2, rk FROM (
                 SELECT src, dst, d2,
@@ -2565,21 +2480,7 @@ def q_mutual_knn_pairs(spark, sf_dir):
     coded = _int8_codes(emb)
     coded = eager_checkpoint(coded)  # seeds + assignment + kNN sides
 
-    seeds = F.broadcast(
-        coded.filter(F.col("vec_id") < _GANN_C).select(
-            F.col("vec_id").alias("scid"), F.col("code").alias("scode")
-        )
-    )
-    wv = W.partitionBy("vec_id").orderBy("sd2", "scid")
-    assign = (
-        coded.crossJoin(seeds)
-        .select("vec_id", "code", "scid", _code_d2(F.col("code"), F.col("scode")).alias("sd2"))
-        .withColumn("_rk", F.row_number().over(wv))
-        .filter(F.col("_rk") == 1)
-        .select("vec_id", "code", F.col("scid").alias("cid"))
-    )
-    a_ = assign.select("cid", F.col("vec_id").alias("src"), F.col("code").alias("acode"))
-    b_ = assign.select("cid", F.col("vec_id").alias("dst"), F.col("code").alias("bcode"))
+    assign = _nearest_seed(coded).select("vec_id", "code", F.col("scid").alias("cid"))
     wkn = W.partitionBy("src").orderBy("d2", "dst")
     # the kNN edge relation feeds the mutuality join from BOTH directions,
     # whose exchanges hash on opposite key orders ((src,dst) vs (dst,src))
@@ -2589,9 +2490,7 @@ def q_mutual_knn_pairs(spark, sf_dir):
     # write is the <= corpus*M edge list; read-back feeds only cheap
     # joins, so the checkpoint's preserved partitioning buys nothing.
     knn = materialize(
-        a_.join(b_, "cid")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", _code_d2(F.col("acode"), F.col("bcode")).alias("d2"))
+        _cluster_d2(assign)
         .withColumn("rk", F.row_number().over(wkn).cast("bigint"))
         .filter(F.col("rk") <= m)
     )
@@ -2628,7 +2527,6 @@ _MRL_K = 5
 
 
 def _mrl_oracle() -> str:
-    code = _QUANT_CODE.format(side="e")
     per_dim = []
     for d in _MRL_DIMS:
         per_dim.append(f"""
@@ -2652,15 +2550,7 @@ def _mrl_oracle() -> str:
         for d in _MRL_DIMS
     )
     return f"""
-        WITH dims AS (
-            SELECT gs.i,
-                   min(CAST(e.embedding[gs.i] AS DOUBLE)) AS mn,
-                   max(CAST(e.embedding[gs.i] AS DOUBLE)) AS mx
-            FROM embeddings e, generate_series(1, {_QUANT_SQL_DIM}) gs(i)
-            GROUP BY gs.i),
-        codes AS MATERIALIZED (
-            SELECT e.vec_id, d.i, {code} AS c
-            FROM embeddings e, dims d),{",".join(per_dim)}
+        WITH {_INT8_CODES_CTES},{",".join(per_dim)}
         SELECT dim, hits_at{_MRL_K},
                CAST(hits_at{_MRL_K} * 1000000 // {_MRL_Q * _MRL_K} AS BIGINT)
                    AS recall_ppm

@@ -172,22 +172,28 @@ def q_text_fingerprint(spark, sf_dir):
     )
 
 
-@query(
-    "q_text_lang_guess",
-    oracle=r"""
-        WITH hits AS (
-            SELECT doc_id, lang,
-                   len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b')) AS en,
+# DuckDB form of ``lang_guess``: stopword hits per language, then the vote
+# (ties to lexicon order en > es > de > fr)
+_LANG_HITS_SQL = r"""len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b')) AS en,
                    len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|un|es)\b')) AS es,
                    len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|von|ein|zu)\b')) AS de,
-                   len(regexp_extract_all(lower(text), '\b(le|la|les|de|et|un|une|est)\b')) AS fr
-            FROM documents
-        )
-        SELECT CASE WHEN en >= greatest(en, es, de, fr) AND greatest(en, es, de, fr) > 0 THEN 'en'
+                   len(regexp_extract_all(lower(text), '\b(le|la|les|de|et|un|une|est)\b')) AS fr"""
+_LANG_CASE_SQL = """CASE WHEN en >= greatest(en, es, de, fr) AND greatest(en, es, de, fr) > 0 THEN 'en'
                     WHEN es >= greatest(es, de, fr) AND greatest(es, de, fr) > 0 THEN 'es'
                     WHEN de >= greatest(de, fr) AND greatest(de, fr) > 0 THEN 'de'
                     WHEN fr > 0 THEN 'fr'
-                    ELSE 'unknown' END AS lang_guess,
+                    ELSE 'unknown' END"""
+
+
+@query(
+    "q_text_lang_guess",
+    oracle=rf"""
+        WITH hits AS (
+            SELECT doc_id, lang,
+                   {_LANG_HITS_SQL}
+            FROM documents
+        )
+        SELECT {_LANG_CASE_SQL} AS lang_guess,
                count(*) AS n_docs
         FROM hits
         GROUP BY 1
@@ -303,19 +309,12 @@ def q_text_tfidf_top(spark, sf_dir):
     )
 
 
-_SQL_LANG_GUESS = r"""
+_SQL_LANG_GUESS = rf"""
             SELECT doc_id, lang, text,
-                   CASE WHEN en >= greatest(en, es, de, fr) AND greatest(en, es, de, fr) > 0 THEN 'en'
-                        WHEN es >= greatest(es, de, fr) AND greatest(es, de, fr) > 0 THEN 'es'
-                        WHEN de >= greatest(de, fr) AND greatest(de, fr) > 0 THEN 'de'
-                        WHEN fr > 0 THEN 'fr'
-                        ELSE 'unknown' END AS lang_guess
+                   {_LANG_CASE_SQL} AS lang_guess
             FROM (
                 SELECT doc_id, lang, text,
-                       len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b')) AS en,
-                       len(regexp_extract_all(lower(text), '\b(el|la|de|que|y|en|un|es)\b')) AS es,
-                       len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|von|ein|zu)\b')) AS de,
-                       len(regexp_extract_all(lower(text), '\b(le|la|les|de|et|un|une|est)\b')) AS fr
+                       {_LANG_HITS_SQL}
                 FROM documents
             )
 """

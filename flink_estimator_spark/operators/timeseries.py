@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..plans._helpers import daily_revenue_week, dec, t
+from ..plans._helpers import (
+    DAILY_REVENUE_CTES,
+    TIME_WEIGHTED_AVG_SQL,
+    daily_revenue_week,
+    dec,
+    t,
+)
 from ..plans.registry import query
 
 
@@ -468,27 +474,7 @@ def q_winsorized_stats(spark, sf_dir):
 
 @query(
     "q_time_weighted_avg",
-    oracle="""
-        WITH s AS (
-            SELECT user_id,
-                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-                   epoch_us(ts) AS t_us,
-                   lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS nxt_us
-            FROM events),
-        seg AS (
-            SELECT user_id, cents, nxt_us - t_us AS dt_us
-            FROM s WHERE nxt_us IS NOT NULL)
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_segments,
-               CAST(sum(dt_us) AS BIGINT) AS span_us,
-               CAST(CAST(sum(CAST(cents AS HUGEINT) * CAST(dt_us AS HUGEINT))
-                         * 1000000 AS HUGEINT)
-                    // CAST(sum(dt_us) AS HUGEINT) AS BIGINT) AS twa_cents_q6
-        FROM seg
-        GROUP BY user_id
-        ORDER BY user_id
-    """,
+    oracle=TIME_WEIGHTED_AVG_SQL,
     tags=("llm", "timeseries", "time-weighted"),
 )
 def q_time_weighted_avg(spark, sf_dir):
@@ -538,15 +524,7 @@ _TS_PATTERN = [1_000_000 * (i + 1) for i in range(7)]
 @query(
     "q_ts_pattern_match",
     oracle=f"""
-        WITH daily AS (
-            SELECT epoch_us(o_orderdate) AS day_us,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-                        AS BIGINT) AS rev_cents
-            FROM orders GROUP BY o_orderdate),
-        num AS (
-            SELECT day_us, rev_cents,
-                   row_number() OVER (ORDER BY day_us) AS rn
-            FROM daily),
+        WITH {DAILY_REVENUE_CTES},
         pat AS (
             SELECT * FROM (VALUES
                 {", ".join(f"({i + 1}, {v})" for i, v in enumerate(_TS_PATTERN))}
@@ -608,17 +586,35 @@ def q_ts_pattern_match(spark, sf_dir):
     )
 
 
-@query(
-    "q_interval_union",
-    oracle="""
-        WITH iv AS (
+# ``iv``: one activity interval per event, [s_us, e_us) with a length of
+# one minute per value cent (Spark: ``_activity_intervals``)
+_INTERVALS_CTE = """iv AS (
             SELECT user_id,
                    epoch_us(ts) AS s_us,
                    epoch_us(ts)
                    + CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) * 600000
                        AS e_us,
                    event_id
-            FROM events),
+            FROM events)"""
+
+
+def _activity_intervals(spark, sf_dir):
+    """(user_id, s_us, e_us, event_id): the ``_INTERVALS_CTE`` intervals."""
+    return t(spark, sf_dir, "events").select(
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("s_us"),
+        (
+            F.unix_micros(F.col("ts").cast("timestamp"))
+            + (dec("value") * 100).cast("bigint") * 600000
+        ).alias("e_us"),
+        "event_id",
+    )
+
+
+@query(
+    "q_interval_union",
+    oracle=f"""
+        WITH {_INTERVALS_CTE},
         w AS (
             SELECT user_id, s_us, e_us,
                    max(e_us) OVER (PARTITION BY user_id
@@ -650,16 +646,7 @@ def q_interval_union(spark, sf_dir):
     One window + one aggregate, both on the user partitioning, so the
     second shuffle collapses; no self-join (the O(n²) overlap-pairs
     formulation this replaces)."""
-    e = t(spark, sf_dir, "events")
-    iv = e.select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("s_us"),
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            + (dec("value") * 100).cast("bigint") * 600000
-        ).alias("e_us"),
-        "event_id",
-    )
+    iv = _activity_intervals(spark, sf_dir)
     w = W.partitionBy("user_id").orderBy("s_us", "event_id").rowsBetween(
         W.unboundedPreceding, -1
     )
@@ -837,15 +824,8 @@ def q_autocorrelation(spark, sf_dir):
 
 @query(
     "q_max_concurrency",
-    oracle="""
-        WITH iv AS (
-            SELECT user_id,
-                   epoch_us(ts) AS s_us,
-                   epoch_us(ts)
-                   + CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) * 600000
-                       AS e_us,
-                   event_id
-            FROM events),
+    oracle=f"""
+        WITH {_INTERVALS_CTE},
         pts AS (
             SELECT user_id, s_us AS t_us, 1 AS delta, 0 AS kind, event_id
             FROM iv
@@ -873,16 +853,7 @@ def q_max_concurrency(spark, sf_dir):
     the touch point — stated, and identical in both engines.  The dual of
     q_interval_union (which measures covered TIME; this measures covered
     DEPTH): same single per-user sort window, integer arithmetic only."""
-    e = t(spark, sf_dir, "events")
-    iv = e.select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("s_us"),
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            + (dec("value") * 100).cast("bigint") * 600000
-        ).alias("e_us"),
-        "event_id",
-    )
+    iv = _activity_intervals(spark, sf_dir)
     pts = iv.select(
         "user_id",
         F.col("s_us").alias("t_us"),
@@ -1039,17 +1010,23 @@ def q_rolling_distinct(spark, sf_dir):
     )
 
 
-@query(
-    "q_ks_statistic",
-    oracle="""
-        WITH counts AS (
-            SELECT CAST(floor(value * 100) AS BIGINT) AS cent,
+def _counts_by_type_cte(bucket: str) -> str:
+    """DuckDB ``counts`` CTE of the view-vs-purchase drift oracles: per
+    ``bucket`` expression, the view (``na``) and purchase (``nb``) events."""
+    return f"""counts AS (
+            SELECT {bucket},
                    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS na,
                    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS nb
             FROM events
             WHERE event_type IN ('view', 'purchase')
             GROUP BY 1
-        ),
+        )"""
+
+
+@query(
+    "q_ks_statistic",
+    oracle=f"""
+        WITH {_counts_by_type_cte("CAST(floor(value * 100) AS BIGINT) AS cent")},
         tot AS (
             SELECT CAST(sum(na) AS BIGINT) AS n_view,
                    CAST(sum(nb) AS BIGINT) AS n_purchase
@@ -1177,15 +1154,8 @@ def ks_two_sample(tagged: DataFrame) -> DataFrame:
 
 @query(
     "q_psi_drift",
-    oracle="""
-        WITH counts AS (
-            SELECT CAST(floor(value) AS BIGINT) AS bucket,
-                   CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS na,
-                   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS nb
-            FROM events
-            WHERE event_type IN ('view', 'purchase')
-            GROUP BY 1
-        ),
+    oracle=f"""
+        WITH {_counts_by_type_cte("CAST(floor(value) AS BIGINT) AS bucket")},
         tot AS (
             SELECT CAST(sum(na) AS BIGINT) AS n_view,
                    CAST(sum(nb) AS BIGINT) AS n_purchase,
@@ -1256,17 +1226,8 @@ def q_psi_drift(spark, sf_dir):
 
 @query(
     "q_wasserstein_drift",
-    oracle="""
-        WITH counts AS (
-            SELECT CAST(floor(value) AS BIGINT) AS bucket,
-                   CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS na,
-                   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS nb
-            FROM events
-            WHERE event_type IN ('view', 'purchase')
-            GROUP BY 1
-        ),
+    oracle=f"""
+        WITH {_counts_by_type_cte("CAST(floor(value) AS BIGINT) AS bucket")},
         tot AS (
             SELECT CAST(sum(na) AS BIGINT) AS n_view,
                    CAST(sum(nb) AS BIGINT) AS n_purchase,

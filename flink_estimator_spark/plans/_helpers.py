@@ -80,6 +80,20 @@ def daily_revenue_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the DuckDB daily revenue: ``daily`` (day_us, rev_cents) per order date and
+# ``num`` adding its date rank ``rn``; the frames over it are the oracles'
+# form of ``daily_revenue_week``
+DAILY_REVENUE_CTES = """daily AS (
+            SELECT epoch_us(o_orderdate) AS day_us,
+                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100
+                        AS BIGINT) AS rev_cents
+            FROM orders GROUP BY o_orderdate),
+        num AS (
+            SELECT day_us, rev_cents,
+                   row_number() OVER (ORDER BY day_us) AS rn
+            FROM daily)"""
+
+
 def largest_remainder(
     df: DataFrame, key: str, weight: str, total: str, budget: int
 ) -> DataFrame:
@@ -151,6 +165,241 @@ def cep_chain_oracle(where: str = "") -> str:
         ORDER BY user_id
     """
 
+# Oracles shared by a batch query and the streaming runtime gate that must
+# return the same answer: a stream's result may not depend on how it is cut
+# into micro-batches, so the batch dual's oracle gates both.
+
+# q_tumble_window, q_stream_tumble_runtime
+TUMBLE_SQL = """
+        SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS win_start,
+               event_type,
+               count(*) AS n,
+               CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        FROM events
+        GROUP BY 1, 2
+        ORDER BY win_start, event_type
+    """
+
+# q_cep_funnel, q_stream_funnel_runtime
+CEP_FUNNEL_SQL = """
+        SELECT s.user_id, count(*) AS n_conversions
+        FROM events s
+        JOIN events p
+          ON p.user_id = s.user_id
+         AND p.event_type = 'purchase'
+         AND p.ts > s.ts
+         AND epoch(p.ts) - epoch(s.ts) <= 86400
+        WHERE s.event_type = 'signup'
+        GROUP BY s.user_id
+        ORDER BY s.user_id
+    """
+
+# q_running_anomaly, q_stream_anomaly_runtime
+RUNNING_ANOMALY_SQL = """
+        WITH cents AS (
+            SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+            FROM events),
+        stats AS (
+            SELECT user_id, event_id, ts_us, v,
+                   count(*) OVER w AS n,
+                   sum(v) OVER w AS s,
+                   sum(v * v) OVER w AS q
+            FROM cents
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+        flagged AS (
+            SELECT user_id, event_id, ts_us, v, n,
+                   CAST(n * v - s AS DECIMAL(38,0)) * CAST(n * v - s AS DECIMAL(38,0))
+                       > CAST(9 * n AS DECIMAL(38,0)) * CAST(n * q - s * s AS DECIMAL(38,0))
+                       AS is_anomaly
+            FROM stats WHERE n >= 5)
+        SELECT user_id, event_id, ts_us, CAST(n AS BIGINT) AS n_prior
+        FROM flagged WHERE is_anomaly
+        ORDER BY user_id, ts_us, event_id
+    """
+
+# q_time_weighted_avg, q_stream_twa_runtime
+TIME_WEIGHTED_AVG_SQL = """
+        WITH s AS (
+            SELECT user_id,
+                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+                   epoch_us(ts) AS t_us,
+                   lead(epoch_us(ts)) OVER (PARTITION BY user_id
+                                            ORDER BY ts, event_id) AS nxt_us
+            FROM events),
+        seg AS (
+            SELECT user_id, cents, nxt_us - t_us AS dt_us
+            FROM s WHERE nxt_us IS NOT NULL)
+        SELECT user_id,
+               CAST(count(*) AS BIGINT) AS n_segments,
+               CAST(sum(dt_us) AS BIGINT) AS span_us,
+               CAST(CAST(sum(CAST(cents AS HUGEINT) * CAST(dt_us AS HUGEINT))
+                         * 1000000 AS HUGEINT)
+                    // CAST(sum(dt_us) AS HUGEINT) AS BIGINT) AS twa_cents_q6
+        FROM seg
+        GROUP BY user_id
+        ORDER BY user_id
+    """
+
+# the dynamic-gap sessionization CTEs (g -> f -> s: per-event gap, running
+# session end, session id) under q_session_dynamic_gap and
+# q_stream_dynsession_runtime; each appends its own SELECT over ``s``
+DYNAMIC_GAP_SESSIONS_CTES = """
+        WITH g AS (
+            SELECT user_id, ts, event_id,
+                   CAST(CASE event_type WHEN 'purchase' THEN 2400
+                                        WHEN 'error' THEN 300
+                                        ELSE 900 END AS BIGINT) AS gap_s
+            FROM events
+            WHERE user_id < 50
+        ),
+        f AS (
+            SELECT user_id, ts, event_id, gap_s,
+                   max(epoch_us(ts) + gap_s * 1000000) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end_us
+            FROM g
+        ),
+        s AS (
+            SELECT user_id, ts, gap_s,
+                   CAST(sum(CASE WHEN prev_end_us IS NULL
+                                   OR epoch_us(ts) >= prev_end_us
+                                 THEN 1 ELSE 0 END) OVER (
+                            PARTITION BY user_id ORDER BY ts, event_id
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                        AS BIGINT) AS session_id
+            FROM f
+        )
+"""
+
+
+def temporal_probe_oracle(select: str) -> str:
+    """DuckDB oracle of the purchase -> view-version temporal probe: each
+    purchase LEFT JOINed to the SCD2 version of its user's view values valid
+    at purchase time, projecting ``select``.  Gates ``q_temporal_join`` and
+    the stream-static ``q_stream_temporal_runtime``."""
+    return f"""
+        WITH versions AS (
+            SELECT user_id, value,
+                   epoch_us(ts) AS valid_from_us,
+                   lead(epoch_us(ts)) OVER (PARTITION BY user_id
+                                            ORDER BY epoch_us(ts), value) AS valid_to_us
+            FROM events WHERE event_type = 'view'
+        )
+        SELECT {select}
+        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        LEFT JOIN versions v
+          ON p.user_id = v.user_id
+         AND epoch_us(p.ts) >= v.valid_from_us
+         AND (v.valid_to_us IS NULL OR epoch_us(p.ts) < v.valid_to_us)
+        ORDER BY p.event_id
+    """
+
+
+# The exact-Jaccard dedup oracles (operators.dedup, operators.cleaning).
+# ``sh``: each document's distinct lower-cased word 5-grams (the DuckDB
+# slice ``words[i:i+4]`` is 1-based and inclusive); ``sizes``: its shingle
+# count; ``inter``: shared shingles per pair id_a < id_b.
+SHINGLES_CTE = r"""sh AS (
+            SELECT DISTINCT doc_id, shingle FROM (
+                SELECT doc_id,
+                       array_to_string(words[i:i+4], ' ') AS shingle
+                FROM (
+                    SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
+                    FROM documents
+                ), LATERAL (SELECT unnest(generate_series(1, greatest(len(words) - 4, 0))) AS i)
+            )
+        )"""
+SHINGLE_SIZE_CTES = f"""{SHINGLES_CTE},
+        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)"""
+SHINGLE_INTER_SQL = """SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY 1, 2"""
+JACCARD_CTES = f"""
+        WITH {SHINGLE_SIZE_CTES},
+        inter AS (
+            {SHINGLE_INTER_SQL}
+        )
+"""
+# ``reach`` (src, dst): every node reachable from src along the symmetric
+# edge list ``sym`` (src, dst), src itself included; min(dst) labels its
+# connected component.  Used by the oracles of the connected-component
+# operators (dedup clusters, entity resolution).
+REACH_CTES = """nodes AS (SELECT DISTINCT src AS id FROM sym),
+        reach AS (
+            WITH RECURSIVE r(src, dst) AS (
+                SELECT id, id FROM nodes
+                UNION
+                SELECT r.src, s.dst FROM r JOIN sym s ON r.dst = s.src
+            ) SELECT * FROM r
+        )"""
+# ``reach`` over the graph of document pairs at Jaccard >= 0.5
+JACCARD_CLUSTER_CTES = f"""
+        WITH pairs AS (
+            SELECT id_a, id_b FROM (
+{JACCARD_CTES}
+                SELECT id_a, id_b
+                FROM inter
+                JOIN sizes sa ON sa.doc_id = id_a
+                JOIN sizes sb ON sb.doc_id = id_b
+                WHERE CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter) >= 0.5
+            )
+        ),
+        sym AS (
+            SELECT id_a AS src, id_b AS dst FROM pairs
+            UNION SELECT id_b, id_a FROM pairs
+        ),
+        {REACH_CTES}
+"""
+
+
+def minhash_ctes(num_hashes: int = 16, bands: int = 4) -> str:
+    """The sh/sig/banded CTE bodies of the portable MinHash-LSH DuckDB
+    replay (md5-60 shingles, md5-word signatures, md5 band keys) — shared
+    by the batch LSH oracle (operators/dedup.py) and the streaming near-dup
+    gate's oracle (plans/streaming_runtime.py), which append different pair
+    selections."""
+    rows = num_hashes // bands
+    h_mins = ",\n            ".join(
+        f"min(CAST(('0x' || substr(md5(CAST(shingle AS VARCHAR) || '#{i // 4}'),"
+        f" {(i % 4) * 8 + 1}, 8)) AS BIGINT)) AS h{i}"
+        for i in range(num_hashes)
+    )
+
+    def key_sql(b: int) -> str:
+        concat = " || '#' || ".join(
+            f"CAST(h{b * rows + r} AS VARCHAR)" for r in range(rows)
+        )
+        return f"CAST(('0x' || substr(md5({concat}), 1, 15)) AS BIGINT)"
+
+    band_rows = "\n                UNION ALL\n".join(
+        f"                SELECT doc_id, {b} AS band, {key_sql(b)} AS key FROM sig"
+        for b in range(bands)
+    )
+    return f"""sh AS (
+            SELECT DISTINCT doc_id,
+                   CAST(('0x' || substr(md5(shingle_str), 1, 15)) AS BIGINT)
+                       AS shingle
+            FROM (
+                SELECT doc_id, array_to_string(words[i:i+4], ' ') AS shingle_str
+                FROM (
+                    SELECT doc_id,
+                           string_split_regex(trim(lower(text)), '\\s+') AS words
+                    FROM documents
+                ), LATERAL (SELECT unnest(generate_series(1,
+                                greatest(len(words) - 4, 0))) AS i)
+            )
+        ),
+        sig AS (
+            SELECT doc_id,
+            {h_mins}
+            FROM sh GROUP BY doc_id
+        ),
+        banded AS (
+{band_rows}
+        )"""
+
 
 def eager_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize ``df`` once with ZERO persistent-RDD footprint.
@@ -189,7 +438,7 @@ def materialize(df: DataFrame) -> DataFrame:
     fills the cache, then the RDD-checkpoint write) because RDD
     checkpointing always recomputes under a second action; a parquet
     round-trip folds compute and write into ONE job.  Measured same-process
-    A/B at sf0.1 (optimization r10, tools/exp_materialize.py): q_emb_pq_adc
+    A/B at sf0.1 (OPTIMIZATION_r10.md §3): q_emb_pq_adc
     3.37 -> 2.83 s, q_emb_ivfpq_adc 5.2 -> 4.6 s, q_theta_setops
     3.1 -> 2.6 s, q_bfs_levels 2.85 -> 2.61 s — identical rows everywhere.
 
@@ -241,3 +490,33 @@ def word_ngrams(words: Column, n: int) -> Column:
         k >= 1,
         F.transform(F.sequence(F.lit(1), k), lambda i: F.concat_ws(" ", F.slice(words, i, n))),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def kll_exact_cols() -> list[Column]:
+    """Aggregates of ``value``'s exact median (``p50_exact``) and its 40th
+    and 60th percentiles (``_lo``, ``_hi``): the truth side of the KLL
+    rank-window certificate (``kll_rank_ok``)."""
+    return [
+        F.percentile("value", F.lit(0.5)).alias("p50_exact"),
+        F.percentile("value", F.lit(0.4)).alias("_lo"),
+        F.percentile("value", F.lit(0.6)).alias("_hi"),
+    ]
+
+
+def kll_merged(sks: Column) -> Column:
+    """The KLL sketches of the array ``sks`` merged into one.
+    ``kll_sketch_merge_double`` is a binary scalar with no union-aggregate
+    form, so the array is folded with a HOF reduce."""
+    return F.aggregate(
+        F.slice(sks, 2, F.greatest(F.size(sks) - 1, F.lit(0))),
+        F.element_at(sks, 1),
+        lambda acc, x: F.kll_sketch_merge_double(acc, x),
+    )
+
+
+def kll_rank_ok() -> Column:
+    """``rank_ok``: the median of sketch ``sk`` lies between the group's
+    exact 40th and 60th percentiles (``kll_exact_cols``).  KLL bounds RANK
+    error, not value error, so this window holds for any distribution."""
+    est = F.kll_sketch_get_quantile_double("sk", F.lit(0.5))
+    return ((est >= F.col("_lo")) & (est <= F.col("_hi"))).alias("rank_ok")

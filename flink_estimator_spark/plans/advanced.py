@@ -15,7 +15,16 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._helpers import dec, local_df, spread, t
+from ._helpers import (
+    RUNNING_ANOMALY_SQL,
+    dec,
+    kll_exact_cols,
+    kll_merged,
+    kll_rank_ok,
+    local_df,
+    spread,
+    t,
+)
 from .registry import query
 
 
@@ -577,45 +586,21 @@ def q_kll_rollup(spark, sf_dir):
     DuckDB ``quantile_cont``) and states the certificate as literal TRUE."""
     ev = t(spark, sf_dir, "events")
     per = ev.groupBy("event_type").agg(
-        F.kll_sketch_agg_double("value").alias("sk"),
-        F.percentile("value", F.lit(0.5)).alias("p50_exact"),
-        F.percentile("value", F.lit(0.4)).alias("_lo"),
-        F.percentile("value", F.lit(0.6)).alias("_hi"),
+        F.kll_sketch_agg_double("value").alias("sk"), *kll_exact_cols()
     )
-    # kll_sketch_merge_double is a binary scalar (no union-agg form): fold
-    # the handful of per-group sketches with a HOF reduce — the rollup
-    # level always has far fewer rows than the base level, so a
+    # the rollup level always has far fewer rows than the base level, so a
     # collect_list + fold at the top of the hierarchy is bounded
-    sks = F.collect_list("sk")
-    merged = F.aggregate(
-        F.slice(sks, 2, F.greatest(F.size(sks) - 1, F.lit(0))),
-        F.element_at(sks, 1),
-        lambda acc, x: F.kll_sketch_merge_double(acc, x),
-    )
     all_row = (
-        per.agg(merged.alias("sk"))
-        .crossJoin(
-            F.broadcast(
-                ev.agg(
-                    F.percentile("value", F.lit(0.5)).alias("p50_exact"),
-                    F.percentile("value", F.lit(0.4)).alias("_lo"),
-                    F.percentile("value", F.lit(0.6)).alias("_hi"),
-                )
-            )
-        )
+        per.agg(kll_merged(F.collect_list("sk")).alias("sk"))
+        .crossJoin(F.broadcast(ev.agg(*kll_exact_cols())))
         .select(F.lit("ALL").alias("etype"), "p50_exact", "_lo", "_hi", "sk")
     )
     per_rows = per.select(
         F.col("event_type").alias("etype"), "p50_exact", "_lo", "_hi", "sk"
     )
-    est = F.kll_sketch_get_quantile_double("sk", F.lit(0.5))
     return (
         per_rows.unionByName(all_row)
-        .select(
-            "etype",
-            "p50_exact",
-            ((est >= F.col("_lo")) & (est <= F.col("_hi"))).alias("rank_ok"),
-        )
+        .select("etype", "p50_exact", kll_rank_ok())
         .orderBy("etype")
     )
 
@@ -815,29 +800,7 @@ def q_resample_interp(spark, sf_dir):
 
 @query(
     "q_running_anomaly",
-    oracle="""
-        WITH cents AS (
-            SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                   CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
-            FROM events),
-        stats AS (
-            SELECT user_id, event_id, ts_us, v,
-                   count(*) OVER w AS n,
-                   sum(v) OVER w AS s,
-                   sum(v * v) OVER w AS q
-            FROM cents
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        flagged AS (
-            SELECT user_id, event_id, ts_us, v, n,
-                   CAST(n * v - s AS DECIMAL(38,0)) * CAST(n * v - s AS DECIMAL(38,0))
-                       > CAST(9 * n AS DECIMAL(38,0)) * CAST(n * q - s * s AS DECIMAL(38,0))
-                       AS is_anomaly
-            FROM stats WHERE n >= 5)
-        SELECT user_id, event_id, ts_us, CAST(n AS BIGINT) AS n_prior
-        FROM flagged WHERE is_anomaly
-        ORDER BY user_id, ts_us, event_id
-    """,
+    oracle=RUNNING_ANOMALY_SQL,
     tags=("complex", "anomaly", "window-analytic", "exact-aggregation"),
 )
 def q_running_anomaly(spark, sf_dir):

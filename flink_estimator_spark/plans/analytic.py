@@ -13,7 +13,13 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ._helpers import dec, revenue_expr, t
+from ._helpers import (
+    CEP_FUNNEL_SQL,
+    DYNAMIC_GAP_SESSIONS_CTES,
+    dec,
+    revenue_expr,
+    t,
+)
 from .registry import query
 
 
@@ -166,32 +172,7 @@ def q_sessionization(spark, sf_dir):
 
 @query(
     "q_session_dynamic_gap",
-    oracle="""
-        WITH g AS (
-            SELECT user_id, ts, event_id,
-                   CAST(CASE event_type WHEN 'purchase' THEN 2400
-                                        WHEN 'error' THEN 300
-                                        ELSE 900 END AS BIGINT) AS gap_s
-            FROM events
-            WHERE user_id < 50
-        ),
-        f AS (
-            SELECT user_id, ts, event_id, gap_s,
-                   max(epoch_us(ts) + gap_s * 1000000) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end_us
-            FROM g
-        ),
-        s AS (
-            SELECT user_id, ts, gap_s,
-                   CAST(sum(CASE WHEN prev_end_us IS NULL
-                                   OR epoch_us(ts) >= prev_end_us
-                                 THEN 1 ELSE 0 END) OVER (
-                            PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS session_id
-            FROM f
-        )
+    oracle=DYNAMIC_GAP_SESSIONS_CTES + """
         SELECT user_id, session_id, count(*) AS n_events,
                min(epoch_us(ts)) AS sess_start_us,
                max(epoch_us(ts) + gap_s * 1000000) AS sess_end_us
@@ -304,9 +285,8 @@ def q_cube(spark, sf_dir):
     )
 
 
-@query(
-    "q_grouping_sets",
-    oracle="""
+# one SQL text, run by both engines (Spark SQL surface vs DuckDB oracle)
+_GROUPING_SETS_SQL = """
         SELECT coalesce(o_orderstatus, 'ALL') AS status,
                coalesce(o_orderpriority, 'ALL') AS priority,
                count(*) AS n,
@@ -314,23 +294,18 @@ def q_cube(spark, sf_dir):
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY status, priority
-    """,
+    """
+
+
+@query(
+    "q_grouping_sets",
+    oracle=_GROUPING_SETS_SQL,
     tags=("complex", "grouping-sets"),
 )
 def q_grouping_sets(spark, sf_dir):
     """GROUPING SETS with heterogeneous groupings (SQL surface)."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               count(*) AS n,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        ORDER BY status, priority
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL)
 
 
 @query(
@@ -521,18 +496,7 @@ def q_pivot_status(spark, sf_dir):
 
 @query(
     "q_cep_funnel",
-    oracle="""
-        SELECT s.user_id, count(*) AS n_conversions
-        FROM events s
-        JOIN events p
-          ON p.user_id = s.user_id
-         AND p.event_type = 'purchase'
-         AND p.ts > s.ts
-         AND epoch(p.ts) - epoch(s.ts) <= 86400
-        WHERE s.event_type = 'signup'
-        GROUP BY s.user_id
-        ORDER BY s.user_id
-    """,
+    oracle=CEP_FUNNEL_SQL,
     tags=("complex", "cep", "pattern"),
 )
 def q_cep_funnel(spark, sf_dir):

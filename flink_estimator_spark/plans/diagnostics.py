@@ -17,7 +17,14 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ._helpers import daily_revenue_week, dec, largest_remainder, local_df, t
+from ._helpers import (
+    DAILY_REVENUE_CTES,
+    daily_revenue_week,
+    dec,
+    largest_remainder,
+    local_df,
+    t,
+)
 from .registry import query
 
 
@@ -321,16 +328,8 @@ def q_first_last_window(spark, sf_dir):
 
 @query(
     "q_rolling_median",
-    oracle="""
-        WITH daily AS (
-            SELECT epoch_us(o_orderdate) AS day_us,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100
-                        AS BIGINT) AS rev_cents
-            FROM orders GROUP BY o_orderdate),
-        num AS (
-            SELECT day_us, rev_cents,
-                   row_number() OVER (ORDER BY day_us) AS rn
-            FROM daily),
+    oracle=f"""
+        WITH {DAILY_REVENUE_CTES},
         frames AS (
             SELECT a.day_us, a.rn, b.rev_cents,
                    row_number() OVER (PARTITION BY a.rn

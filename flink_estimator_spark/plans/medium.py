@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ._helpers import REVENUE_SQL, dec, revenue_expr, t
+from ._helpers import REVENUE_SQL, TUMBLE_SQL, dec, revenue_expr, t
 from .registry import query
 
 
@@ -366,15 +366,7 @@ def q_supplier_stats(spark, sf_dir):
 
 @query(
     "q_tumble_window",
-    oracle="""
-        SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS win_start,
-               event_type,
-               count(*) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY win_start, event_type
-    """,
+    oracle=TUMBLE_SQL,
     tags=("medium", "window-time", "tumble"),
 )
 def q_tumble_window(spark, sf_dir):

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ._helpers import dec, t
+from ._helpers import dec, t, temporal_probe_oracle
 from .registry import query
 
 # 30-minute cumulate windows advancing in 10-minute steps
@@ -206,24 +206,11 @@ def q_window_dedup(spark, sf_dir):
 
 @query(
     "q_temporal_join",
-    oracle="""
-        WITH versions AS (
-            SELECT user_id, value,
-                   epoch_us(ts) AS valid_from_us,
-                   lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                                            ORDER BY epoch_us(ts), value) AS valid_to_us
-            FROM events WHERE event_type = 'view'
-        )
-        SELECT p.event_id, p.user_id, epoch_us(p.ts) AS purchase_us,
-               CAST(v.value AS DOUBLE) AS state_value,
-               v.valid_from_us AS version_us
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        LEFT JOIN versions v
-          ON p.user_id = v.user_id
-         AND epoch_us(p.ts) >= v.valid_from_us
-         AND (v.valid_to_us IS NULL OR epoch_us(p.ts) < v.valid_to_us)
-        ORDER BY p.event_id
-    """,
+    oracle=temporal_probe_oracle(
+        "p.event_id, p.user_id, epoch_us(p.ts) AS purchase_us,"
+        " CAST(v.value AS DOUBLE) AS state_value,"
+        " v.valid_from_us AS version_us"
+    ),
     tags=("complex", "join", "temporal", "scd2"),
 )
 def q_temporal_join(spark, sf_dir):

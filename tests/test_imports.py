@@ -18,6 +18,12 @@ FIRST_TOUCHES = [
     "flink_estimator_spark.functions",
     "flink_estimator_spark.operators.similarity",
     "flink_estimator_spark.operators.sequence",
+    # these import oracle fragments from plans._helpers: each must still
+    # import first without closing a cycle
+    "flink_estimator_spark.operators.timeseries",
+    "flink_estimator_spark.operators.dedup",
+    "flink_estimator_spark.operators.cleaning",
+    "flink_estimator_spark.operators.fuzzy",
     "flink_estimator_spark.sources",
     "flink_estimator_spark.streaming",
     "flink_estimator_spark.plans",
