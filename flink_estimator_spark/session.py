@@ -5,7 +5,10 @@ the ones that also matter on a real multi-executor cluster at large scale:
 AQE for runtime re-planning (skew joins, partition coalescing), Arrow for the
 Pandas-UDF slow path, UTC session timezone so results are comparable with the
 DuckDB oracle, and shuffle partitions sized to the parallelism at hand rather
-than the 200-partition default.
+than the 200-partition default.  Python workers fork from
+``worker_daemon``, which spares each Python task a re-read of
+``pyspark.zip`` at its start; the package must therefore be importable
+where the workers start, as its UDFs already require.
 """
 
 from __future__ import annotations
@@ -15,6 +18,9 @@ import shutil
 import time
 
 from pyspark.sql import SparkSession
+
+# the directory holding this package: the repo root in a checkout
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -62,6 +68,13 @@ def get_spark(
         # carriage-return frames that can interleave with bench.py's single
         # JSON output line when a harness merges streams
         .config("spark.ui.showConsoleProgress", "false")
+        # Python workers fork from a daemon whose zip importers skip the
+        # per-task re-read of pyspark.zip (worker_daemon.py, SCALE.md §6);
+        # Spark puts this PYTHONPATH after its own pyspark.zip and before
+        # the launching environment's, so the daemon imports from any
+        # working directory
+        .config("spark.python.daemon.module", "flink_estimator_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
     )
     builder = builder.config(
         # checkpoint files from eager_checkpoint (plans/_helpers.py) are
@@ -89,8 +102,7 @@ def checkpoint_root() -> str:
     """Root of every checkpoint and materialization this engine writes:
     the repo's gitignored ``spark-warehouse/_checkpoints`` (on a cluster
     this would be an HDFS/S3 path)."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(repo_root, "spark-warehouse", "_checkpoints")
+    return os.path.join(_REPO_ROOT, "spark-warehouse", "_checkpoints")
 
 
 def ensure_checkpoint_dir(sc) -> str:

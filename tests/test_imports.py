@@ -28,6 +28,7 @@ FIRST_TOUCHES = [
     "flink_estimator_spark.streaming",
     "flink_estimator_spark.plans",
     "flink_estimator_spark.estimator",
+    "flink_estimator_spark.worker_daemon",
 ]
 
 
@@ -41,3 +42,23 @@ def test_first_touch_import(module):
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_worker_daemon_imports_nothing_of_the_engine():
+    """Every forked Python worker inherits what the daemon has loaded:
+    no other module of the package, and no pandas or pyarrow (whose
+    threads a fork would inherit)."""
+    code = (
+        "import sys, flink_estimator_spark.worker_daemon\n"
+        "print(sorted(m for m in sys.modules if m.startswith("
+        "('flink_estimator_spark.', 'pandas', 'pyarrow'))))"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=REPO_ROOT,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == "['flink_estimator_spark.worker_daemon']"
