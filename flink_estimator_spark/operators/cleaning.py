@@ -208,16 +208,17 @@ def q_dedup_keep_list(spark, sf_dir):
     """Canonical-survivor selection over the near-dup clusters: per source,
     how many docs survive dedup (cluster minimum or unclustered singleton)
     and how many are dropped.  This is the keep-list a 100 TB dedup pass
-    actually materializes; the cluster labels come from the same iterative
-    connected-components pass as ``q_dedup_clusters``, joined back to the
-    corpus with the labels side broadcast (cluster membership is always a
-    small fraction of the corpus)."""
+    actually materializes; the cluster labels come from the same
+    ``connected_components`` operator as ``q_dedup_clusters``, left-joined
+    back to the corpus.  No broadcast hint: over the operator's edge cap
+    the labels grow with the corpus's clustered share, and under it they
+    are a ``LocalTableScan`` whose size the planner already knows."""
     docs = t(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, threshold=0.5)
     labels = connected_components(pairs.select("id_a", "id_b"))
     keep = F.col("cluster").isNull() | (F.col("cluster") == F.col("doc_id"))
     return (
-        docs.join(F.broadcast(labels), "doc_id", "left")
+        docs.join(labels, "doc_id", "left")
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),

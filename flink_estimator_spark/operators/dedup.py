@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans._helpers import (
     JACCARD_CLUSTER_CTES,
@@ -29,6 +30,7 @@ from ..plans._helpers import (
     SHINGLE_SIZE_CTES,
     SHINGLES_CTE,
     eager_checkpoint,
+    local_df,
     materialize,
     minhash_ctes,
     spread,
@@ -520,87 +522,125 @@ def q_dedup_simhash(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame, max_iters: int = 20, dedup_edges: bool = False
-) -> DataFrame:
-    """Connected components of an undirected pair graph by iterative
-    min-label propagation: every vertex repeatedly adopts the smallest label
-    reachable over one hop until no label changes.
+_CC_LOCAL_CAP = 100_000  # edge count up to which union-find runs on the driver
+_CC_ROUNDS = 16  # pointer-doubling round budget: diameters up to 2^16
 
-    Each iteration is one distributed join + aggregate (label propagation is
-    how GraphX/GraphFrames implement it); the driver only checks the
-    converged-yet counter — the vertex/edge data never leaves the cluster.
-    Iterations are bounded by the graph diameter, which for near-dup
-    clusters is tiny (they are near-cliques).
 
-    Loop state stays in MEMORY caches (sym + the current labels) for speed,
-    but every cache is released in a ``finally`` and the converged result
-    leaves through ONE ``eager_checkpoint`` (materialized from the still-
-    cached final labels, so the checkpoint write is a cheap re-read) — after
-    the operator returns, ``getPersistentRDDs()`` is empty and the caller
-    reads checkpoint files (the r3 verdict's session-hygiene fix: the
-    previous ``.cache()`` chain left edges/sym/final-labels pinned for the
-    session's lifetime; per-iteration *reliable* checkpoints were measured
-    ~2x slower than in-loop caches on the fixture clusters).  Labels start
-    at the one-hop minimum, which is exactly what iteration 1 would compute
-    — so the loop begins at hop 2.  ``dedup_edges`` adds a distinct over
-    the symmetrized edges; leave it off when the input is already unique
-    pairs (min-label propagation is idempotent under duplicate edges — they
-    only add join rows).
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected pair graph.  Input: (id_a,
+    id_b) pairs.  Output: (doc_id, cluster) with cluster == the minimum id
+    of the component, typed like ``id_a``.
 
-    Input: (id_a, id_b) pairs.  Output: (doc_id, cluster) with cluster ==
-    min doc_id of the component.
-    """
+    One bounded collect of at most ``_CC_LOCAL_CAP + 1`` edges routes (the
+    ``bpe_train`` auto-mode pattern).  An edge set that fits is resolved by
+    union-find on the driver: that collect is the only action, and the
+    labels plan as a ``LocalTableScan``.  Near-dup clusters and blocked
+    entity-resolution edges are small by construction, and at that size
+    the fixed per-job cost of any distributed loop dominates (SCALE.md §3).
+    A larger edge set goes to ``_cc_pointer_doubling``, whose round count
+    grows with log(diameter), not diameter; that engine's edge cache
+    recomputes the edges the routing collect only partly read."""
+    rows = edges.limit(_CC_LOCAL_CAP + 1).collect()
+    if len(rows) > _CC_LOCAL_CAP:
+        return _cc_pointer_doubling(edges)
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's minimum
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    id_type = edges.schema["id_a"].dataType
+    schema = T.StructType(
+        [T.StructField("doc_id", id_type), T.StructField("cluster", id_type)]
+    )
+    labels = [(v, find(v)) for v in sorted(parent)]
+    return local_df(edges.sparkSession, labels, schema)
+
+
+def _cc_pointer_doubling(edges: DataFrame) -> DataFrame:
+    """The distributed engine behind ``connected_components`` for edge
+    sets over the cap: min-label propagation PLUS pointer doubling (label
+    := label of label) per round, converging in O(log diameter) rounds
+    where plain min-label propagation needs O(diameter) — the difference
+    between 5 rounds and 60+ iterations on chain-shaped graphs
+    (edit-distance neighborhoods, road-network-like data).
+
+    Each round eager-checkpoints the label table: the two joins per round
+    compound the logical plan, and Catalyst analysis cost on an iterated
+    cached-join lineage grows super-linearly (measured: round 3 of the
+    uncheckpointed form took 52 s on a 43-node fixture block purely in
+    planning) — the checkpoint truncates lineage every round, so round
+    cost stays flat and total work is rounds x (2 joins + a label-table
+    write).  Labels only decrease and stay within the component's vertex
+    ids, so the fixpoint is the component minimum.  A graph that has not
+    converged after ``_CC_ROUNDS`` rounds raises instead of returning
+    partial labels."""
     edges = edges.cache()
     sym = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
         edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    if dedup_edges:
-        sym = sym.distinct()
-    sym = sym.cache()
-    # first hop folded into the init: cluster0 = min(own id, min neighbor)
-    labels = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.least(F.first("src"), F.min("dst")).alias("cluster"))
-        .cache()
-    )
-    pinned = labels  # the exact cached frame (unpersist matches by plan)
+    ).cache()
     try:
-        for _ in range(max_iters):
-            # smallest label visible over one hop (incl. own)
-            neighbor_min = (
+        labels = (
+            sym.groupBy(F.col("src").alias("id"))
+            .agg(F.least(F.first("src"), F.min("dst")).alias("cluster"))
+        )
+        labels = eager_checkpoint(labels)
+        for _ in range(_CC_ROUNDS):
+            nbr = (
                 sym.join(labels, sym.dst == labels.id)
                 .groupBy("src")
                 .agg(F.min("cluster").alias("nbr_min"))
             )
-            # carry a changed-flag instead of re-joining old vs new labels —
-            # one cached pass serves both the convergence check and next round
-            new_labels = (
-                labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
+            l1 = labels.join(nbr, labels.id == nbr.src, "left").select(
+                "id",
+                F.least(
+                    F.col("cluster"),
+                    F.coalesce(F.col("nbr_min"), F.col("cluster")),
+                ).alias("cluster"),
+            )
+            ptr = l1.select(
+                F.col("id").alias("jid"), F.col("cluster").alias("jc")
+            )
+            prev = labels.select(
+                F.col("id").alias("pid"), F.col("cluster").alias("pc")
+            )
+            stepped = (
+                l1.join(ptr, l1.cluster == ptr.jid, "left")
                 .select(
                     "id",
                     F.least(
-                        F.col("cluster"), F.coalesce(F.col("nbr_min"), F.col("cluster"))
-                    ).alias("new_cluster"),
-                    (F.coalesce(F.col("nbr_min"), F.col("cluster")) < F.col("cluster"))
-                    .alias("changed"),
+                        F.col("cluster"),
+                        F.coalesce(F.col("jc"), F.col("cluster")),
+                    ).alias("cluster"),
                 )
-                .withColumnRenamed("new_cluster", "cluster")
-                .cache()
+                .join(prev, F.col("id") == F.col("pid"))
+                .select(
+                    "id", "cluster", (F.col("cluster") < F.col("pc")).alias("changed")
+                )
             )
-            changed = new_labels.filter("changed").count()
-            pinned.unpersist()
-            pinned = new_labels
-            labels = new_labels.drop("changed")
+            stepped = eager_checkpoint(stepped)
+            changed = stepped.filter("changed").count()
+            labels = stepped.drop("changed")
             if changed == 0:
                 break
-        # one durable materialization of the converged result (reads the
-        # still-cached labels), then the finally releases every cache
-        return eager_checkpoint(
-            labels.select(F.col("id").alias("doc_id"), "cluster")
-        )
+        else:
+            raise RuntimeError(
+                f"connected components did not converge in {_CC_ROUNDS} "
+                f"pointer-doubling rounds ({changed} labels still changing) "
+                f"— graph diameter exceeds 2^{_CC_ROUNDS}; raise _CC_ROUNDS "
+                "rather than accept partial labels"
+            )
+        return labels.select(F.col("id").alias("doc_id"), "cluster")
     finally:
-        pinned.unpersist()
         sym.unpersist()
         edges.unpersist()
 
@@ -1690,89 +1730,6 @@ def q_source_overlap_matrix(spark, sf_dir):
         )
         .orderBy("src_a", "src_b")
     )
-
-
-def connected_components_jump(
-    edges: DataFrame, max_rounds: int = 16
-) -> DataFrame:
-    """Connected components for LARGE-DIAMETER graphs: min-label
-    propagation PLUS pointer doubling (label := label of label) per
-    round, converging in O(log diameter) rounds where plain min-label
-    (``connected_components``) needs O(diameter) — the difference between
-    5 rounds and 60+ iterations on chain-shaped graphs (edit-distance
-    neighborhoods, road-network-like data), while near-clique dup
-    clusters should keep using the plain operator (fewer, cheaper
-    iterations — no second join per round).
-
-    Each round eager-checkpoints the label table: the two joins per round
-    compound the logical plan, and Catalyst analysis cost on an iterated
-    cached-join lineage grows super-linearly (measured: round 3 of the
-    uncheckpointed form took 52 s on a 43-node fixture block purely in
-    planning) — the checkpoint truncates lineage every round, so round
-    cost stays flat and total work is rounds x (2 joins + a label-table
-    write).  Labels only decrease and stay within the component's vertex
-    ids, so the fixpoint is the component minimum — same contract as
-    ``connected_components``.  Input: (id_a, id_b).  Output:
-    (doc_id, cluster)."""
-    edges = edges.cache()
-    sym = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    ).cache()
-    try:
-        labels = (
-            sym.groupBy(F.col("src").alias("id"))
-            .agg(F.least(F.first("src"), F.min("dst")).alias("cluster"))
-        )
-        labels = eager_checkpoint(labels)
-        for _ in range(max_rounds):
-            nbr = (
-                sym.join(labels, sym.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("cluster").alias("nbr_min"))
-            )
-            l1 = labels.join(nbr, labels.id == nbr.src, "left").select(
-                "id",
-                F.least(
-                    F.col("cluster"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster")),
-                ).alias("cluster"),
-            )
-            ptr = l1.select(
-                F.col("id").alias("jid"), F.col("cluster").alias("jc")
-            )
-            prev = labels.select(
-                F.col("id").alias("pid"), F.col("cluster").alias("pc")
-            )
-            stepped = (
-                l1.join(ptr, l1.cluster == ptr.jid, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("cluster"),
-                        F.coalesce(F.col("jc"), F.col("cluster")),
-                    ).alias("cluster"),
-                )
-                .join(prev, F.col("id") == F.col("pid"))
-                .select(
-                    "id", "cluster", (F.col("cluster") < F.col("pc")).alias("changed")
-                )
-            )
-            stepped = eager_checkpoint(stepped)
-            changed = stepped.filter("changed").count()
-            labels = stepped.drop("changed")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components_jump did not converge in "
-                f"{max_rounds} pointer-doubling rounds ({changed} labels "
-                f"still changing) — graph diameter exceeds 2^{max_rounds}; "
-                "raise max_rounds rather than accept partial labels"
-            )
-        return labels.select(F.col("id").alias("doc_id"), "cluster")
-    finally:
-        sym.unpersist()
-        edges.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -36,8 +36,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans._helpers import REACH_CTES, local_df, t
+from ..plans._helpers import REACH_CTES, t
 from ..plans.registry import query
+from .dedup import connected_components
 
 # digit positions (1-indexed within the string) for Customer#ddddddddd,
 # round-robin partitioned into three sets
@@ -304,32 +305,28 @@ def q_entity_resolution(spark, sf_dir):
     (nation — candidate pairs never cross blocks) + position-partitioned
     fuzzy blocking inside the block, (2) MATCH by banded edit distance
     (recall 1.0 by pigeonhole for distance 1), (3) RESOLVE matched pairs
-    into entities by connected components (iterative min-label, the
-    q_dedup_clusters machinery over STRING vertex ids), then (4) roll
-    member accounts up to entity grain — canonical name (component
-    minimum), member count, exact integer-cents balance.
+    into entities by connected components (``dedup.connected_components``
+    over STRING vertex ids), then (4) roll member accounts up to entity
+    grain — canonical name (component minimum), member count, exact
+    integer-cents balance.
 
     The gate checks the COMPOSITION: a blocking bug changes components, a
     CC bug changes canonical labels, a rollup bug changes the census.
     Scale: candidate volume is the blocked join's (never n²), and the
     census shuffles one row per matched member.  Block-restricted here to
     one nation exactly as production ER shards: every block resolves
-    independently and in parallel, which is also why the RESOLVE step
-    auto-routes (``resolve_entities``): within-block edge sets are small
-    by construction, so under the cap the component labels come from a
-    driver-local union-find over the collected block edges (the BPE
-    auto-mode cutover pattern — a bounded collect, exact, microseconds),
-    and only a beyond-cap block pays for the distributed pointer-doubling
-    CC.  Edit-distance graphs CHAIN (…163 - …164 - …165), so the
-    beyond-cap path is ``connected_components_jump`` (O(log diameter)
-    rounds), not the near-clique min-label operator."""
+    independently and in parallel.  A block's edge set is small by
+    construction, so the labels come from driver union-find over one
+    bounded collect; a block over the cap takes the pointer-doubling
+    engine, whose O(log diameter) rounds suit edit-distance graphs, which
+    CHAIN (…163 - …164 - …165)."""
     from ..plans._helpers import dec
 
     c = t(spark, sf_dir, "customer").filter(F.col("c_nationkey") == 3)
     edges = fuzzy_pairs(c, "c_name").select(
         F.col("name_a").alias("id_a"), F.col("name_b").alias("id_b")
     )
-    cc = resolve_entities(spark, edges)
+    cc = connected_components(edges)
     members = c.select(
         "c_name", (dec("c_acctbal") * 100).cast("bigint").alias("cents")
     )
@@ -342,52 +339,3 @@ def q_entity_resolution(spark, sf_dir):
         )
         .orderBy("canonical_name")
     )
-
-
-_ER_LOCAL_CAP = 100_000  # block edge count below which union-find runs local
-
-
-def resolve_entities(spark, edges: DataFrame, cap: int = _ER_LOCAL_CAP) -> DataFrame:
-    """(doc_id, cluster) component labels for a BLOCK's edge set, with the
-    production cutover: a block whose edge count fits under ``cap`` is
-    resolved by driver-local union-find over the collected edges (bounded
-    payload — blocking exists precisely to make this small; exact, and
-    three orders of magnitude cheaper than iterative joins at this size),
-    while a beyond-cap block routes to the distributed pointer-doubling
-    ``connected_components_jump`` (edit-distance graphs chain, so the
-    O(diameter) min-label operator is the wrong fallback).  Both paths
-    produce identical labels (component minimum) — equality is pinned by
-    tests/test_entity_resolution.py."""
-    from ..plans._helpers import eager_checkpoint
-    from .dedup import connected_components_jump
-
-    # Routing (count) and resolution (collect / distributed CC) are two
-    # actions on the same lineage: materialize the blocked fuzzy-pair join
-    # once so the expensive edge computation doesn't execute per action.
-    edges = eager_checkpoint(edges)
-    if edges.count() > cap:
-        return connected_components_jump(edges)
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    pairs = edges.collect()
-    for r in pairs:
-        a, b = r["id_a"], r["id_b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for v in parent:
-        r = find(v)
-        m = comp_min.get(r)
-        if m is None or v < m:
-            comp_min[r] = v
-    rows = [(v, comp_min[find(v)]) for v in sorted(parent)]
-    return local_df(spark, rows, "doc_id string, cluster string")

@@ -500,7 +500,7 @@ def kcore_trajectory(
 
     Early-stop protocol: each round's census is ONE aggregate row read by
     the driver (the sanctioned scalar-convergence-read shape, cf.
-    connected_components_jump's changed-count); the edge set shrinks
+    dedup._cc_pointer_doubling's changed-count); the edge set shrinks
     monotonically, so an unchanged census IS the fixpoint and the loop
     stops there — trailing rounds up to the fixed unroll are identical
     copies by definition, emitted without re-executing the peel (measured

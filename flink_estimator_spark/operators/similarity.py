@@ -1248,7 +1248,7 @@ def kmeans_iterate(
     iters: int = 3,
 ) -> tuple[DataFrame, list[int]]:
     """Lloyd's k-means as a distributed DataFrame loop — the iterative-
-    algorithm pattern (cf. ``dedup.connected_components``): per iteration
+    algorithm pattern (cf. ``dedup._cc_pointer_doubling``): per iteration
     one broadcast join (centroids are dim x k rows), map-side partial
     distance sums, a (vec, cluster) shuffle, an argmin window, and a
     centroid re-aggregate.  The driver sees only a per-iteration inertia

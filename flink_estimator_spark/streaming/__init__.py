@@ -1,4 +1,4 @@
-from .sources import documents_stream, events_stream, rate_stream  # noqa: F401
+from .sources import documents_stream, events_stream  # noqa: F401
 from .windows import cumulate_agg, hop_agg, multistage_agg, session_agg, session_agg_dynamic, tumble_agg, tumble_distinct_users  # noqa: F401
 from .dedup import dedup_within_watermark, screen_against_ledger, screen_docs_against_corpus  # noqa: F401
 from .sketches import windowed_cms_cells  # noqa: F401

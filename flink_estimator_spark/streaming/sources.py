@@ -1,8 +1,8 @@
 """Streaming sources.
 
 Production posture is Kafka; for local verification the same event schema is
-served from parquet files via ``readStream`` (micro-batched identically) or
-the synthetic ``rate`` source.  Everything downstream is source-agnostic.
+served from parquet files via ``readStream`` (micro-batched identically).
+Everything downstream is source-agnostic.
 """
 
 from __future__ import annotations
@@ -55,22 +55,3 @@ def documents_stream(spark: SparkSession, directory: str) -> DataFrame:
         .parquet(directory)
     )
 
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Synthetic rate source shaped like the events table (for soak tests)."""
-    r = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return r.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 1000).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click"), F.lit("signup"), F.lit("purchase"), F.lit("error")),
-            (F.col("value") % 5 + 1).cast("int"),
-        ).alias("event_type"),
-        (F.col("value") % 100).cast("double").alias("value"),
-        F.to_json(F.struct((F.col("value") % 100).alias("k"))).alias("props"),
-    )

@@ -152,6 +152,24 @@ def ensure_typed_state_runtime(spark) -> bool:
     return True
 
 
+def _typed_state_session(events: DataFrame, fallback: str) -> None:
+    """Ready ``events``' session for ``transformWithStateInPandas``: the
+    typed-state runtime must be locatable (else ImportError naming the
+    dependency-free ``fallback``), and the state store is RocksDB — the
+    HDFS-backed default store does not implement the API."""
+    spark = events.sparkSession
+    if not ensure_typed_state_runtime(spark):
+        raise ImportError(
+            "transformWithStateInPandas requires the protobuf package "
+            "(state-server protocol) and none could be located; use "
+            f"{fallback} for the dependency-free variant"
+        )
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -203,15 +221,8 @@ def running_totals(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     provider the reference's state-size model assumes for large key spaces);
     the HDFS-backed default store does not implement the new API.
     """
-    if not ensure_typed_state_runtime(events.sparkSession):
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(state-server protocol) and none could be located; use the "
-            "applyInPandasWithState operators in streaming/cep.py"
-        )
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    _typed_state_session(
+        events, "the applyInPandasWithState operators in streaming/cep.py"
     )
     return (
         events.withWatermark("ts", watermark)
@@ -394,21 +405,11 @@ def sequence_matches_tws(
     protobuf (state-server protocol) and the RocksDB state store, like
     :func:`running_totals`; the applyInPandasWithState variant remains the
     dependency-free path and its tests are the semantic contract."""
-    if not ensure_typed_state_runtime(events.sparkSession):
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(state-server protocol) and none could be located; use "
-            "streaming/cep.py sequence_matches for the dependency-free "
-            "variant"
-        )
+    _typed_state_session(events, "streaming/cep.py sequence_matches")
     k = len(steps)
     out_fields = [T.StructField("user_id", T.LongType())]
     out_fields += [T.StructField(f"t{i}_us", T.LongType()) for i in range(k)]
     out_fields.append(T.StructField("span_s", T.LongType()))
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     return (
         # prune to the processor's working set before the keyed exchange:
         # everything selected here is shuffled AND Arrow-shipped to the
@@ -557,16 +558,7 @@ def window_topn_tws(
     timeout channel.  Requires protobuf (state-server protocol) and the
     RocksDB state store, like :func:`running_totals`; the legacy gate
     query ``q_stream_topn_runtime`` remains the dependency-free shadow."""
-    if not ensure_typed_state_runtime(events.sparkSession):
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(state-server protocol) and none could be located; use "
-            "streaming/topn.py window_topn for the dependency-free variant"
-        )
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _typed_state_session(events, "streaming/topn.py window_topn")
     win_start = (F.floor(F.unix_timestamp("ts") / window_s) * window_s).cast(
         "long"
     )
@@ -648,16 +640,7 @@ def ttl_dedup_tws(
     protobuf (state-server protocol) and the RocksDB state store like
     :func:`running_totals`; ``streaming.dedup.dedup_within_watermark``
     is the dependency-free event-time shadow."""
-    if not ensure_typed_state_runtime(events.sparkSession):
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(state-server protocol) and none could be located; use "
-            "streaming/dedup.py dedup_within_watermark instead"
-        )
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _typed_state_session(events, "streaming/dedup.py dedup_within_watermark")
     out_schema = T.StructType([events.schema[k] for k in keys])
     # only key PRESENCE matters to the processor — prune to the key
     # columns so the exchange and per-key Arrow batches carry nothing else

@@ -21,7 +21,8 @@ from tests.conftest import SF_SMALL
 
 # The builders that historically pinned: every operator family that
 # materializes an internal stage (shingle tables, CC/k-means/BPE loops,
-# fingerprint tables, graph edge tables, certificate sides).
+# fingerprint tables, graph edge tables, certificate sides).  The over-cap
+# connected-components engine has its own test below.
 HEAVY = [
     "q_dedup_jaccard_pairs",
     "q_dedup_clusters",
@@ -43,6 +44,20 @@ def test_no_persistent_rdds_after_builder(spark, name):
     df.count()  # run to completion, like the driver gate does
     leaked = dict(spark.sparkContext._jsc.getPersistentRDDs())
     assert not leaked, f"{name} left {len(leaked)} pinned RDD(s): {leaked}"
+
+
+def test_no_persistent_rdds_after_over_cap_cc(spark):
+    """``q_dedup_clusters`` resolves its fixture graph on the driver, so
+    the builders above no longer run the over-cap connected-components
+    engine, whose loop caches the edges and their symmetrized copy."""
+    from flink_estimator_spark.operators.dedup import _cc_pointer_doubling
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21)], "id_a bigint, id_b bigint"
+    )
+    assert _cc_pointer_doubling(edges).count() == 12
+    leaked = dict(spark.sparkContext._jsc.getPersistentRDDs())
+    assert not leaked, f"over-cap CC left {len(leaked)} pinned RDD(s): {leaked}"
 
 
 def test_checkpoint_prune_keys_on_newest_mtime_in_subtree(tmp_path, monkeypatch):
